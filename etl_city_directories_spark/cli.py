@@ -33,6 +33,14 @@ entry-parsed OCR lines as NDJSON; ``geocode`` emits per-location
 geocode results; ``transform`` emits ``objects`` / ``relations`` /
 ``logs`` NDJSON (:443-450).
 
+Every NDJSON output directory also holds a ``_schema`` file: the
+written frame's schema as JSON (``sources.ndjson``). The next step reads
+with it, so no step infers a schema, and a column that is null in every
+row (or every column of an empty output) survives into the next step.
+Each step returns the row count of its main output — ``status`` for
+download, ``lines`` for parse, ``geocoded`` for geocode, ``objects``
+for transform — counted by the write's own job, not by re-reading.
+
 Scale shape: every step is the same declarative plan the operator
 surface uses — archive decode is one task per archive, the entry
 parser is pure JVM expressions, the address dims broadcast, and all
@@ -57,6 +65,7 @@ from etl_city_directories_spark.sources.hocr import (
     parse_hocr_lines,
     read_hocr_pages,
 )
+from etl_city_directories_spark.sources.local import local_frame
 from etl_city_directories_spark.sources.manifest import read_manifest
 from etl_city_directories_spark.sources.ndjson import read_ndjson, write_ndjson
 
@@ -102,7 +111,7 @@ def step_download(spark: SparkSession, cfg: dict, work: str) -> int:
         # contract still applies — every manifest row gets an empty
         # {uuid}.xml and the run continues (:91-97), so an empty
         # archives frame feeds the left join instead of aborting
-        archives = spark.createDataFrame([], "uuid string, content binary")
+        archives = local_frame(spark, [], "uuid string, content binary")
 
     def _fetch(batches):
         for pdf in batches:
@@ -130,8 +139,7 @@ def step_download(spark: SparkSession, cfg: dict, work: str) -> int:
     # by uuid so status.ndjson and the download count stay retry-safe
     # (all rows for a uuid are identical, so any survivor is correct).
     status = status.dropDuplicates(["uuid"])
-    write_ndjson(status, os.path.join(out, "status.ndjson"))
-    return read_ndjson(spark, os.path.join(out, "status.ndjson")).count()
+    return write_ndjson(status, os.path.join(out, "status.ndjson"))
 
 
 def step_parse(spark: SparkSession, cfg: dict, work: str) -> int:
@@ -180,8 +188,7 @@ def step_parse(spark: SparkSession, cfg: dict, work: str) -> int:
         )
     )
     entries = parse_entries_real(windowed)
-    write_ndjson(entries, os.path.join(out, "lines.ndjson"))
-    return read_ndjson(spark, os.path.join(out, "lines.ndjson")).count()
+    return write_ndjson(entries, os.path.join(out, "lines.ndjson"))
 
 
 def step_geocode(spark: SparkSession, cfg: dict, work: str) -> int:
@@ -207,8 +214,7 @@ def step_geocode(spark: SparkSession, cfg: dict, work: str) -> int:
         F.col("loc.loc_type").alias("loc_type"),
     )
     geo = geocode_locations(spark, locs, dim=dim)
-    write_ndjson(geo, os.path.join(out, "geocoded.ndjson"))
-    return read_ndjson(spark, os.path.join(out, "geocoded.ndjson")).count()
+    return write_ndjson(geo, os.path.join(out, "geocoded.ndjson"))
 
 
 def step_transform(spark: SparkSession, cfg: dict, work: str) -> int:
@@ -328,10 +334,10 @@ def step_transform(spark: SparkSession, cfg: dict, work: str) -> int:
             F.lit("geocode miss").alias("error"),
         )
     )
-    write_ndjson(objects, os.path.join(out, "objects.ndjson"))
+    n_objects = write_ndjson(objects, os.path.join(out, "objects.ndjson"))
     write_ndjson(relations, os.path.join(out, "relations.ndjson"))
     write_ndjson(logs, os.path.join(out, "logs.ndjson"))
-    return read_ndjson(spark, os.path.join(out, "objects.ndjson")).count()
+    return n_objects
 
 
 _RUNNERS = {

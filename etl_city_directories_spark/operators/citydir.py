@@ -35,6 +35,7 @@ from etl_city_directories_spark.functions.memo import (
     rolling_persist,
     table_stamp,
 )
+from etl_city_directories_spark.sources.local import local_frame
 from etl_city_directories_spark.sources.tables import load_table
 
 NAMES = (
@@ -495,8 +496,10 @@ def addresses_dim(spark: SparkSession) -> DataFrame:
 
 
 def _addresses_build(spark: SparkSession) -> DataFrame:
-    streets = spark.createDataFrame(
-        [(i + 1, s) for i, s in enumerate(STREETS)], ["street_idx", "street_name"]
+    streets = local_frame(
+        spark,
+        [(i + 1, s) for i, s in enumerate(STREETS)],
+        "street_idx long, street_name string",
     )
     return (
         streets.select(
@@ -613,8 +616,17 @@ def _canon_subject_sql(expr: str) -> str:
 def streets_dim(spark: SparkSession) -> DataFrame:
     """Street-level rows of the address dim — the corner/street-only
     fallback target (a corner form geocodes to the street, not to a
-    house-level address)."""
-    return addresses_dim(spark).select("street_name", "street_id").distinct()
+    house-level address). Every street has houses in the address dim,
+    so these are its distinct (street_name, street_id) pairs."""
+    return plan_memo(
+        spark,
+        ("cd_streets_plan",),
+        lambda: local_frame(
+            spark,
+            [(s, f"S{i + 1}") for i, s in enumerate(STREETS)],
+            "street_name string, street_id string",
+        ),
+    )
 
 
 def geocode_locations(

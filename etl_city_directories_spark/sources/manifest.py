@@ -8,7 +8,8 @@ int or ``1850/51`` → [1850, 1851]; drop rows missing any required field.
 The manifest is a few hundred rows — a driver-side parse into a
 DataFrame is the correct distribution strategy (it's the broadcast dim
 of every downstream join; shipping an HTML parser to executors for 2 KB
-of input would be cargo-cult parallelism).
+of input would be cargo-cult parallelism). The rows become a JVM-local
+relation (``sources.local``), so scanning them starts no Python worker.
 """
 
 from __future__ import annotations
@@ -22,6 +23,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from etl_city_directories_spark.sources.local import local_frame
 
 MANIFEST_SCHEMA = StructType(
     [
@@ -113,7 +116,8 @@ def parse_manifest_html(html: str) -> list[dict]:
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
     with open(path, encoding="utf-8") as f:
         rows = parse_manifest_html(f.read())
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(r[f.name] for f in MANIFEST_SCHEMA.fields) for r in rows],
         MANIFEST_SCHEMA,
     )

@@ -8,8 +8,16 @@ import shutil
 
 import pytest
 
+from etl_city_directories_spark import cli
 from etl_city_directories_spark.cli import STEPS, run
 from etl_city_directories_spark.operators.ingest import FIXTURES, fixture_archive
+
+
+def _write_config(tmp_path, **cfg):
+    cfg_path = os.path.join(tmp_path, "config.json")
+    with open(cfg_path, "w", encoding="utf-8") as f:
+        json.dump(cfg, f)
+    return cfg_path
 
 
 def _read_ndjson_dir(path):
@@ -208,3 +216,106 @@ def test_geocode_custom_addresses(spark, tmp_path):
     hits = [g for g in geo if g["found"]]
     assert hits and all(g["loc_norm"].lower() == "88 water" for g in hits)
     assert any(not g["found"] for g in geo)
+
+
+def test_step_counts_match_written_lines(cli_work):
+    """Each step returns the row count of its main output, taken from
+    the write itself: it must equal the NDJSON lines in the part files
+    (for download, the status rows after dropDuplicates)."""
+    work, counts = cli_work
+    outputs = {
+        "download": "status.ndjson",
+        "parse": "lines.ndjson",
+        "geocode": "geocoded.ndjson",
+        "transform": "objects.ndjson",
+    }
+    for step, name in outputs.items():
+        rows = _read_ndjson_dir(os.path.join(work, step, name))
+        assert counts[step] == len(rows), (step, counts[step], len(rows))
+    status = _read_ndjson_dir(os.path.join(work, "download", "status.ndjson"))
+    assert len({s["uuid"] for s in status}) == len(status)
+
+
+def test_manifest_with_no_valid_directory(spark, tmp_path):
+    """A manifest none of whose rows has every required field writes an
+    empty manifest.ndjson. Spark's JSON writer leaves no field behind
+    for it, so a re-inferred schema had no columns and parse failed on
+    the maxYear filter's `year_end`; the stored schema keeps them."""
+    data = str(tmp_path / "d_nodir")
+    os.makedirs(data)
+    shutil.copy(fixture_archive(), data)
+    with open(os.path.join(FIXTURES, "manifest.html"), encoding="utf-8") as f:
+        html = f.read()
+    # blank every columnCount cell: the reference drops such rows (:130)
+    for cc in ("2", "3", "4"):
+        html = html.replace(f"<td>{cc}</td></tr>", "<td></td></tr>")
+    manifest = str(tmp_path / "manifest.html")
+    with open(manifest, "w", encoding="utf-8") as f:
+        f.write(html)
+    cfg_path = _write_config(tmp_path, tableUrl=manifest, dataUrl=data, maxYear=1890)
+    counts = run(cfg_path, str(tmp_path / "w_nodir"), ["download", "parse"], spark=spark)
+    assert counts == {"download": 0, "parse": 0}
+
+
+def test_geocode_with_no_hits(spark, tmp_path):
+    """An address dataset that matches no location leaves `address_id`
+    null in every geocoded row. The JSON writer drops it, so transform's
+    join on it failed to resolve; with the stored schema all four steps
+    complete, with no relations and one log row per location."""
+    data = str(tmp_path / "d_nohit")
+    os.makedirs(data)
+    shutil.copy(fixture_archive(), data)
+    dim_path = str(tmp_path / "addresses.parquet")
+    spark.createDataFrame(
+        [(1, "1 Nowhere", "Nowhere", "S1", 1.0, 1.0)],
+        "address_id long, address_name string, street_name string,"
+        " street_id string, geom_x double, geom_y double",
+    ).write.parquet(dim_path)
+    cfg_path = _write_config(
+        tmp_path,
+        tableUrl=os.path.join(FIXTURES, "manifest.html"),
+        dataUrl=data,
+        addresses=dim_path,
+    )
+    work = str(tmp_path / "w_nohit")
+    counts = run(cfg_path, work, spark=spark)
+    assert list(counts) == list(STEPS) and counts["geocode"] > 0
+    geo = _read_ndjson_dir(os.path.join(work, "geocode", "geocoded.ndjson"))
+    assert not any(g["found"] for g in geo)
+    out = os.path.join(work, "transform")
+    assert _read_ndjson_dir(os.path.join(out, "relations.ndjson")) == []
+    assert len(_read_ndjson_dir(os.path.join(out, "logs.ndjson"))) == counts["geocode"]
+    assert len(_read_ndjson_dir(os.path.join(out, "objects.ndjson"))) == counts["transform"]
+
+
+# Spark jobs per step on the fixture run: one write job per output plus
+# the broadcasts and shuffle stages their plans need. A re-read to count
+# rows or a schema-inference pass adds jobs and trips this budget.
+STEP_JOB_BUDGET = {"download": 4, "parse": 3, "geocode": 3, "transform": 9}
+
+
+def _newest_job_id(sc) -> int:
+    sc.listenerBus().waitUntilEmpty()  # every submitted job is in the store
+    jobs = sc.statusStore().jobsList(None)  # sorted by job id, newest first
+    return -1 if jobs.isEmpty() else max(jobs.head().jobId(), jobs.last().jobId())
+
+
+def test_step_job_budget(spark, tmp_path):
+    data = str(tmp_path / "d_budget")
+    os.makedirs(data)
+    shutil.copy(fixture_archive(), data)
+    cfg = {
+        "tableUrl": os.path.join(FIXTURES, "manifest.html"),
+        "dataUrl": data,
+        "minYear": 1850,
+        "maxYear": 1890,
+    }
+    work = str(tmp_path / "w_budget")
+    sc = spark.sparkContext._jsc.sc()
+    jobs = {}
+    for step in STEPS:
+        before = _newest_job_id(sc)
+        getattr(cli, f"step_{step}")(spark, cfg, work)
+        jobs[step] = _newest_job_id(sc) - before
+    over = {s: n for s, n in jobs.items() if n > STEP_JOB_BUDGET[s]}
+    assert not over, f"jobs {jobs} over budget {STEP_JOB_BUDGET}"

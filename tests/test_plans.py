@@ -76,6 +76,24 @@ def test_jvm_operators_have_no_python_eval(spark):
             assert marker not in plan, f"{name} plan contains {marker}"
 
 
+def test_citydir_dims_scan_no_python_rdd(spark):
+    """The built-in address dims are JVM-local relations: a dim built
+    with createDataFrame(<python list>) scans a pickled Python RDD
+    (`Scan ExistingRDD`), which starts Python-worker tasks even though
+    no Python code runs."""
+    from etl_city_directories_spark.operators.citydir import (
+        addresses_dim,
+        streets_dim,
+    )
+
+    frames = {"addresses_dim": addresses_dim(spark), "streets_dim": streets_dim(spark)}
+    for name in ("cd_geocode", "cd_transform_objects", "cd_relations", "cd_logs"):
+        frames[name] = QUERIES[name](spark, SF)
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Scan ExistingRDD" not in plan, f"{name} scans a Python RDD"
+
+
 def test_q1_uses_wholestage_codegen(spark):
     df = QUERIES["q1_pricing_summary"](spark, SF)
     df.collect()  # AQE finalizes the plan only after execution

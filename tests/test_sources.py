@@ -110,6 +110,31 @@ def test_ndjson_roundtrip(spark, tmp_path):
     assert first.startswith("{") and first.endswith("}")
 
 
+def test_ndjson_roundtrip_keeps_schema(spark, tmp_path):
+    """write_ndjson stores the frame's schema beside the part files and
+    read_ndjson reads with it: types survive (an int stays int rather
+    than being inferred as bigint), field order is kept, and a column
+    that is null in every row (the JSON writer omits it) comes back."""
+    df = spark.createDataFrame(
+        [(1, "a", None, [1.5]), (2, None, None, []), (3, "c", None, None)],
+        "n int, s string, gone long, xs array<double>",
+    )
+    path = str(tmp_path / "typed")
+    assert write_ndjson(df, path) == 3
+    assert "_schema" in os.listdir(path)
+    back = read_ndjson(spark, path)
+    assert back.schema == df.schema
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
+def test_ndjson_empty_output_keeps_schema(spark, tmp_path):
+    df = spark.range(10).filter("id > 100").selectExpr("cast(id as int) AS n")
+    path = str(tmp_path / "empty")
+    assert write_ndjson(df, path) == 0
+    back = read_ndjson(spark, path)
+    assert back.columns == ["n"] and back.count() == 0
+
+
 def test_partitioned_sink_prunes_partitions(spark, tmp_path):
     """Filtered read-back of the partitioned sink must scan only the
     matching partition directories (PartitionFilters on lang)."""
