@@ -4,10 +4,12 @@ ONE JSON line with total + per-query wall seconds.
 
 Each query is forced to full execution with collect() — that's what
 the driver does, so that's what we time. Every query runs
-$SPARK_GRAFT_BENCH_RUNS times (default 2) with the cache cleared
-before each attempt; per-query time is the best attempt (standard
+$SPARK_GRAFT_BENCH_RUNS times (default 2), each attempt cold: the
+Spark cache and every process memo (``functions.memo.reset()``) are
+cleared before it. Per-query time is the best attempt (standard
 best-of-N to suppress GC/scheduler noise) and the headline value is
-the sum of per-query bests.
+the sum of per-query bests. A failed query is timed -1.0, left out of
+the total, listed under ``failed``, and makes the exit status 1.
 """
 
 from __future__ import annotations
@@ -20,37 +22,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
+from etl_city_directories_spark.functions import memo
 from etl_city_directories_spark.session import get_spark
-
-
-def _drop_process_memos() -> None:
-    """SPARK_GRAFT_BENCH_COLD=1: forget within-process materialized
-    state between attempts so best-of-N never times a warm reuse.
-
-    Two stores survive ``spark.catalog.clearCache()`` (VERDICT r10
-    "What's wrong" #2): ``functions.memo._MEMO`` pins index artifacts
-    as localCheckpoint blocks, and ``operators.ingest._SINK_CACHE``
-    reuses written sink/fixture dirs per data stamp. Both are disclosed,
-    within-process-only reuse — but they make attempt 2 of best-of-N
-    partially warm for ~a dozen keys. This hook (OFF by default, so the
-    driver's bench methodology is unchanged) unpersists the checkpoint
-    blocks and deletes+forgets the sink dirs before every attempt;
-    tools/simlogs/r11_bench_cold_probe.* quantifies the per-key delta.
-    """
-    import shutil
-
-    from etl_city_directories_spark.functions import memo as _memo
-    from etl_city_directories_spark.operators import ingest as _ingest
-
-    for df in list(_memo._MEMO.values()):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _memo._MEMO.clear()
-    for path in list(_ingest._SINK_CACHE.values()):
-        shutil.rmtree(path, ignore_errors=True)
-    _ingest._SINK_CACHE.clear()
 
 
 def main() -> None:
@@ -78,7 +51,6 @@ def main() -> None:
         jvm_gc = lambda: None  # noqa: E731
     # Optional subset for smoke runs: comma-separated queries() keys.
     only = os.environ.get("SPARK_GRAFT_BENCH_KEYS", "")
-    cold = os.environ.get("SPARK_GRAFT_BENCH_COLD", "") == "1"
     timings: dict[str, float] = {}
     # warm the JVM + parquet footer cache once, outside timed region
     entry_mod.entry(spark).collect()
@@ -94,11 +66,11 @@ def main() -> None:
         best = None
         attempts[name] = []
         for _ in range(runs):
-            # each attempt pays its own persist cost; no cross-query
-            # cache subsidies
+            # every attempt is cold: it pays its own persists, index
+            # builds and sink writes, with nothing carried over from an
+            # earlier attempt or key
             spark.catalog.clearCache()
-            if cold:
-                _drop_process_memos()
+            memo.reset()
             t0 = time.perf_counter()
             try:
                 queries[name](spark, sf_dir).collect()
@@ -111,6 +83,7 @@ def main() -> None:
                 break
         timings[name] = round(best, 3)
     total = round(sum(t for t in timings.values() if t > 0), 3)
+    failed = sorted(k for k, t in timings.items() if t < 0)
 
     # Sidecar with EVERY attempt (the JSON line keeps only best-of-N):
     # the per-key attempt spread is the contention fingerprint that
@@ -151,10 +124,14 @@ def main() -> None:
                 "n_queries": len(timings),
                 "tail_total": total,
                 "tail_sf": sf_val,
+                "n_failed": len(failed),
+                "failed": failed,
             }
         )
     )
     spark.stop()
+    if failed:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

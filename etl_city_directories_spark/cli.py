@@ -52,6 +52,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,6 +63,7 @@ from etl_city_directories_spark.operators.citydir import (
     parse_entries_real,
 )
 from etl_city_directories_spark.sources.hocr import (
+    PAGE_SCHEMA,
     parse_hocr_lines,
     read_hocr_pages,
 )
@@ -162,18 +164,17 @@ def step_parse(spark: SparkSession, cfg: dict, work: str) -> int:
         if os.path.exists(p):
             by_count.setdefault(int(r["column_count"] or 2), []).append(p)
 
-    parsed: DataFrame | None = None
-    for cc, paths in sorted(by_count.items()):
-        pages = read_hocr_pages(spark, paths)
-        lines = parse_hocr_lines(pages, column_count=cc)
-        part = lines.withColumn(
-            "uuid",
-            F.regexp_extract(F.col("archive"), r"([0-9a-f-]+)\.tar\.gz$", 1),
-        )
-        parsed = part if parsed is None else parsed.unionByName(part)
-    if parsed is None:
-        return 0
-
+    # an empty window still writes an empty, schema-carrying output for
+    # the later steps to read
+    page_sets = [
+        (read_hocr_pages(spark, paths), cc) for cc, paths in sorted(by_count.items())
+    ] or [(local_frame(spark, [], PAGE_SCHEMA), 2)]
+    parsed = reduce(
+        DataFrame.unionByName,
+        (parse_hocr_lines(pages, column_count=cc) for pages, cc in page_sets),
+    ).withColumn(
+        "uuid", F.regexp_extract(F.col("archive"), r"([0-9a-f-]+)\.tar\.gz$", 1)
+    )
     windowed = (
         parsed.join(
             F.broadcast(

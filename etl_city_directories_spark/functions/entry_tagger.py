@@ -34,6 +34,7 @@ vectorized pass with zero per-row Python round-trips to the driver.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
 from collections import defaultdict
@@ -359,19 +360,14 @@ def train_crf(
     return {lab: dict(v) for lab, v in w.items()}
 
 
-_MODEL: dict[str, dict[str, float]] | None = None
-
-
+@functools.cache
 def model() -> dict[str, dict[str, float]]:
     """The default model — a linear-chain CRF trained once per process
     on the synthetic labeled corpus (deterministic — identical
     everywhere). The decode contract (``tag`` = exact Viterbi) and the
     weight shape are unchanged from the perceptron era, so broadcast
     call sites need no knowledge of which trainer produced the model."""
-    global _MODEL
-    if _MODEL is None:
-        _MODEL = train_crf(synth_training_corpus())
-    return _MODEL
+    return train_crf(synth_training_corpus())
 
 
 def tag(toks: list[str], weights: dict[str, dict[str, float]]) -> list[str]:

@@ -6,7 +6,6 @@ fixtures (tests/test_sources.py) and the driver's rows-only check.
 
 from __future__ import annotations
 
-import atexit
 import gzip
 import io
 import os
@@ -18,6 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_city_directories_spark.functions.memo import cached_sink_dir
 from etl_city_directories_spark.sources.hocr import parse_hocr_lines, read_hocr_pages
 from etl_city_directories_spark.sources.manifest import read_manifest
 from etl_city_directories_spark.sources.ndjson import read_ndjson, write_ndjson
@@ -50,41 +50,6 @@ def fixture_archive() -> str:
             f.write(gzip.compress(buf.getvalue()))
         os.replace(tmp, out)
     return out
-
-
-_SINK_CACHE: dict[tuple, str] = {}
-
-
-def cached_sink_dir(
-    kind: str, sf_dir: str, tables: tuple[str, ...], write: Callable[[str], None]
-) -> str:
-    """Write a derived sink once per (kind, sf_dir, source-data stamp)
-    and reuse the directory for the rest of the process.
-
-    The sink round-trip operators prove a write path; re-materializing
-    the identical files on every invocation was pure filesystem churn
-    (r02 bench: csv_roundtrip 3.2×, sink_partitioned 2.4× vs r01 after
-    unique-per-run dirs landed). The cache key stamps each source
-    parquet's (mtime, size) so a testdata regeneration invalidates;
-    dirs are unique per process (concurrent runs can't clobber) and
-    removed at interpreter exit.
-    """
-    stamps = []
-    for t in tables:
-        try:
-            st = os.stat(f"{sf_dir}/{t}.parquet")
-            stamps.append((t, st.st_mtime_ns, st.st_size))
-        except OSError:
-            stamps.append((t, 0, 0))
-    key = (kind, sf_dir, tuple(stamps))
-    path = _SINK_CACHE.get(key)
-    if path is not None and os.path.isdir(path):
-        return path
-    path = tempfile.mkdtemp(prefix=f"spark_graft_{kind}_")
-    write(path)
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    _SINK_CACHE[key] = path
-    return path
 
 
 def localize_result(df: DataFrame) -> DataFrame:

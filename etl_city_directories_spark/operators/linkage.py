@@ -43,18 +43,15 @@ MAX_EDIT = 2  # match threshold (unit-cost Levenshtein)
 N_NATIONS = 25  # nation dimension cardinality (TPC-H constant)
 TARGET_BLOCK_POP = 25  # expected rows per (nation, suffix) block
 
-_COUNT_CACHE: dict[tuple, int] = {}
-
-
 def _customer_count(spark: SparkSession, sf_dir: str) -> int:
     """One cached 1-row count per (corpus, stamp) — both data-scaled
     knobs (suffix width, audit modulus) derive from it."""
-    from etl_city_directories_spark.functions.memo import table_stamp
+    from etl_city_directories_spark.functions.memo import cached, table_stamp
 
-    key = (sf_dir, table_stamp(sf_dir, ("customer",)))
-    if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = load_table(spark, sf_dir, "customer").count()
-    return _COUNT_CACHE[key]
+    return cached(
+        ("customer_count", sf_dir, table_stamp(sf_dir, ("customer",))),
+        lambda: load_table(spark, sf_dir, "customer").count(),
+    )
 
 
 def block_width(spark: SparkSession, sf_dir: str) -> int:

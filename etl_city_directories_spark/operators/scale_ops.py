@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_city_directories_spark.functions.memo import rolling_persist
+from etl_city_directories_spark.functions.memo import cached_sink_dir, rolling_persist
 from etl_city_directories_spark.functions.numeric import dec2, money_sum
 from etl_city_directories_spark.sources.tables import (
     load_table,
@@ -331,9 +331,8 @@ def q_dpp_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     stamp) and reused — the partitioned LAYOUT is the precondition the
     demo queries against, exactly like the bucketed tables: pay the
     layout write once, amortize it over every pruned read
-    (ingest.cached_sink_dir; a testdata regeneration re-writes).
+    (memo.cached_sink_dir; a testdata regeneration re-writes).
     """
-    from etl_city_directories_spark.operators.ingest import cached_sink_dir
 
     def _write(p: str) -> None:
         (
@@ -643,7 +642,6 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reused — re-materializing identical files per invocation was the
     r02 3.2× bench regression.
     """
-    from etl_city_directories_spark.operators.ingest import cached_sink_dir
 
     def _write(p: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
@@ -685,7 +683,6 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra scan at 100 TB), aggregate per lang. JSON string escaping
     (quotes, control chars, non-ASCII) must roundtrip losslessly —
     the oracle aggregates the original parquet, proving it."""
-    from etl_city_directories_spark.operators.ingest import cached_sink_dir
 
     def _write(p: str) -> None:
         load_table(spark, sf_dir, "documents").write.mode("overwrite").json(p)
@@ -701,7 +698,6 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read, same lossless-rollup proof as the CSV/JSON paths; predicate
     pushdown and column pruning work on ORC scans exactly as on
     parquet."""
-    from etl_city_directories_spark.operators.ingest import cached_sink_dir
 
     def _write(p: str) -> None:
         load_table(spark, sf_dir, "documents").write.mode("overwrite").orc(p)
@@ -755,7 +751,6 @@ def q_bucketed_join(
     semantics, not a shortcut (r02 bench paid 3.1 s/run re-bucketing
     identical data).
     """
-    from etl_city_directories_spark.operators.ingest import cached_sink_dir
 
     def _write(p: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
@@ -2068,7 +2063,6 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     free text must roundtrip losslessly — the oracle aggregates the
     original parquet, proving it, same contract as the CSV/JSON/ORC
     roundtrips."""
-    from etl_city_directories_spark.operators.ingest import cached_sink_dir
 
     def _write(p: str) -> None:
         load_table(spark, sf_dir, "documents").write.format("xml").option(
@@ -2522,7 +2516,6 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     same single parquet scan — mergeSchema unions footers at planning
     time, not data.
     """
-    from etl_city_directories_spark.operators.ingest import cached_sink_dir
 
     def _write(p: str) -> None:
         docs = load_table(spark, sf_dir, "documents")

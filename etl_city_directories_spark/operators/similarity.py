@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_city_directories_spark.functions.memo import (
+    cached,
     memo_df,
     rolling_persist,
     table_stamp,
@@ -1553,7 +1554,6 @@ ORACLES["ann_ivf_pq"] = _pq_oracle(ivf=True)
 # ---------------------------------------------------------------------------
 
 PCA_ITERS = 3
-_PCA_CACHE: dict[tuple, tuple] = {}
 
 
 def _pca_dec(c: Column) -> Column:
@@ -1575,10 +1575,13 @@ def _pca_model(spark: SparkSession, sf_dir: str):
     enters the chain. Returns (n, S, cmat, b_final, n2_final)
     with b in micro-units."""
     stamp = table_stamp(sf_dir, ("embeddings",))
-    key = (spark.sparkContext.applicationId, "pca", sf_dir, stamp)
-    hit = _PCA_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return cached(
+        (spark.sparkContext.applicationId, "pca", sf_dir, stamp),
+        lambda: _pca_build(spark, sf_dir, stamp),
+    )
+
+
+def _pca_build(spark: SparkSession, sf_dir: str, stamp: tuple):
     vecs = _vectors(spark, sf_dir)
     n = vecs.count()
 
@@ -1661,9 +1664,7 @@ def _pca_model(spark: SparkSession, sf_dir: str):
             .cast("bigint")
             .alias("b"),
         )
-    out = (n, s, b, n2)
-    _PCA_CACHE[key] = out
-    return out
+    return n, s, b, n2
 
 
 def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:

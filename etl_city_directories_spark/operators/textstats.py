@@ -17,7 +17,7 @@ from etl_city_directories_spark.operators.dedup import (
     norm_col,
     shingles_col,
 )
-from etl_city_directories_spark.functions.memo import rolling_persist
+from etl_city_directories_spark.functions.memo import cached, rolling_persist, table_stamp
 from etl_city_directories_spark.sources.tables import (
     load_table,
     load_table_parallel,
@@ -1966,9 +1966,6 @@ def _bpe_wfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return toks.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
 
 
-_BPE_TRAIN_CACHE: dict[tuple, tuple] = {}
-
-
 def _bpe_train(spark: SparkSession, sf_dir: str) -> tuple:
     """Run BPE_MERGE_ROUNDS of true iterative BPE training (pair
     counts recomputed on the merged representation each round, not the
@@ -1982,14 +1979,14 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> tuple:
     IS driver state, like k-means centroids). The repr column chains
     one literal replace per round on the persisted vocab, so round
     cost never touches the corpus again."""
-    from etl_city_directories_spark.functions.memo import table_stamp
-
     stamp = table_stamp(sf_dir, ("documents",))
-    key = (spark.sparkContext.applicationId, "bpe_train", sf_dir, stamp)
-    hit = _BPE_TRAIN_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return cached(
+        (spark.sparkContext.applicationId, "bpe_train", sf_dir, stamp),
+        lambda: _bpe_train_build(spark, sf_dir),
+    )
 
+
+def _bpe_train_build(spark: SparkSession, sf_dir: str) -> tuple:
     wrap_chars = F.concat_ws(
         "",
         F.transform(
@@ -2023,9 +2020,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str) -> tuple:
             ),
         )
     final_words = rolling_persist(spark, ("bpe_final", sf_dir), words)
-    out = (merges, final_words)
-    _BPE_TRAIN_CACHE[key] = out
-    return out
+    return merges, final_words
 
 
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
+from etl_city_directories_spark.functions import memo
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -46,7 +48,7 @@ def events_ts_encoding(sf_dir: str) -> str:
     The driver regenerates /root/testdata between rounds and has
     already flipped the encoding once (nanos → micros), so nothing may
     hard-code one; the footer read is a few KB of driver-side I/O,
-    cached on (path, mtime, size).
+    cached per (sf_dir, events stamp).
     """
     path = f"{sf_dir}/events.parquet"
     probe = path
@@ -57,37 +59,29 @@ def events_ts_encoding(sf_dir: str) -> str:
             if parts:
                 probe = os.path.join(root, parts[0])
                 break
-    try:
-        st = os.stat(probe)
-        key = (probe, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = (probe, 0, 0)
-    if key not in _TS_ENCODING:
-        t = pq.read_schema(probe).field("ts").type
-        import pyarrow as pa
-
-        if pa.types.is_timestamp(t):
-            if t.unit == "ns":
-                # ns WITH tz too: Spark cannot read INT64
-                # TIMESTAMP(NANOS, adjustedToUTC=true) as TimestampType
-                # either; nanosAsLong surfaces both variants as raw
-                # longs, and div-1000 to micros is correct for
-                # UTC-adjusted instants (session tz is forced UTC).
-                enc = "nanos_long"
-            elif t.tz is None:
-                enc = "ntz"
-            else:
-                enc = "tz"
-        elif pa.types.is_integer(t):
-            enc = "nanos_long"
-        else:
-            raise TypeError(f"unsupported events.ts parquet type: {t}")
-        _TS_ENCODING.clear()  # tiny cache; never grows across testdata rewrites
-        _TS_ENCODING[key] = enc
-    return _TS_ENCODING[key]
+    return memo.cached(
+        ("ts_encoding", sf_dir, memo.table_stamp(sf_dir, ("events",))),
+        lambda: _ts_encoding(probe),
+        None,
+    )
 
 
-_TS_ENCODING: dict[tuple, str] = {}
+def _ts_encoding(probe: str) -> str:
+    import pyarrow as pa
+
+    t = pq.read_schema(probe).field("ts").type
+    if pa.types.is_timestamp(t):
+        if t.unit == "ns":
+            # ns WITH tz too: Spark cannot read INT64
+            # TIMESTAMP(NANOS, adjustedToUTC=true) as TimestampType
+            # either; nanosAsLong surfaces both variants as raw
+            # longs, and div-1000 to micros is correct for
+            # UTC-adjusted instants (session tz is forced UTC).
+            return "nanos_long"
+        return "ntz" if t.tz is None else "tz"
+    if pa.types.is_integer(t):
+        return "nanos_long"
+    raise TypeError(f"unsupported events.ts parquet type: {t}")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -114,30 +108,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # rewrite changes the stamp and evicts the stale entry
     # (tests/test_load_table_cache.py pins both properties).
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        st = os.stat(path)
-        stamp = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        stamp = (0, 0)
-    key = (spark.sparkContext.applicationId, sf_dir, name, stamp)
-    df = _RELATION.get(key)
-    if df is None:
-        # drop the same table's superseded stamp (testdata rewrite)
-        stale = [
-            k for k in _RELATION if k[:-1] == key[:-1] and k != key
-        ]
-        for k in stale:
-            _RELATION.pop(k, None)
+
+    def _read() -> DataFrame:
         df = spark.read.parquet(path)
         if name == "events":
-            df = df.withColumn(
-                "ts", _ts_to_timestamp(df.schema["ts"].dataType)
-            )
-        _RELATION[key] = df
-    return df
+            df = df.withColumn("ts", _ts_to_timestamp(df.schema["ts"].dataType))
+        return df
 
-
-_RELATION: dict[tuple, DataFrame] = {}
+    key = (
+        spark.sparkContext.applicationId,
+        "relation",
+        sf_dir,
+        name,
+        memo.table_stamp(sf_dir, (name,)),
+    )
+    return memo.cached(key, _read, None)
 
 
 def _ts_to_timestamp(dtype) -> F.Column:
@@ -168,31 +153,16 @@ def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFram
     """
     df = load_table(spark, sf_dir, name)
     target = spark.sparkContext.defaultParallelism
-    # cache key includes mtime+size so a rewrite of the data under
-    # sf_dir (e.g. tools/scale_probe.py corpus replication) invalidates
-    # the cached narrow-scan decision instead of silently reusing it
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        st = os.stat(path)
-        stamp = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        stamp = (0, 0)
-    key = (sf_dir, name, target, stamp)
-    if key not in _NARROW_SCAN:
-        # estimate the scan's split count from the file size and
-        # maxPartitionBytes — same signal as the physical scan without
-        # the driver-side .rdd plan conversion the old probe paid
-        mpb = int(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728").rstrip("b")
-        )
-        est = max(1, -(-stamp[1] // mpb))
-        _NARROW_SCAN[key] = est < target
-    if _NARROW_SCAN[key]:
+    # estimate the scan's split count from the file size and
+    # maxPartitionBytes — same signal as the physical scan without the
+    # driver-side .rdd plan conversion
+    ((_, _, size),) = memo.table_stamp(sf_dir, (name,))
+    mpb = int(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728").rstrip("b")
+    )
+    if max(1, -(-size // mpb)) < target:
         df = df.repartition(target)
     return df
-
-
-_NARROW_SCAN: dict[tuple, bool] = {}
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -46,6 +46,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from etl_city_directories_spark.functions.memo import cached_sink_dir, rolling_dir
 from etl_city_directories_spark.functions.numeric import dec2
 from etl_city_directories_spark.sources import tables
 
@@ -346,7 +347,7 @@ def _build_late_fixture(spark: SparkSession, sf_dir: str) -> str:
 
     The fixture derivation is deterministic, so the files are written
     once per (process, sf_dir, events stamp) and reused across the
-    operators that replay them (ingest.cached_sink_dir). The whole
+    operators that replay them (memo.cached_sink_dir). The whole
     derivation — including the split/watermark scalar aggregates —
     lives INSIDE the write closure (r11, guide §1.2): the scalars exist
     only to build the files, so recomputing them per call charged every
@@ -355,8 +356,6 @@ def _build_late_fixture(spark: SparkSession, sf_dir: str) -> str:
     """
     import os
     import shutil
-
-    from etl_city_directories_spark.operators.ingest import cached_sink_dir
 
     def _write_all(out: str) -> None:
         events = load_table_events_us(spark, sf_dir)
@@ -641,7 +640,6 @@ def _purchase_replay_source(spark: SparkSession, sf_dir: str) -> str:
     import os
     import shutil
 
-    from etl_city_directories_spark.operators.ingest import cached_sink_dir
     from etl_city_directories_spark.sources.tables import load_table
 
     def _write_all(src_dir: str) -> None:
@@ -755,11 +753,7 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    key = (spark.sparkContext.applicationId, sf_dir, "ckpt")
-    old = _FBU_SNAPSHOTS.get(key)
-    if old and old != work:
-        shutil.rmtree(old, ignore_errors=True)
-    _FBU_SNAPSHOTS[key] = work  # keep live for the returned plan
+    rolling_dir(spark, (sf_dir, "ckpt"), work)  # keep live for the returned plan
     return spark.table("stream_checkpoint_recovery_sink").orderBy("user_id")
 
 
@@ -1028,7 +1022,6 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds shuffle volume by |batch keys|, not |snapshot|.
     """
     import os
-    import shutil
     import tempfile
 
     from pyspark.sql import Window
@@ -1108,18 +1101,9 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row per distinct purchasing user (unbounded at production scale).
     # The snapshot dir stays alive for the caller; the PREVIOUS
     # invocation's dir is released here instead (one live snapshot per
-    # session × sf_dir, mirroring functions.memo.rolling_persist).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    old = _FBU_SNAPSHOTS.get(key)
-    if old and old != snap_root:
-        shutil.rmtree(old, ignore_errors=True)
-    _FBU_SNAPSHOTS[key] = snap_root
+    # session × sf_dir).
+    rolling_dir(spark, (sf_dir,), snap_root)
     return spark.read.parquet(holder["cur"]).orderBy("user_id")
-
-
-_FBU_SNAPSHOTS: dict[tuple, str] = {}
-
-
 
 
 STREAM_TOPK = 3
@@ -1487,7 +1471,6 @@ def _cdc_replay_source(spark: SparkSession, sf_dir: str) -> str:
     import os
     import shutil
 
-    from etl_city_directories_spark.operators.ingest import cached_sink_dir
     from etl_city_directories_spark.operators.scale_ops import _CDC_OPS
     from etl_city_directories_spark.sources.tables import load_table
 
@@ -1537,7 +1520,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch is one shuffle on the key; the availableNow two-batch replay
     proves the result equals the batch CDC apply bit-for-bit."""
     import os
-    import shutil
     import tempfile
 
     src = _cdc_replay_source(spark, sf_dir)
@@ -1626,11 +1608,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert holder["v"] >= 2, "expected >=2 microbatches through the CDC merge"
 
-    key = (spark.sparkContext.applicationId, sf_dir, "cdc")
-    old = _FBU_SNAPSHOTS.get(key)
-    if old and old != snap_root:
-        shutil.rmtree(old, ignore_errors=True)
-    _FBU_SNAPSHOTS[key] = snap_root
+    rolling_dir(spark, (sf_dir, "cdc"), snap_root)
     return (
         spark.read.parquet(holder["cur"])
         .filter(F.col("last_op") != "D")
@@ -2504,7 +2482,6 @@ def stream_ivm_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     |batch nations| partials; the snapshot is O(nations).
     """
     import os
-    import shutil
     import tempfile
 
     from etl_city_directories_spark.sources.tables import load_table
@@ -2575,11 +2552,7 @@ def stream_ivm_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert holder["v"] >= 2, "expected >=2 microbatches through the view merge"
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ivm")
-    old = _FBU_SNAPSHOTS.get(key)
-    if old and old != snap_root:
-        shutil.rmtree(old, ignore_errors=True)
-    _FBU_SNAPSHOTS[key] = snap_root
+    rolling_dir(spark, (sf_dir, "ivm"), snap_root)
     return (
         spark.read.parquet(holder["cur"])
         .select(

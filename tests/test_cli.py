@@ -169,7 +169,9 @@ def test_parse_skips_archive_missing_after_download(spark, tmp_path):
 
 def test_year_window_excludes_all(spark, tmp_path):
     """A minYear above every directory leaves parse empty — the
-    reference's directory windowing (:191-195)."""
+    reference's directory windowing (:191-195). Parse still writes an
+    empty, schema-carrying output, so the later steps run on it and
+    write empty outputs instead of failing on a missing path."""
     work = str(tmp_path / "w2")
     data = str(tmp_path / "d2")
     os.makedirs(data)
@@ -184,8 +186,13 @@ def test_year_window_excludes_all(spark, tmp_path):
             },
             f,
         )
-    counts = run(cfg_path, work, ["download", "parse"], spark=spark)
-    assert counts["download"] > 0 and counts["parse"] == 0
+    counts = run(cfg_path, work, spark=spark)
+    assert counts == {"download": counts["download"], "parse": 0, "geocode": 0, "transform": 0}
+    assert counts["download"] > 0
+    out = os.path.join(work, "transform")
+    for name in ("objects", "relations", "logs"):
+        assert os.path.isdir(os.path.join(out, f"{name}.ndjson"))
+        assert _read_ndjson_dir(os.path.join(out, f"{name}.ndjson")) == []
 
 
 def test_geocode_custom_addresses(spark, tmp_path):

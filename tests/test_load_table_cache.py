@@ -14,6 +14,7 @@ import shutil
 import pytest
 from pyspark.sql import SparkSession
 
+from etl_city_directories_spark.functions import memo
 from etl_city_directories_spark.sources import tables
 
 
@@ -60,12 +61,15 @@ def test_rewrite_invalidates_and_reads_new_bytes(spark, tmp_path):
     assert d2 is not d1
     assert d2.count() == 3
     # the stale stamp was evicted, not stacked
-    keys = [
-        k
-        for k in tables._RELATION
-        if k[1] == sf and k[2] == "customer"
-    ]
-    assert len(keys) == 1
+    assert len([k for k in memo.keys() if k[-3:-1] == (sf, "customer")]) == 1
+
+
+def test_reset_keeps_relation(spark, tmp_path):
+    """A relation is a lazy plan with no rows: ``memo.reset()`` keeps it."""
+    sf = _write_dir(str(tmp_path / "sr"), [(1, "a")])
+    d1 = tables.load_table(spark, sf, "customer")
+    memo.reset()
+    assert tables.load_table(spark, sf, "customer") is d1
 
 
 def test_cache_is_per_sf_dir(spark, tmp_path):

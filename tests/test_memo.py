@@ -1,7 +1,8 @@
 """functions.memo invalidation: a testdata regeneration (new mtime /
 size on the source parquet) must rebuild memoized index artifacts and
 cached sinks instead of serving stale ones — the r02 failure mode was
-exactly a silent stale assumption surviving a regeneration."""
+exactly a silent stale assumption surviving a regeneration. Evicting
+or resetting an entry must free what it holds."""
 
 from __future__ import annotations
 
@@ -10,20 +11,33 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from etl_city_directories_spark.functions import memo
 from etl_city_directories_spark.functions.memo import (
-    _MEMO,
-    _ROLLING,
+    cached_sink_dir,
     memo_df,
     rolling_persist,
     table_stamp,
 )
-from etl_city_directories_spark.operators.ingest import cached_sink_dir
 
 
 def _copy_table(tmp, name="documents"):
     d = str(tmp)
     shutil.copy(f"/root/testdata/sf0.001/{name}.parquet", d)
     return d
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _checkpoint_rdd(df) -> int:
+    return df._jdf.queryExecution().logical().rdd().id()
+
+
+def _live(*prefix) -> list[tuple]:
+    """Live keys whose elements just before the last one are ``prefix``."""
+    n = len(prefix)
+    return [k for k in memo.keys() if k[-n - 1 : -1] == prefix]
 
 
 def test_table_stamp_changes_on_rewrite(tmp_path):
@@ -55,17 +69,22 @@ def test_memo_df_rebuilds_on_new_stamp(spark, tmp_path):
 
 def test_memo_df_evicts_superseded_stamp(spark, tmp_path):
     """A mid-process regeneration must REPLACE the old stamp's entry,
-    not leave its localCheckpoint blocks pinned beside the new one."""
+    and free its localCheckpoint blocks instead of leaving them pinned
+    beside the new one."""
     d = _copy_table(tmp_path)
     key1 = ("evict_t", d, table_stamp(d, ("documents",)))
-    memo_df(spark, key1, lambda: spark.range(3))
-    app = spark.sparkContext.applicationId
-    assert (app,) + key1 in _MEMO
+    old = memo_df(spark, key1, lambda: spark.range(3))
+    old_rdd = _checkpoint_rdd(old)
+    assert old_rdd in _persistent_rdds(spark)
+    assert [k[-1] for k in _live("evict_t", d)] == [key1[-1]]
     os.utime(f"{d}/documents.parquet", ns=(5, 5))
     key2 = ("evict_t", d, table_stamp(d, ("documents",)))
-    memo_df(spark, key2, lambda: spark.range(4))
-    assert (app,) + key2 in _MEMO
-    assert (app,) + key1 not in _MEMO  # superseded stamp dropped
+    new = memo_df(spark, key2, lambda: spark.range(4))
+    assert [k[-1] for k in _live("evict_t", d)] == [key2[-1]]  # superseded dropped
+    persistent = _persistent_rdds(spark)
+    assert old_rdd not in persistent  # ... and its blocks freed
+    assert _checkpoint_rdd(new) in persistent
+    assert new.count() == 4
 
 
 def test_rolling_persist_replaces_previous(spark):
@@ -77,8 +96,8 @@ def test_rolling_persist_replaces_previous(spark):
     assert df1.storageLevel.useMemory
     df2 = rolling_persist(spark, ("roll_t", "k"), spark.range(7))
     assert df2.count() == 7
-    app = spark.sparkContext.applicationId
-    assert _ROLLING[(app, "roll_t", "k")] is df2
+    assert len(_live("roll_t")) == 1
+    assert df2.storageLevel.useMemory  # the store holds the new one
     assert not df1.storageLevel.useMemory  # released
 
 
@@ -96,3 +115,48 @@ def test_cached_sink_rebuilds_on_new_stamp(tmp_path):
     os.utime(f"{d}/documents.parquet", ns=(3, 3))
     p3 = cached_sink_dir("memo_test", d, ("documents",), write)
     assert p3 != p1 and len(writes) == 2
+    assert not os.path.exists(p1)  # the superseded sink is removed
+
+
+def test_reset_frees_data_and_keeps_plans(spark, tmp_path):
+    """``reset()`` releases every entry that holds data — checkpoint,
+    persisted frame, sink dir, driver-side result — so each rebuilds on
+    its next call, and keeps lazy plans, which hold no rows."""
+    d = _copy_table(tmp_path)
+    stamp = table_stamp(d, ("documents",))
+    memo.reset()
+    baseline = _persistent_rdds(spark)
+    builds = {"checkpoint": 0, "sink": 0, "value": 0, "plan": 0}
+
+    def counted(kind, value):
+        def build(*_):
+            builds[kind] += 1
+            return value() if callable(value) else value
+
+        return build
+
+    def make_all():
+        ck = memo_df(spark, ("reset_t", d, stamp), counted("checkpoint", lambda: spark.range(3)))
+        roll = rolling_persist(spark, ("reset_t", d), spark.range(6))
+        assert roll.count() == 6
+        sink = cached_sink_dir("reset_t", d, ("documents",), counted("sink", None))
+        value = memo.cached(("reset_t", d, stamp), counted("value", 42))
+        plan = memo.plan_memo(spark, ("reset_t", d, stamp), counted("plan", lambda: spark.range(2)))
+        return ck, roll, sink, value, plan
+
+    ck, roll, sink, value, plan = make_all()
+    assert os.path.isdir(sink) and value == 42
+    held = _persistent_rdds(spark) - baseline
+    assert _checkpoint_rdd(ck) in held and len(held) == 2  # checkpoint + persist
+
+    memo.reset()
+    assert _persistent_rdds(spark) <= baseline  # every block freed
+    assert not roll.storageLevel.useMemory
+    assert not os.path.exists(sink)
+
+    ck2, _, sink2, value2, plan2 = make_all()
+    assert builds == {"checkpoint": 2, "sink": 2, "value": 2, "plan": 1}
+    assert ck2 is not ck and ck2.count() == 3
+    assert os.path.isdir(sink2) and value2 == 42
+    assert plan2 is plan
+    memo.reset()

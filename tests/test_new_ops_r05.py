@@ -544,10 +544,8 @@ def test_bpe_train_property_random_corpora(spark, tmp_path):
     match the reference algorithm merge-for-merge."""
     import random
 
-    from etl_city_directories_spark.operators.textstats import (
-        _BPE_TRAIN_CACHE,
-        bpe_train_merges,
-    )
+    from etl_city_directories_spark.functions import memo
+    from etl_city_directories_spark.operators.textstats import bpe_train_merges
 
     rng = random.Random(7)
     alphabet = ["ab", "aab", "abab", "ba", "a", "b", "7", "x.y", "abba"]
@@ -563,7 +561,7 @@ def test_bpe_train_property_random_corpora(spark, tmp_path):
             "doc_id long, text string, lang string, source string, n_chars long",
         ).coalesce(1).write.parquet(str(sf / "documents.parquet"))
         want, _ = _reference_bpe(words, 8)
-        _BPE_TRAIN_CACHE.clear()
+        memo.reset()
         got = sorted(bpe_train_merges(spark, str(sf)).collect(), key=lambda r: r.round)
         assert [(r.round, r.lhs, r.rhs, r.merged, r.pair_count) for r in got] == want, (
             trial,
