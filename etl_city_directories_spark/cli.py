@@ -26,12 +26,17 @@ Config keys (mirroring `city-directories.js`):
   same way (via @spacetime/nyc-historical-geocoder).
 
 Step contract (the spacetime-etl dirs contract): each step writes
-under ``WORKDIR/<step>/`` and reads its predecessor's directory —
+under ``WORKDIR/<step>/`` and reads earlier steps' directories —
 ``download`` fetches archives (+ ``{uuid}.xml`` error files, :91-97)
 and materializes the typed manifest; ``parse`` emits column-assigned,
-entry-parsed OCR lines as NDJSON; ``geocode`` emits per-location
-geocode results; ``transform`` emits ``objects`` / ``relations`` /
-``logs`` NDJSON (:443-450).
+entry-parsed OCR lines as NDJSON, each with the reference's makeId
+``id`` (year.page.bbox, :261-270), since year, page and bbox are all
+known there; ``geocode`` emits per-location geocode results carrying
+the line's ``id`` and the matched address's ``geom_x`` / ``geom_y``;
+``transform`` reads only the parse and geocode outputs and emits
+``objects`` / ``relations`` / ``logs`` NDJSON (:443-450). Geocode is the
+only step that reads the ``addresses`` key, as in the reference, whose
+transform builds geometry from the geocode result (:272-336).
 
 Every NDJSON output directory also holds a ``_schema`` file: the
 written frame's schema as JSON (``sources.ndjson``). The next step reads
@@ -54,13 +59,16 @@ import json
 import os
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_city_directories_spark.operators.citydir import (
-    addresses_dim,
     geocode_locations,
+    geocode_summary,
+    make_id,
     parse_entries_real,
+    point_geometry,
+    validity,
 )
 from etl_city_directories_spark.sources.hocr import (
     PAGE_SCHEMA,
@@ -78,6 +86,11 @@ def _dir(work: str, step: str) -> str:
     d = os.path.join(work, step)
     os.makedirs(d, exist_ok=True)
     return d
+
+
+def _year_lo() -> Column:
+    """First year of the manifest's year form ('1850/51' → 1850)."""
+    return F.split(F.col("year_raw"), "/")[0].cast("int")
 
 
 def step_download(spark: SparkSession, cfg: dict, work: str) -> int:
@@ -188,7 +201,15 @@ def step_parse(spark: SparkSession, cfg: dict, work: str) -> int:
             & (F.col("end_page").isNull() | (F.col("page_num") <= F.col("end_page")))
         )
     )
-    entries = parse_entries_real(windowed)
+    entries = parse_entries_real(windowed).withColumn(
+        "id",
+        make_id(
+            F.col("year_raw"),
+            _year_lo(),
+            F.col("page_num"),
+            [F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1")],
+        ),
+    )
     return write_ndjson(entries, os.path.join(out, "lines.ndjson"))
 
 
@@ -205,11 +226,13 @@ def step_geocode(spark: SparkSession, cfg: dict, work: str) -> int:
         "uuid",
         "page_num",
         "line_index",
+        "id",
         F.posexplode("locations").alias("loc_idx", "loc"),
     ).select(
         "uuid",
         "page_num",
         "line_index",
+        "id",
         "loc_idx",
         F.col("loc.value").alias("loc_value"),
         F.col("loc.loc_type").alias("loc_type"),
@@ -219,89 +242,23 @@ def step_geocode(spark: SparkSession, cfg: dict, work: str) -> int:
 
 
 def step_transform(spark: SparkSession, cfg: dict, work: str) -> int:
-    """st:Person objects + st:in relations + failure logs (:338-451):
-    makeId year.page.bbox, validity interval from the year form,
-    Point/MultiPoint geometry from the geocoded locations."""
+    """st:Person objects + st:in relations + failure logs (:338-451)
+    from the parse and geocode outputs alone: the id parse made, the
+    validity interval from the year form, Point/MultiPoint geometry
+    from the points geocode returned."""
     pr, gc, out = _dir(work, "parse"), _dir(work, "geocode"), _dir(work, "transform")
     lines = read_ndjson(spark, os.path.join(pr, "lines.ndjson"))
     geo = read_ndjson(spark, os.path.join(gc, "geocoded.ndjson"))
 
-    dim = (
-        spark.read.parquet(cfg["addresses"])
-        if cfg.get("addresses")
-        else addresses_dim(spark)
-    ).select("address_id", "geom_x", "geom_y")
     key = ["uuid", "page_num", "line_index"]
-    pts = (
-        geo.join(F.broadcast(dim), "address_id", "left")
-        .groupBy(*key)
-        .agg(
-            F.count("address_id").alias("n_geocoded"),
-            F.count("loc_value").cast("bigint").alias("n_locations"),
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("address_id").isNotNull(),
-                        F.struct("loc_idx", "geom_x", "geom_y"),
-                    )
-                )
-            ).alias("pts"),
-            F.array_agg(F.col("address_id")).alias("address_ids"),
-        )
-    )
-    year_lo = F.split("year_raw", "/")[0].cast("int")
-    is_split = F.col("year_raw").contains("/")
-    year_part = F.when(
-        is_split,
-        F.concat(year_lo.cast("string"), F.lit("-"), (year_lo + 1).cast("string")),
-    ).otherwise(year_lo.cast("string"))
-    bbox = F.concat_ws(
-        "-",
-        F.col("x0").cast("string"),
-        F.col("y0").cast("string"),
-        F.col("x1").cast("string"),
-        F.col("y1").cast("string"),
-    )
-    entry_id = F.concat(
-        year_part, F.lit("."), F.col("page_num").cast("string"), F.lit("."), bbox
-    )
-    geometry = (
-        F.when(F.col("n_geocoded").isNull() | (F.col("n_geocoded") == 0), F.lit(None).cast("string"))
-        .when(
-            F.col("n_geocoded") == 1,
-            F.concat(
-                F.lit("POINT("),
-                F.col("pts")[0]["geom_x"].cast("int").cast("string"),
-                F.lit(" "),
-                F.col("pts")[0]["geom_y"].cast("int").cast("string"),
-                F.lit(")"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("MULTIPOINT("),
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.col("pts"),
-                        lambda p: F.concat(
-                            p["geom_x"].cast("int").cast("string"),
-                            F.lit(" "),
-                            p["geom_y"].cast("int").cast("string"),
-                        ),
-                    ),
-                ),
-                F.lit(")"),
-            )
-        )
-    )
-    base = lines.join(pts, key, "left")
-    objects = base.select(
-        entry_id.alias("id"),
+    pts = geo.groupBy(*key).agg(*geocode_summary())
+    since, until = validity(F.col("year_raw"), _year_lo())
+    objects = lines.join(pts, key, "left").select(
+        "id",
         F.lit("st:Person").alias("type"),
         F.col("subject").alias("name"),
-        year_lo.alias("validSince"),
-        F.when(is_split, year_lo + 1).otherwise(year_lo).alias("validUntil"),
+        since.alias("validSince"),
+        until.alias("validUntil"),
         F.col("uuid").alias("volumeUuid"),
         F.col("page_uuid").alias("pageUuid"),
         F.col("page_num").alias("pageNum"),
@@ -309,20 +266,15 @@ def step_transform(spark: SparkSession, cfg: dict, work: str) -> int:
         F.try_element_at("occupations", F.lit(1)).alias("occupation"),
         F.coalesce("n_locations", F.lit(0)).alias("n_locations"),
         F.coalesce("n_geocoded", F.lit(0)).alias("n_geocoded"),
-        geometry.alias("geometry"),
+        point_geometry(F.col("pts")).alias("geometry"),
     )
-    relations = (
-        base.select(entry_id.alias("from"), F.explode("address_ids").alias("aid"))
-        .filter(F.col("aid").isNotNull())
-        .select(
-            "from",
-            # raw address id, verbatim — the reference pushes
-            # `to: addressId` (city-directories.js:395-399) and
-            # cd_relations emits the same; a surface-specific prefix
-            # here made the two surfaces disagree (r04 advice).
-            F.col("aid").cast("string").alias("to"),
-            F.lit("st:in").alias("type"),
-        )
+    relations = geo.filter(F.col("address_id").isNotNull()).select(
+        F.col("id").alias("from"),
+        # raw address id, verbatim — the reference pushes
+        # `to: addressId` (city-directories.js:395-399) and
+        # cd_relations emits the same
+        F.col("address_id").cast("string").alias("to"),
+        F.lit("st:in").alias("type"),
     )
     logs = (
         geo.filter(~F.col("found"))

@@ -421,43 +421,83 @@ def cd_parse_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cd_year_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'1850/51' → [1850, 1851]; plain years map to themselves
     (city-directories.js:123-128, :416-417)."""
-    lines = lines_df(spark, sf_dir)
-    is_split = F.col("year_raw").contains("/")
-    return lines.select(
-        "doc_id",
-        "year_raw",
-        F.col("year_lo").alias("valid_since"),
-        F.when(is_split, F.col("year_lo") + 1)
-        .otherwise(F.col("year_lo"))
-        .cast("int")
-        .alias("valid_until"),
+    since, until = validity(F.col("year_raw"), F.col("year_lo"))
+    return lines_df(spark, sf_dir).select(
+        "doc_id", "year_raw", since.alias("valid_since"), until.alias("valid_until")
     )
 
 
 def cd_make_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """makeId: '{year|y1-y2}.{pageNum}.{bbox joined by -}'
     (city-directories.js:261-270)."""
-    lines = lines_df(spark, sf_dir)
+    return _person_base(spark, sf_dir).select("doc_id", "entry_id")
+
+
+# ---------------------------------------------------------------------------
+# transform builders — one copy each, for the cd_* keys and cli.step_transform
+# ---------------------------------------------------------------------------
+
+def validity(year_raw: Column, year_lo: Column) -> tuple[Column, Column]:
+    """(validSince, validUntil) of a directory year form: '1850/51'
+    spans [1850, 1851], a plain year maps to itself
+    (city-directories.js:123-128, :416-417)."""
+    until = F.when(year_raw.contains("/"), year_lo + 1).otherwise(year_lo)
+    return year_lo, until.cast("int")
+
+
+def make_id(
+    year_raw: Column, year_lo: Column, page_num: Column, bbox: list[Column]
+) -> Column:
+    """makeId: '{year|y1-y2}.{pageNum}.{bbox joined by -}'
+    (city-directories.js:261-270); null when any part is missing."""
+    since, until = (c.cast("string") for c in validity(year_raw, year_lo))
     year_part = F.when(
-        F.col("year_raw").contains("/"),
-        F.concat(
-            F.col("year_lo").cast("string"),
-            F.lit("-"),
-            (F.col("year_lo") + 1).cast("string"),
-        ),
-    ).otherwise(F.col("year_lo").cast("string"))
-    bbox = F.concat_ws(
-        "-",
-        F.col("bx0").cast("string"),
-        F.col("by0").cast("string"),
-        (F.col("bx0") + 250).cast("string"),
-        (F.col("by0") + 18).cast("string"),
+        year_raw.contains("/"), F.concat(since, F.lit("-"), until)
+    ).otherwise(since)
+    return F.concat(
+        year_part,
+        F.lit("."),
+        page_num.cast("string"),
+        F.lit("."),
+        F.concat_ws("-", *(c.cast("string") for c in bbox)),
     )
-    return lines.select(
-        "doc_id",
-        F.concat(
-            year_part, F.lit("."), F.col("page_num").cast("string"), F.lit("."), bbox
-        ).alias("entry_id"),
+
+
+def geocode_summary() -> list[Column]:
+    """Per-entry aggregates over its geocoded locations (columns
+    ``loc_idx``, ``loc_value``, ``address_id``, ``geom_x``, ``geom_y``):
+    location and house-level hit counts, and the hits' points in entry
+    order for ``point_geometry``."""
+    return [
+        F.count("address_id").alias("n_geocoded"),
+        F.count("loc_value").cast("bigint").alias("n_locations"),
+        F.array_sort(
+            F.collect_list(
+                F.when(
+                    F.col("address_id").isNotNull(),
+                    F.struct("loc_idx", "geom_x", "geom_y"),
+                )
+            )
+        ).alias("pts"),
+    ]
+
+
+def point_geometry(pts: Column) -> Column:
+    """WKT of an entry's geocoded points (city-directories.js:325-336):
+    POINT for one, MULTIPOINT for several, null for none."""
+
+    def xy(p: Column) -> Column:
+        return F.concat(
+            p["geom_x"].cast("int").cast("string"),
+            F.lit(" "),
+            p["geom_y"].cast("int").cast("string"),
+        )
+
+    return F.when(
+        F.size(pts) == 1, F.concat(F.lit("POINT("), xy(pts[0]), F.lit(")"))
+    ).when(
+        F.size(pts) > 1,
+        F.concat(F.lit("MULTIPOINT("), F.concat_ws(",", F.transform(pts, xy)), F.lit(")")),
     )
 
 
@@ -643,6 +683,13 @@ def geocode_locations(
     ``dim`` / ``streets`` override the built-in demo dims with a real
     address dataset (the CLI's ``addresses`` config key) — same column
     contract as ``addresses_dim`` / ``streets_dim``.
+
+    Output: ``locs``' columns, then ``loc_norm``, ``found`` (house or
+    street hit), ``address_id`` (house hits only), ``street_name``,
+    ``street_id``, and ``geom_x`` / ``geom_y`` of the matched house row
+    (null for a street-level or no hit). The reference's geocode result
+    carries its geometry the same way, so transform needs no second
+    look at the address dataset.
     """
     if dim is None:
         dim = addresses_dim(spark)
@@ -681,6 +728,8 @@ def geocode_locations(
         "address_id",
         F.coalesce("street_name", "c_street_name").alias("street_name"),
         F.coalesce("street_id", "c_street_id").alias("street_id"),
+        "geom_x",
+        "geom_y",
     )
 
 
@@ -750,26 +799,31 @@ def _person_base_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.try_element_at(occs, F.lit(1)).alias("occupation"),
         locs.alias("locs"),
     )
-    year_part = F.when(
-        F.col("year_raw").contains("/"),
-        F.concat(
-            F.col("year_lo").cast("string"),
-            F.lit("-"),
-            (F.col("year_lo") + 1).cast("string"),
-        ),
-    ).otherwise(F.col("year_lo").cast("string"))
-    bbox = F.concat_ws(
-        "-",
-        F.col("bx0").cast("string"),
-        F.col("by0").cast("string"),
-        (F.col("bx0") + 250).cast("string"),
-        (F.col("by0") + 18).cast("string"),
-    )
     return lines.withColumn(
         "entry_id",
-        F.concat(
-            year_part, F.lit("."), F.col("page_num").cast("string"), F.lit("."), bbox
+        make_id(
+            F.col("year_raw"),
+            F.col("year_lo"),
+            F.col("page_num"),
+            [F.col("bx0"), F.col("by0"), F.col("bx0") + 250, F.col("by0") + 18],
         ),
+    )
+
+
+def _house_geocoded(spark: SparkSession, base: DataFrame) -> DataFrame:
+    """Every location of a person row (``posexplode_outer``: a row with
+    none keeps one null location), left-joined to the address dim on its
+    normalized form: cd_geocode's house-level lookup without the street
+    fallback. The one dim join behind cd_transform_objects, cd_relations
+    and cd_logs."""
+    exploded = base.select(
+        "doc_id", "entry_id", F.posexplode_outer("locs").alias("loc_idx", "loc_value")
+    )
+    dim = addresses_dim(spark)
+    return exploded.join(
+        F.broadcast(dim),
+        F.lower(normalize_address(exploded.loc_value)) == F.lower(dim.address_name),
+        "left",
     )
 
 
@@ -780,79 +834,26 @@ def cd_transform_objects(
     validity interval, provenance uuids, geometry Point/MultiPoint."""
     if base is None:
         base = _person_base(spark, sf_dir)
-    exploded = base.select(
-        "doc_id", F.posexplode_outer("locs").alias("loc_idx", "loc_value")
-    )
-    dim = addresses_dim(spark)
     geo = (
-        exploded.join(
-            F.broadcast(dim),
-            # same normalized lookup as cd_geocode (identity on
-            # parser-clean values; the reference's geocode step
-            # feeds transform, so the lookup semantics must match)
-            F.lower(normalize_address(exploded.loc_value))
-            == F.lower(dim.address_name), "left")
+        _house_geocoded(spark, base)
         .groupBy("doc_id")
-        .agg(
-            F.count("address_id").alias("n_geocoded"),
-            F.count("loc_value").cast("bigint").alias("n_locations"),
-            # deterministic order: locations in entry order
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("address_id").isNotNull(),
-                        F.struct("loc_idx", "geom_x", "geom_y"),
-                    )
-                )
-            ).alias("pts"),
-        )
+        .agg(*geocode_summary())
         .select(
             "doc_id",
             "n_locations",
             "n_geocoded",
-            F.when(F.col("n_geocoded") == 0, F.lit(None).cast("string"))
-            .when(
-                F.col("n_geocoded") == 1,
-                F.concat(
-                    F.lit("POINT("),
-                    F.col("pts")[0]["geom_x"].cast("int").cast("string"),
-                    F.lit(" "),
-                    F.col("pts")[0]["geom_y"].cast("int").cast("string"),
-                    F.lit(")"),
-                ),
-            )
-            .otherwise(
-                F.concat(
-                    F.lit("MULTIPOINT("),
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.col("pts"),
-                            lambda p: F.concat(
-                                p["geom_x"].cast("int").cast("string"),
-                                F.lit(" "),
-                                p["geom_y"].cast("int").cast("string"),
-                            ),
-                        ),
-                    ),
-                    F.lit(")"),
-                )
-            )
-            .alias("geometry"),
+            point_geometry(F.col("pts")).alias("geometry"),
         )
     )
-    is_split = F.col("year_raw").contains("/")
+    since, until = validity(F.col("year_raw"), F.col("year_lo"))
     return (
         base.join(geo, "doc_id")
         .select(
             F.col("entry_id"),
             F.lit("st:Person").alias("type"),
             "name",
-            F.col("year_lo").alias("valid_since"),
-            F.when(is_split, F.col("year_lo") + 1)
-            .otherwise(F.col("year_lo"))
-            .cast("int")
-            .alias("valid_until"),
+            since.alias("valid_since"),
+            until.alias("valid_until"),
             F.md5(F.col("source")).alias("volume_uuid"),
             F.md5(F.col("doc_id").cast("string")).alias("page_uuid"),
             "page_num",
@@ -918,18 +919,9 @@ def cd_relations(
     """st:in person→address relations, one per found geocode (:395-399)."""
     if base is None:
         base = _person_base(spark, sf_dir)
-    exploded = base.select(
-        "entry_id", F.explode("locs").alias("loc_value")
-    )
-    dim = addresses_dim(spark)
     return (
-        exploded.join(
-            F.broadcast(dim),
-            # same normalized lookup as cd_geocode (identity on
-            # parser-clean values; the reference's geocode step
-            # feeds transform, so the lookup semantics must match)
-            F.lower(normalize_address(exploded.loc_value))
-            == F.lower(dim.address_name))
+        _house_geocoded(spark, base)
+        .filter(F.col("address_id").isNotNull())
         .select(
             F.col("entry_id").alias("rel_from"),
             F.col("address_id").alias("rel_to"),
@@ -1123,19 +1115,9 @@ def cd_logs(
     """
     if base is None:
         base = _person_base(spark, sf_dir)
-    exploded = base.select(
-        "doc_id", "entry_id", F.posexplode("locs").alias("loc_idx", "loc_value")
-    )
-    dim = addresses_dim(spark)
     misses = (
-        exploded.join(
-            F.broadcast(dim),
-            # same normalized lookup as cd_geocode (identity on
-            # parser-clean values; the reference's geocode step
-            # feeds transform, so the lookup semantics must match)
-            F.lower(normalize_address(exploded.loc_value))
-            == F.lower(dim.address_name), "left")
-        .filter(F.col("address_id").isNull())
+        _house_geocoded(spark, base)
+        .filter(F.col("loc_value").isNotNull() & F.col("address_id").isNull())
         .select(
             F.lit("log").alias("type"),
             F.lit("geocode").alias("log_kind"),

@@ -322,54 +322,57 @@ def stitch_continuations(
     return [tuple(r) for r in out]
 
 
+def archive_pages(path: str, blob: bytes) -> Iterator[tuple[int, str, str, str]]:
+    """One archive's bytes → (page_num, image_id, page_uuid, hocr) per
+    ``.hocr`` member; gunzipped first when ``path`` ends in ``.gz``.
+
+    A corrupt archive (truncated gzip stream, clipped tar header, short
+    member payload) skips THAT archive/member and keeps the scan alive —
+    the reference records fetch failures per volume as {uuid}.xml error
+    files rather than aborting the run (city-directories.js:87-106);
+    cd_download carries that error-file contract, this is its
+    parse-side twin. Both archive scans (``read_hocr_pages`` and the
+    ``hocr_tar`` data source) read through here.
+    """
+    try:
+        if path.endswith(".gz"):
+            blob = gzip.decompress(blob)
+        tf = tarfile.open(fileobj=io.BytesIO(blob))
+    except (OSError, tarfile.TarError, EOFError):
+        return
+    with tf:
+        try:
+            members = list(tf)
+        except (OSError, tarfile.TarError, EOFError):
+            return  # header walk died: unreadable past here
+        for member in members:
+            if not member.name.endswith(".hocr"):
+                continue
+            meta = _parse_member_name(member.name)
+            if meta is None:
+                continue
+            try:
+                f = tf.extractfile(member)
+                if f is None:
+                    continue
+                data = f.read()
+            except (OSError, tarfile.TarError, EOFError):
+                continue  # truncated member: skip just it
+            yield (*meta, data.decode("utf-8", errors="replace"))
+
+
 def read_hocr_pages(spark: SparkSession, archive_glob: str) -> DataFrame:
     """tar.gz archives → one row per .hocr page member."""
     binaries = spark.read.format("binaryFile").load(archive_glob)
 
     def explode_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            rows = []
-            for path, content in zip(batch["path"], batch["content"]):
-                # A corrupt archive (truncated gzip stream, clipped tar
-                # header, short member payload) skips THAT archive/member
-                # and keeps the scan alive — the reference records fetch
-                # failures per volume as {uuid}.xml error files rather
-                # than aborting the run (city-directories.js:87-106);
-                # cd_download carries that error-file contract, this is
-                # its parse-side twin.
-                try:
-                    blob = bytes(content)
-                    if path.endswith(".gz"):
-                        blob = gzip.decompress(blob)
-                    tf = tarfile.open(fileobj=io.BytesIO(blob))
-                except (OSError, tarfile.TarError, EOFError):
-                    continue
-                with tf:
-                    try:
-                        members = list(tf)
-                    except (OSError, tarfile.TarError, EOFError):
-                        continue  # header walk died: unreadable past here
-                    for member in members:
-                        if not member.name.endswith(".hocr"):
-                            continue
-                        meta = _parse_member_name(member.name)
-                        if meta is None:
-                            continue
-                        page_num, image_id, page_uuid = meta
-                        try:
-                            f = tf.extractfile(member)
-                            if f is None:
-                                continue
-                            data = f.read()
-                        except (OSError, tarfile.TarError, EOFError):
-                            continue  # truncated member: skip just it
-                        rows.append(
-                            (path, page_num, image_id, page_uuid,
-                             data.decode("utf-8", errors="replace"))
-                        )
-            yield pd.DataFrame(
-                rows, columns=["archive", "page_num", "image_id", "page_uuid", "hocr"]
-            )
+            rows = [
+                (path, *page)
+                for path, content in zip(batch["path"], batch["content"])
+                for page in archive_pages(path, bytes(content))
+            ]
+            yield pd.DataFrame(rows, columns=PAGE_SCHEMA.fieldNames())
 
     return binaries.select("path", "content").mapInPandas(explode_pages, PAGE_SCHEMA)
 

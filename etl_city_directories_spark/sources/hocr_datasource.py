@@ -22,18 +22,11 @@ corrupt archives/members are skipped, never fatal.
 from __future__ import annotations
 
 import glob as globmod
-import gzip
-import io
-import tarfile
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.types import StructType
 
-from etl_city_directories_spark.sources.hocr import _parse_member_name
-
-_SCHEMA = (
-    "archive string, page_num int, image_id string, "
-    "page_uuid string, hocr string"
-)
+from etl_city_directories_spark.sources.hocr import PAGE_SCHEMA, archive_pages
 
 
 class _ArchivePartition(InputPartition):
@@ -58,40 +51,15 @@ class _HocrTarReader(DataSourceReader):
         try:
             with open(path, "rb") as f:
                 blob = f.read()
-            if path.endswith(".gz"):
-                blob = gzip.decompress(blob)
-            tf = tarfile.open(fileobj=io.BytesIO(blob))
-        except (OSError, tarfile.TarError, EOFError):
-            return  # corrupt archive: contribute nothing, never fail
-        with tf:
-            try:
-                members = list(tf)
-            except (OSError, tarfile.TarError, EOFError):
-                return
-            for member in members:
-                if not member.name.endswith(".hocr"):
-                    continue
-                meta = _parse_member_name(member.name)
-                if meta is None:
-                    continue
-                page_num, image_id, page_uuid = meta
-                try:
-                    f = tf.extractfile(member)
-                    if f is None:
-                        continue
-                    data = f.read()
-                except (OSError, tarfile.TarError, EOFError):
-                    continue  # truncated member: skip just it
-                yield (
-                    # binaryFile reports file: URIs; match it so the
-                    # two scan paths are row-identical drop-ins
-                    path if "://" in path or path.startswith("file:")
-                    else f"file:{path}",
-                    page_num,
-                    image_id,
-                    page_uuid,
-                    data.decode("utf-8", errors="replace"),
-                )
+        except OSError:
+            return  # unreadable archive: contribute nothing, never fail
+        # binaryFile reports file: URIs; match it so the two scan paths
+        # are row-identical drop-ins
+        archive = (
+            path if "://" in path or path.startswith("file:") else f"file:{path}"
+        )
+        for page in archive_pages(path, blob):
+            yield (archive, *page)
 
 
 class HocrTarDataSource(DataSource):
@@ -101,8 +69,8 @@ class HocrTarDataSource(DataSource):
     def name(cls) -> str:
         return "hocr_tar"
 
-    def schema(self) -> str:
-        return _SCHEMA
+    def schema(self) -> StructType:
+        return PAGE_SCHEMA
 
     def reader(self, schema) -> DataSourceReader:
         return _HocrTarReader(self.options)

@@ -96,6 +96,14 @@ def test_transform_relations_and_logs(cli_work):
     # reference's `to: addressId` (city-directories.js:395-399)
     assert all(r["type"] == "st:in" and r["to"].isdigit() for r in rels)
     assert all(lg["type"] == "log" for lg in logs)
+    # every relation points at an object, and relations are exactly the
+    # geocoded rows with a house-level address id
+    objs = _read_ndjson_dir(os.path.join(work, "transform", "objects.ndjson"))
+    ids = {o["id"] for o in objs}
+    assert all(r["from"] in ids for r in rels)
+    assert sorted((r["from"], r["to"]) for r in rels) == sorted(
+        (g["id"], str(g["address_id"])) for g in geo if g.get("address_id") is not None
+    )
 
 
 def test_download_with_no_archives_at_all(spark, tmp_path):
@@ -298,7 +306,7 @@ def test_geocode_with_no_hits(spark, tmp_path):
 # Spark jobs per step on the fixture run: one write job per output plus
 # the broadcasts and shuffle stages their plans need. A re-read to count
 # rows or a schema-inference pass adds jobs and trips this budget.
-STEP_JOB_BUDGET = {"download": 4, "parse": 3, "geocode": 3, "transform": 9}
+STEP_JOB_BUDGET = {"download": 4, "parse": 3, "geocode": 3, "transform": 5}
 
 
 def _newest_job_id(sc) -> int:
@@ -326,3 +334,63 @@ def test_step_job_budget(spark, tmp_path):
         jobs[step] = _newest_job_id(sc) - before
     over = {s: n for s, n in jobs.items() if n > STEP_JOB_BUDGET[s]}
     assert not over, f"jobs {jobs} over budget {STEP_JOB_BUDGET}"
+
+
+def test_surface_divergences(spark, tmp_path):
+    """The CLI transform and the cd_* keys replay the same reference
+    step but differ on purpose in three places. Each is pinned here, so
+    a change to one fails this test and has to say so:
+
+    - log text: the CLI writes "geocode miss", cd_logs writes
+      "Address not found: <location>";
+    - the id arm: cd_logs logs an entry whose id cannot be made, the
+      CLI writes no log row for it;
+    - what a miss is: a number-less corner form is found by cd_geocode
+      and in the CLI's geocoded output (street-level fallback), yet
+      cd_logs reports it as a miss (house-level lookup only).
+    """
+    from pyspark.sql import functions as F
+
+    from etl_city_directories_spark.operators.citydir import cd_logs, geocode_locations
+    from etl_city_directories_spark.sources.ndjson import write_ndjson
+
+    corner, miss = "Pearl c Cherry", "26 Elm"  # 26 = 2 x GEOCODE_MISS_MOD
+    work = str(tmp_path / "w_div")
+    lines = spark.createDataFrame(
+        [
+            ("u1", 3, 0, "p1", "1850", "Wilson Jas, porter, h Pearl c Cherry",
+             "Wilson Jas", ["porter"], [(corner, "home")], "1850.3.0-0-9-9"),
+            ("u1", 3, 1, "p1", None, "Brown Wm, lab., 26 Elm",
+             "Brown Wm", ["lab."], [(miss, "address")], None),
+        ],
+        "uuid string, page_num int, line_index int, page_uuid string,"
+        " year_raw string, text string, subject string,"
+        " occupations array<string>,"
+        " locations array<struct<value: string, loc_type: string>>, id string",
+    )
+    write_ndjson(lines, os.path.join(work, "parse", "lines.ndjson"))
+    cli.step_geocode(spark, {}, work)
+    cli.step_transform(spark, {}, work)
+    geo = _read_ndjson_dir(os.path.join(work, "geocode", "geocoded.ndjson"))
+    assert {g["loc_value"]: g["found"] for g in geo} == {corner: True, miss: False}
+    cli_logs = _read_ndjson_dir(os.path.join(work, "transform", "logs.ndjson"))
+    assert [(lg["loc_value"], lg["error"]) for lg in cli_logs] == [(miss, "geocode miss")]
+    objs = _read_ndjson_dir(os.path.join(work, "transform", "objects.ndjson"))
+    assert sorted(o.get("id") is None for o in objs) == [False, True]
+
+    # cd_geocode's lookup is geocode_locations: the corner form is found
+    found = geocode_locations(
+        spark, spark.createDataFrame([(corner,)], "loc_value string")
+    ).first()
+    assert found.found and found.address_id is None and found.street_id == "S3"
+
+    base = spark.createDataFrame(
+        [(1, "1850.3.0-0-9-9", [corner]), (2, None, [miss])],
+        "doc_id long, entry_id string, locs array<string>",
+    )
+    cd = cd_logs(spark, None, base=base).orderBy("doc_id", F.col("log_kind").desc())
+    assert [(r.log_kind, r.doc_id, r.loc_value, r.error) for r in cd.collect()] == [
+        ("geocode", 1, corner, f"Address not found: {corner}"),
+        ("id", 2, None, "Could not make ID"),
+        ("geocode", 2, miss, f"Address not found: {miss}"),
+    ]
