@@ -47,9 +47,13 @@ download, ``lines`` for parse, ``geocoded`` for geocode, ``objects``
 for transform — counted by the write's own job, not by re-reading.
 
 Scale shape: every step is the same declarative plan the operator
-surface uses — archive decode is one task per archive, the entry
+surface uses — parse is one scan and one Python pass (below), the entry
 parser is pure JVM expressions, the address dims broadcast, and all
 sinks are Spark's distributed NDJSON writer (no driver funnel).
+
+Parse reads every windowed archive in one ``binaryFile`` scan;
+``spark.sql.files.maxPartitionBytes`` groups archives into partitions,
+and one Python pass applies the page window before column detection.
 """
 
 from __future__ import annotations
@@ -57,9 +61,8 @@ from __future__ import annotations
 import argparse
 import json
 import os
-from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from etl_city_directories_spark.operators.citydir import (
@@ -70,11 +73,7 @@ from etl_city_directories_spark.operators.citydir import (
     point_geometry,
     validity,
 )
-from etl_city_directories_spark.sources.hocr import (
-    PAGE_SCHEMA,
-    parse_hocr_lines,
-    read_hocr_pages,
-)
+from etl_city_directories_spark.sources.hocr import read_hocr_lines
 from etl_city_directories_spark.sources.local import local_frame
 from etl_city_directories_spark.sources.manifest import read_manifest
 from etl_city_directories_spark.sources.ndjson import read_ndjson, write_ndjson
@@ -169,37 +168,18 @@ def step_parse(spark: SparkSession, cfg: dict, work: str) -> int:
         manifest = manifest.filter(
             F.coalesce("year_end", "year_start") <= int(cfg["maxYear"])
         )
-    rows = manifest.select("uuid", "column_count").collect()  # O(directories)
-    data_dir = os.path.join(dl, "data")
-    by_count: dict[int, list[str]] = {}
-    for r in rows:
-        p = os.path.join(data_dir, f"{r['uuid']}.tar.gz")
-        if os.path.exists(p):
-            by_count.setdefault(int(r["column_count"] or 2), []).append(p)
-
-    # an empty window still writes an empty, schema-carrying output for
-    # the later steps to read
-    page_sets = [
-        (read_hocr_pages(spark, paths), cc) for cc, paths in sorted(by_count.items())
-    ] or [(local_frame(spark, [], PAGE_SCHEMA), 2)]
-    parsed = reduce(
-        DataFrame.unionByName,
-        (parse_hocr_lines(pages, column_count=cc) for pages, cc in page_sets),
-    ).withColumn(
+    archives = {}
+    for r in manifest.select("uuid", "column_count", "start_page", "end_page").collect():
+        path = os.path.join(dl, "data", f"{r.uuid}.tar.gz")
+        if os.path.exists(path):  # the reference re-checks at parse time (:195)
+            archives[path] = tuple(r[1:])
+    # the Python pass applies the page window; the join brings the
+    # manifest columns the later steps read
+    windowed = read_hocr_lines(spark, archives).withColumn(
         "uuid", F.regexp_extract(F.col("archive"), r"([0-9a-f-]+)\.tar\.gz$", 1)
-    )
-    windowed = (
-        parsed.join(
-            F.broadcast(
-                manifest.select("uuid", "year_raw", "start_page", "end_page")
-            ),
-            "uuid",
-        )
-        # page window; a blank manifest cell means unbounded on that side
-        .filter(
-            (F.col("start_page").isNull() | (F.col("page_num") >= F.col("start_page")))
-            & (F.col("end_page").isNull() | (F.col("page_num") <= F.col("end_page")))
-        )
+    ).join(
+        F.broadcast(manifest.select("uuid", "year_raw", "start_page", "end_page")),
+        "uuid",
     )
     entries = parse_entries_real(windowed).withColumn(
         "id",

@@ -68,5 +68,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # Python workers import the package from its root, whatever the cwd
+        .config("spark.executorEnv.PYTHONPATH",
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     )
     return builder.getOrCreate()

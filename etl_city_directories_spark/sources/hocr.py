@@ -7,11 +7,12 @@ then detect columns per page (hocr-detect-columns) and keep only lines
 assigned a columnIndex. Bbox and completeText come from the hOCR spans.
 
 Spark-first shape: archives land as a ``binaryFile`` DataFrame (one row
-per tar.gz — Spark distributes archives across executors), and all
-decompress/untar/XML work happens inside ``mapInPandas`` so each
-executor streams its own archives with zero driver involvement. At
-100 TB (≈ thousands of archives) this is embarrassingly parallel;
-``spark.sql.files.maxPartitionBytes`` governs archive grouping.
+per tar.gz, grouped into partitions by ``spark.sql.files.maxPartitionBytes``)
+and all decompress/untar/XML work happens inside ``mapInPandas`` on the
+executors. ``read_hocr_lines`` is the reference's per-archive pass in one
+Python call: untar, page window, then ``page_lines`` (column detection and
+stitching). ``read_hocr_pages`` + ``parse_hocr_lines`` split that work into a
+page scan and a page → lines map.
 
 The XML is parsed with a pair of regexes (hOCR is machine-generated,
 schema-stable) rather than a DOM — ~10× less allocation per page.
@@ -97,13 +98,14 @@ def extract_lines(hocr: str) -> list[tuple[int, int, int, int, str]]:
 MAX_INDENT_PX = 120
 
 
-def _greedy_clusters(xs: list[int]) -> list[list[int]]:
-    clusters: list[list[int]] = [[xs[0]]]
-    for x in xs[1:]:
-        if x - clusters[-1][-1] <= COLUMN_TOLERANCE_PX:
-            clusters[-1].append(x)
+def _greedy_clusters(xs: list, x=lambda v: v) -> list[list]:
+    """Sorted ``xs`` split wherever ``x`` steps past the column tolerance."""
+    clusters = [[xs[0]]]
+    for v in xs[1:]:
+        if x(v) - x(clusters[-1][-1]) <= COLUMN_TOLERANCE_PX:
+            clusters[-1].append(v)
         else:
-            clusters.append([x])
+            clusters.append([v])
     return clusters
 
 
@@ -129,13 +131,7 @@ def estimate_skew(lines: list[tuple[int, int, int, int, str]]) -> float:
     the clean-page geometry."""
     if len(lines) < 4:
         return 0.0
-    xs = sorted((l[0], l[1]) for l in lines)
-    clusters: list[list[tuple[int, int]]] = [[xs[0]]]
-    for p in xs[1:]:
-        if p[0] - clusters[-1][-1][0] <= COLUMN_TOLERANCE_PX:
-            clusters[-1].append(p)
-        else:
-            clusters.append([p])
+    clusters = _greedy_clusters(sorted((l[0], l[1]) for l in lines), lambda p: p[0])
     big = max(clusters, key=len)
     if len(big) < 3:
         return 0.0
@@ -172,16 +168,14 @@ def deskew_x0(
 # directory page's real columns each hold a near-equal large share.
 COLUMN_MIN_SHARE = 0.15
 MAX_COLUMN_COUNT = 6
-# A cluster at least this far from the largest cluster's center is
-# geometrically a separate column candidate, not edge bleed: real
-# directory columns sit ~page_width/k apart (hundreds of px), while
-# spine shadows and gutter bleed hug a real column within a few
-# tolerances. Far clusters face a 0.35-of-largest population bar
-# instead of half — a sparse section-end trailing column (r9 advice:
-# under half the lead column's lines) stays a real column, while
+# A cluster at least this far from the largest cluster's center is a
+# separate column candidate, not edge bleed: real columns sit
+# ~page_width/k apart, while spine shadows and gutter bleed hug a real
+# column. Far clusters face a 0.35-of-largest population bar instead of
+# half, so a sparse section-end trailing column stays a column while
 # near-column dense junk still dies on the half bar. Geometry alone
-# cannot tell dense FAR junk from a sparse real column, so the far bar
-# stays population-based; 0.35 keeps the spine-shadow fixture (6 junk
+# cannot tell dense far junk from a sparse real column, so the far bar
+# is a population share; 0.35 keeps the spine-shadow fixture (6 junk
 # lines vs a 20-line column) below it.
 COLUMN_FAR_GAP_PX = 4 * COLUMN_TOLERANCE_PX
 COLUMN_FAR_SHARE_OF_LARGEST = 0.35
@@ -191,9 +185,8 @@ def infer_column_count(
     lines: list[tuple[int, int, int, int, str]],
     xs_corr: list[int] | None = None,
 ) -> int:
-    """Infer the column count when the manifest doesn't declare one —
-    the `hocr-detect-columns` richer-config mode the r8 verdict flagged
-    (city-directories.js:224-232 drives the npm package with an
+    """Infer the column count when the manifest doesn't declare one
+    (city-directories.js:224-232 drives hocr-detect-columns with an
     explicit columnCount; undeclared pages need k discovered).
 
     Same geometry as the declared-k path: cluster the skew-corrected
@@ -209,14 +202,10 @@ def infer_column_count(
     xs = sorted(xs_corr if xs_corr is not None else [l[0] for l in lines])
     clusters = _greedy_clusters(xs)
     # two floors: a share of the page AND a largest-cluster-relative
-    # bar — directory columns are near-equal in population, so a
-    # spine-shadow cluster that sneaks past the page-share floor
-    # (dense junk on a short page) still falls under the relative bar.
-    # The relative bar is distance-gated (r9 advice): half-of-largest
-    # for clusters within COLUMN_FAR_GAP_PX of the largest cluster's
-    # center (edge bleed lives there), COLUMN_FAR_SHARE_OF_LARGEST for
-    # far clusters, so a genuinely separate trailing column holding
-    # under half the lead column's lines is not collapsed into k=1.
+    # bar (directory columns are near-equal in population), so dense
+    # junk that passes the page-share floor on a short page still falls
+    # under the relative bar, which is half-of-largest near the largest
+    # cluster and COLUMN_FAR_SHARE_OF_LARGEST beyond COLUMN_FAR_GAP_PX.
     big = max(clusters, key=len)
     largest = len(big)
     big_center = big[(largest - 1) // 2]
@@ -331,8 +320,7 @@ def archive_pages(path: str, blob: bytes) -> Iterator[tuple[int, str, str, str]]
     the reference records fetch failures per volume as {uuid}.xml error
     files rather than aborting the run (city-directories.js:87-106);
     cd_download carries that error-file contract, this is its
-    parse-side twin. Both archive scans (``read_hocr_pages`` and the
-    ``hocr_tar`` data source) read through here.
+    parse-side twin. Every archive scan reads through here.
     """
     try:
         if path.endswith(".gz"):
@@ -361,6 +349,28 @@ def archive_pages(path: str, blob: bytes) -> Iterator[tuple[int, str, str, str]]
             yield (*meta, data.decode("utf-8", errors="replace"))
 
 
+def page_lines(
+    hocr: str, column_count: int | None
+) -> list[tuple[int, int, int, int, int, int, str]]:
+    """One page's hOCR → (line_index, x0, y0, x1, y1, column_index, text)
+    per entry. Column decisions run on skew-corrected x0s (clean pages
+    are untouched); ``column_count=None`` infers k for the page."""
+    lines = extract_lines(hocr)
+    xs_corr = deskew_x0(lines, estimate_skew(lines))
+    k = column_count if column_count is not None else infer_column_count(lines, xs_corr)
+    cols = assign_columns(lines, k, xs_corr)
+    stitched = stitch_continuations(lines, cols, column_centers(lines, k, xs_corr), xs_corr)
+    return [(i, x0, y0, x1, y1, cidx, text) for i, x0, y0, x1, y1, text, cidx in stitched]
+
+
+def _kept(lines: DataFrame) -> DataFrame:
+    """Column-assigned lines, dot runs collapsed last (reference order,
+    city-directories.js:245)."""
+    return lines.filter(F.col("column_index").isNotNull()).withColumn(
+        "text", F.regexp_replace("text", r"\.+", ".")
+    )
+
+
 def read_hocr_pages(spark: SparkSession, archive_glob: str) -> DataFrame:
     """tar.gz archives → one row per .hocr page member."""
     binaries = spark.read.format("binaryFile").load(archive_glob)
@@ -381,39 +391,42 @@ def parse_hocr_lines(
     pages: DataFrame, column_count: int | None = 2
 ) -> DataFrame:
     """Pages → column-assigned OCR lines (reference parse step
-    city-directories.js:223-247, incl. dot-run collapse).
-
-    ``column_count=None`` infers k PER PAGE from the x0 cluster
-    populations (see infer_column_count) — the undeclared-columnCount
-    mode; a declared k pins it for every page as before."""
+    city-directories.js:223-247, incl. dot-run collapse), with
+    ``column_count`` for every page as in ``page_lines``."""
 
     def explode_lines(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            rows = []
-            for rec in batch.itertuples(index=False):
-                lines = extract_lines(rec.hocr)
-                # deskew FIRST: column decisions run on skew-corrected
-                # x0s (clean pages estimate slope 0 and are untouched)
-                xs_corr = deskew_x0(lines, estimate_skew(lines))
-                k = (
-                    column_count
-                    if column_count is not None
-                    else infer_column_count(lines, xs_corr)
-                )
-                cols = assign_columns(lines, k, xs_corr)
-                centers = column_centers(lines, k, xs_corr)
-                for i, x0, y0, x1, y1, text, cidx in stitch_continuations(
-                    lines, cols, centers, xs_corr
-                ):
-                    rows.append(
-                        (rec.archive, rec.page_num, rec.image_id, rec.page_uuid,
-                         i, x0, y0, x1, y1, cidx, text)
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in LINE_SCHEMA.fields])
+            rows = [
+                (rec.archive, rec.page_num, rec.image_id, rec.page_uuid, *line)
+                for rec in batch.itertuples(index=False)
+                for line in page_lines(rec.hocr, column_count)
+            ]
+            yield pd.DataFrame(rows, columns=LINE_SCHEMA.fieldNames())
 
-    lines = pages.mapInPandas(explode_lines, LINE_SCHEMA)
-    # stitching folded continuations in; stray lines are already gone.
-    # Collapse dot runs last (reference order, city-directories.js:245).
-    return lines.filter(F.col("column_index").isNotNull()).withColumn(
-        "text", F.regexp_replace("text", r"\.+", ".")
-    )
+    return _kept(pages.mapInPandas(explode_lines, LINE_SCHEMA))
+
+
+def read_hocr_lines(
+    spark: SparkSession, archives: dict[str, tuple[int, int, int]]
+) -> DataFrame:
+    """The reference's per-archive parse loop (city-directories.js:196-247)
+    in one ``binaryFile`` scan and one Python pass: ``archives`` maps each
+    archive path to its (column_count, start_page, end_page); pages outside
+    the window are dropped before column detection. Scan rows find their
+    window by file name, so the names must differ."""
+    windows = {p.rsplit("/", 1)[-1]: w for p, w in archives.items()}
+    if len(windows) != len(archives):
+        raise ValueError("archive file names must be distinct")
+    scan = spark.read.format("binaryFile").load(list(archives)).select("path", "content")
+
+    def explode_archives(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            rows = []
+            for path, content in zip(batch["path"], batch["content"]):
+                k, first, last = windows[path.rsplit("/", 1)[-1]]
+                for page_num, *meta, hocr in archive_pages(path, bytes(content)):
+                    if first <= page_num <= last:
+                        rows += [(path, page_num, *meta, *ln) for ln in page_lines(hocr, k)]
+            yield pd.DataFrame(rows, columns=LINE_SCHEMA.fieldNames())
+
+    return _kept(scan.mapInPandas(explode_archives, LINE_SCHEMA))

@@ -3,7 +3,8 @@
 Reference behavior (city-directories.js:108-133): read <thead> th texts
 as keys, zip each <tbody> row's td texts, trim, blank → undefined;
 parse startPage/endPage/columnCount as ints and year as either a plain
-int or ``1850/51`` → [1850, 1851]; drop rows missing any required field.
+int or ``1850/51`` → [1850, 1851]; drop rows missing any required field
+or with a columnCount below 1.
 
 The manifest is a few hundred rows — a driver-side parse into a
 DataFrame is the correct distribution strategy (it's the broadcast dim
@@ -104,11 +105,11 @@ def parse_manifest_html(html: str) -> list[dict]:
             "end_page": _to_int(rec.get("endPage")),
             "column_count": _to_int(rec.get("columnCount")),
         }
-        # reference filter (:130): every field required
+        # reference filter (:130): every field required; a page has a column
         if all(
             parsed[k] is not None
             for k in ("uuid", "year_start", "start_page", "end_page", "column_count")
-        ):
+        ) and parsed["column_count"] >= 1:
             out.append(parsed)
     return out
 

@@ -4,13 +4,18 @@ reference's usage surface (config file + step dirs) on fixtures."""
 import glob
 import json
 import os
+import re
 import shutil
+import subprocess
+import sys
 
 import pytest
 
 from etl_city_directories_spark import cli
 from etl_city_directories_spark.cli import STEPS, run
 from etl_city_directories_spark.operators.ingest import FIXTURES, fixture_archive
+from perfbench import gen
+from perfbench.etl import check_step
 
 
 def _write_config(tmp_path, **cfg):
@@ -394,3 +399,78 @@ def test_surface_divergences(spark, tmp_path):
         ("id", 2, None, "Could not make ID"),
         ("geocode", 2, miss, f"Address not found: {miss}"),
     ]
+
+
+@pytest.fixture(scope="module")
+def ledger_run(spark, tmp_path_factory):
+    """``cli.run`` over the benchmark generator's tiny inputs, one step at
+    a time, with the executed plan of the parse write: the newest SQL
+    execution once parse returns, read from the SQL status store (live
+    with the UI off)."""
+    inputs = gen.inputs(str(tmp_path_factory.mktemp("gen")), "tiny", 7)
+    cfg_path = _write_config(tmp_path_factory.mktemp("ledger"), **inputs.config())
+    work = str(tmp_path_factory.mktemp("ledger_work"))
+    store = spark._jsparkSession.sharedState().statusStore()
+    counts, parse_plan = {}, None
+    for step in STEPS:
+        counts.update(run(cfg_path, work, [step], spark=spark))
+        if step == "parse":
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+            newest = store.executionsList(int(store.executionsCount()) - 1, 1).head()
+            parse_plan = newest.physicalPlanDescription()
+    return work, counts, inputs.ledger, parse_plan
+
+
+def test_cli_matches_generator_ledger(ledger_run):
+    """The generator's inputs hold two column counts in one run, a page
+    window that drops each archive's first and last page, a directory
+    outside the year window, a manifest row with no archive and one
+    with a blank cell; every step's output must match its ledger."""
+    work, counts, ledger, _ = ledger_run
+    manifest = _read_ndjson_dir(os.path.join(work, "download", "manifest.ndjson"))
+    parsed = {ln["uuid"] for ln in _read_ndjson_dir(os.path.join(work, "parse", "lines.ndjson"))}
+    assert len({m["column_count"] for m in manifest if m["uuid"] in parsed}) == 2
+    assert list(counts) == list(STEPS)
+    for step, n in counts.items():
+        assert check_step(step, n, work, ledger) == [], step
+
+
+def test_parse_is_one_scan_and_one_python_pass(ledger_run):
+    """The parse write reads every archive in one binaryFile scan and
+    one Python pass (untar, page window, column detection), with no
+    union of per-column-count scans."""
+    plan = ledger_run[3]
+    tree = plan.split("== Physical Plan ==", 1)[1].split("\n\n", 1)[0]
+    executed = tree.split("== Initial Plan ==", 1)[0]  # AQE's final plan
+    assert "InsertIntoHadoopFsRelationCommand" in executed
+    assert len(re.findall(r"\w*(?:Pandas|Python|Arrow)\w*", executed)) == 1, executed
+    assert executed.count("Scan binaryFile") == 1, executed
+    assert "Union" not in executed, executed
+
+
+def test_cli_runs_from_another_directory(tmp_path):
+    """Python workers import the package from any working directory: a
+    fresh process runs ``cli.run`` with another working directory and
+    no PYTHONPATH, and every step (three start Python workers)
+    finishes."""
+    data = tmp_path / "data"
+    data.mkdir()
+    shutil.copy(fixture_archive(), data)
+    cfg_path = _write_config(
+        tmp_path, tableUrl=os.path.join(FIXTURES, "manifest.html"), dataUrl=str(data)
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(cli.__file__)))
+    code = (
+        f"import json, sys; sys.path.insert(0, {root!r}); "
+        "from etl_city_directories_spark import cli; "
+        f"print(json.dumps(cli.run({cfg_path!r}, {str(tmp_path / 'work')!r})))"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    done = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    counts = json.loads(done.stdout.strip().splitlines()[-1])
+    assert list(counts) == list(STEPS) and all(n > 0 for n in counts.values()), counts

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_city_directories_spark.operators.ingest import (
@@ -93,6 +94,19 @@ def test_manifest_parse_reference_semantics(spark):
 def test_manifest_parser_pure():
     rows = parse_manifest_html(open(os.path.join(FIXTURES, "manifest.html")).read())
     assert [r["start_page"] for r in rows] == [17, 9, 21, 33]
+
+
+@pytest.mark.parametrize("column_count", ["0", "-1"])
+def test_manifest_drops_column_count_below_one(column_count):
+    """A columnCount below 1 is no column count: the row is dropped like
+    one with a blank required cell (:130), instead of a 0 or a negative
+    count reaching column detection."""
+    html = open(os.path.join(FIXTURES, "manifest.html")).read()
+    # the fixture's one three-column row
+    html = html.replace("<td>3</td></tr>", f"<td>{column_count}</td></tr>")
+    rows = parse_manifest_html(html)
+    assert [r["start_page"] for r in rows] == [17, 21, 33]
+    assert all(r["column_count"] >= 1 for r in rows)
 
 
 def test_ndjson_roundtrip(spark, tmp_path):
