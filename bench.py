@@ -87,9 +87,11 @@ def main() -> None:
 
     # Sidecar with EVERY attempt (the JSON line keeps only best-of-N):
     # the per-key attempt spread is the contention fingerprint that
-    # separates a plan regression from a noisy window (see
-    # tools/simlogs/r09_family_adjudication.md — the r8 "regression"
-    # was 1.37x box drift). The driver ignores this file; humans and
+    # separates a plan regression from a noisy window. On one host,
+    # four identical sweeps once took 404-530 s, and unchanged code
+    # ran 1.37x slower on a later day; a key whose own attempts
+    # disagree points at the host, not the plan. The driver ignores
+    # this file; humans and
     # later rounds diff it against the archived BENCH_r{N}.json.
     detail_path = os.environ.get(
         "SPARK_GRAFT_BENCH_DETAIL",

@@ -14,13 +14,34 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _positive_int_env(name: str, default: str) -> int:
+    raw = os.environ.get(name, default)
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value < 1:
+        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
+    return value
+
+
+def _bool_env(name: str, default: str) -> str:
+    raw = os.environ.get(name, default)
+    if raw.lower() not in ("true", "false"):
+        raise ValueError(f"{name} must be true or false, got {raw!r}")
+    return raw.lower()
+
+
 def get_spark(
     app_name: str = "etl-city-directories-spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
+    # env knobs are checked before the session is built: getOrCreate on a
+    # live session would otherwise write a bad value into its conf
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = _positive_int_env("SPARK_GRAFT_CPUS", "32")
+    df_debugging = _bool_env("SPARK_GRAFT_DF_DEBUGGING", "false")
     if shuffle_partitions is None:
         # local mode: one shuffle partition per core; AQE coalesces
         # further at runtime. On a real cluster this would be set to
@@ -47,19 +68,8 @@ def get_spark(
         # exists on a 1000-executor cluster driver. Debug sessions can
         # re-enable call-site capture without editing this file:
         # SPARK_GRAFT_DF_DEBUGGING=true (judge ADVICE r10).
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),
-        )
+        .config("spark.python.sql.dataFrameDebugging.enabled", df_debugging)
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Shuffle codec, env-parameterized (guide §2.3/§9): lz4 is
-        # Spark's default; zstd trades CPU for ratio. Probed at a 10×
-        # corpus (tools/simlogs/r11_zstd_probe.md) — see
-        # OPTIMIZATION_r11.md for the ship/reject decision.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
         # Harmless fallback for events.parquet generations that store
         # ts as INT64 TIMESTAMP(NANOS) (the conf is a no-op for
         # micros/millis files). sources.tables.load_table inspects the

@@ -251,8 +251,12 @@ def assign_columns(
     gets the index of the column whose start it sits within tolerance
     of, else None (indented continuation / stray lines). Decisions use
     the skew-corrected x0s when provided."""
-    centers = column_centers(lines, column_count, xs_corr)
     xs = xs_corr if xs_corr is not None else [l[0] for l in lines]
+    return _nearest_columns(xs, column_centers(lines, column_count, xs_corr))
+
+
+def _nearest_columns(xs: list[int], centers: list[int]) -> list[int | None]:
+    """Index of the first center within tolerance of each x0, else None."""
     out: list[int | None] = []
     for x0 in xs:
         idx = None
@@ -358,8 +362,9 @@ def page_lines(
     lines = extract_lines(hocr)
     xs_corr = deskew_x0(lines, estimate_skew(lines))
     k = column_count if column_count is not None else infer_column_count(lines, xs_corr)
-    cols = assign_columns(lines, k, xs_corr)
-    stitched = stitch_continuations(lines, cols, column_centers(lines, k, xs_corr), xs_corr)
+    centers = column_centers(lines, k, xs_corr)
+    cols = _nearest_columns(xs_corr, centers)
+    stitched = stitch_continuations(lines, cols, centers, xs_corr)
     return [(i, x0, y0, x1, y1, cidx, text) for i, x0, y0, x1, y1, text, cidx in stitched]
 
 

@@ -84,19 +84,26 @@ def _ts_encoding(probe: str) -> str:
     raise TypeError(f"unsupported events.ts parquet type: {t}")
 
 
+def events_conf(spark: SparkSession, sf_dir: str) -> None:
+    """Set the runtime confs every events read needs on ``spark``.
+
+    Confs are set here (runtime-settable), NOT only at session build
+    time, so an externally-constructed vanilla SparkSession — e.g. the
+    driver's correctness gate — can call any events query directly.
+    UTC keeps window bucketing / unix_micros / toPandas rendering
+    identical to the DuckDB oracle's naive timestamps regardless of
+    host timezone; nanosAsLong is needed only when the file is
+    physically INT64 nanos."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if events_ts_encoding(sf_dir) == "nanos_long":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     if name == "events":
-        # Confs are set here (runtime-settable), NOT only at session
-        # build time, so an externally-constructed vanilla SparkSession
-        # — e.g. the driver's correctness gate — can call any events
-        # query directly. UTC keeps window bucketing / unix_micros /
-        # toPandas rendering identical to the DuckDB oracle's naive
-        # timestamps regardless of host timezone.
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        if events_ts_encoding(sf_dir) == "nanos_long":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        events_conf(spark, sf_dir)
     # Plan-object cache (r10 optimization, guide §6 file-listing
     # advice): ``spark.read.parquet`` costs ~75-95 ms of driver-side
     # work per call (file listing, footer/schema read, relation

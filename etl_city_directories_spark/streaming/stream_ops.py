@@ -29,7 +29,9 @@ Scale notes:
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -53,29 +55,39 @@ from etl_city_directories_spark.sources import tables
 SESSION_GAP_MIN = 30  # must match operators.windows.SESSION_GAP_MIN
 _GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
 
-# State-store / per-batch-merge shuffle width for the FINITE replay.
-# Streaming state partitioning is fixed by shuffle.partitions at the
-# first batch; every HDFS-backed store costs per-batch commit files and
-# a scheduled task whether or not it holds state, so the replay
-# right-sizes this down from the session's core count (r05: 32 -> 8
-# measured 6.8 s -> 2.8 s on the two-sided join). A production
-# deployment sets cluster width here instead (the env override is the
-# parameterization hook); the conf is restored after every run
-# (_run_to_table / the foreachBatch operators).
+# Every replay builds and runs its streaming query in a clone of the
+# caller's session (_replay_session). The clone keeps the caller's
+# runtime conf (timezone, ANSI mode, ...) and carries its own
+# ``spark.sql.shuffle.partitions``, which fixes the state-store count
+# at the first batch and sizes the per-batch merge shuffles. The
+# caller's conf is never written, and each memory sink is a view in
+# the clone's catalog, so it lives only as long as the returned plan.
+# Static sides (dims, fixtures) stay frames of the caller's session.
 #
-# r11 split (interleaved A/B, tools/simlogs/r11_sp_interleave.json +
-# the 4-vs-2 / 8-vs-4 confirmation probes): JVM-stateful replays are
-# commit-file/task-quantum bound — 8 -> 2 cut the 8-key JVM basket
-# 13.6 -> 11.4 s best / 16.4 -> 12.1 s median — while the four
-# applyInPandasWithState/TWS operators are PYTHON-WORKER bound (state
-# partitions are their only parallelism axis), where 8 beats 4
-# (14.8 vs 16.2 s best). Hence two knobs, both env-parameterized.
-REPLAY_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "2")
-)
-PY_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_PY_STATE_PARTITIONS", "8")
-)
+# The replay is finite and its state is kilobytes, while every
+# HDFS-backed store costs per-batch commit files and a scheduled task
+# whether or not it holds state, so the count sits well below the core
+# count (r05: 32 -> 8 measured 6.8 s -> 2.8 s on the two-sided join).
+# There are two values because r11's interleaved A/B split the keys:
+# JVM-stateful replays are commit-file/task-quantum bound — 8 -> 2 cut
+# the 8-key JVM basket 13.6 -> 11.4 s best / 16.4 -> 12.1 s median —
+# while the four applyInPandasWithState/TWS operators are Python-worker
+# bound (state partitions are their only parallelism axis), where 8
+# beats 4 (14.8 vs 16.2 s best). A production deployment sets cluster
+# width here instead.
+REPLAY_STATE_PARTITIONS = 2
+PY_STATE_PARTITIONS = 8
+
+
+def _replay_session(
+    spark: SparkSession, partitions: int = REPLAY_STATE_PARTITIONS
+) -> SparkSession:
+    """A clone of ``spark`` (same runtime conf) with ``partitions``
+    shuffle/state partitions, for one replay to build and run in."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    clone.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    return clone
+
 
 def _events_schema(sf_dir: str) -> StructType:
     """Stream-source schema matching the file's actual ``ts`` encoding.
@@ -106,13 +118,8 @@ def _events_schema(sf_dir: str) -> StructType:
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream source over the events parquet, ts → TimestampType."""
-    # Same vanilla-session guards as sources.tables.load_table: UTC so
-    # windowing matches the oracle's naive timestamps, nanosAsLong only
-    # when the file is physically INT64 nanos.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    tables.events_conf(spark, sf_dir)
     schema = _events_schema(sf_dir)
-    if tables.events_ts_encoding(sf_dir) == "nanos_long":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -123,42 +130,40 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _run_to_table(
-    result: DataFrame, name: str, mode: str, state_partitions: int | None = None
-) -> None:
-    """Run the streaming query to completion into a memory sink.
+def _replay_stream(
+    spark: SparkSession,
+    schema: str,
+    path: str,
+    partitions: int = REPLAY_STATE_PARTITIONS,
+) -> DataFrame:
+    """File-stream source over a fixture dir on a replay session, one
+    file per microbatch (file mtimes set the order)."""
+    return (
+        _replay_session(spark, partitions)
+        .readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+    )
 
-    ``state_partitions`` right-sizes the state-store count for the
-    finite replay (streaming state partitioning is fixed by
-    ``shuffle.partitions`` at the first batch; 32 HDFS-backed stores
-    per stateful op is pure checkpoint overhead when the replay state
-    is kilobytes — measured 6.8 s → 2.8 s on the two-sided join). A
-    production deployment sets it to cluster width instead; the conf
-    is restored after the run.
-    """
-    spark = result.sparkSession
-    prev = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+def _run_to_table(result: DataFrame, name: str, mode: str) -> DataFrame:
+    """Run the streaming query to completion into a memory sink and
+    return the sink table, read in the session that ran the query."""
+    q = (
+        result.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return result.sparkSession.table(name)
 
 
 def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming hourly tumbling rollup (twin of q_tumbling_window)."""
     agg = (
-        events_stream(spark, sf_dir)
+        events_stream(_replay_session(spark), sf_dir)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -171,8 +176,7 @@ def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    _run_to_table(agg, "stream_tumbling_agg_sink", "complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    return spark.table("stream_tumbling_agg_sink")
+    return _run_to_table(agg, "stream_tumbling_agg_sink", "complete")
 
 
 SESSION_SCHEMA = StructType(
@@ -237,7 +241,8 @@ def _sessionize_group(
 
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming gap sessionization (twin of q_sessionize)."""
-    events = events_stream(spark, sf_dir).select(
+    replay = _replay_session(spark, PY_STATE_PARTITIONS)
+    events = events_stream(replay, sf_dir).select(
         "user_id", F.unix_micros("ts").alias("ts_us")
     )
     sessions = events.groupBy("user_id").applyInPandasWithState(
@@ -247,10 +252,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    _run_to_table(
-        sessions, "stream_sessionize_sink", "update",
-        state_partitions=PY_STATE_PARTITIONS,
-    )
+    sink = _run_to_table(sessions, "stream_sessionize_sink", "update")
     # The memory sink in update mode APPENDS each microbatch's emits:
     # with a multi-file source (or maxFilesPerTrigger) a session that
     # spans microbatches appears once per batch, earlier rows being
@@ -262,8 +264,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.desc("session_end_us"), F.desc("n_events")
     )
     return (
-        spark.table("stream_sessionize_sink")
-        .withColumn("_rn", F.row_number().over(w))
+        sink.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
@@ -290,7 +291,8 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     when near-in-time duplicates are the target.
     """
     docs = (
-        spark.readStream.schema(_DOCS_SCHEMA)
+        _replay_session(spark)
+        .readStream.schema(_DOCS_SCHEMA)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )
@@ -299,8 +301,7 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.trim(F.regexp_replace(F.lower(F.col("text")), " +", " "))
         ).alias("text_hash")
     ).dropDuplicates(["text_hash"])
-    _run_to_table(hashes, "stream_dedup_exact_sink", "append", state_partitions=REPLAY_STATE_PARTITIONS)
-    return spark.table("stream_dedup_exact_sink")
+    return _run_to_table(hashes, "stream_dedup_exact_sink", "append")
 
 
 def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -313,7 +314,7 @@ def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     1h/30m slide doubles, a 1h/1m slide would 60× the state rows.
     """
     agg = (
-        events_stream(spark, sf_dir)
+        events_stream(_replay_session(spark), sf_dir)
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -322,8 +323,7 @@ def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    _run_to_table(agg, "stream_sliding_agg_sink", "complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    return spark.table("stream_sliding_agg_sink")
+    return _run_to_table(agg, "stream_sliding_agg_sink", "complete")
 
 
 WATERMARK_DELAY_MIN = 30
@@ -354,9 +354,6 @@ def _build_late_fixture(spark: SparkSession, sf_dir: str) -> str:
     cached-path invocation two full-corpus aggregate jobs for values it
     never used. Returns the fixture dir.
     """
-    import os
-    import shutil
-
     def _write_all(out: str) -> None:
         events = load_table_events_us(spark, sf_dir)
         lo, hi = events.agg(F.min("ts_us"), F.max("ts_us")).collect()[0]
@@ -367,21 +364,23 @@ def _build_late_fixture(spark: SparkSession, sf_dir: str) -> str:
         late = f1.filter(
             (F.col("ts_us") < w1_us - _HOUR_US) & (F.col("event_id") % 97 == 0)
         )
-
-        def _write(df, name: str, mtime: int) -> None:
-            tmp = os.path.join(out, f"_stage_{name}")
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-            dest = os.path.join(out, name)
-            os.replace(os.path.join(tmp, part), dest)
-            shutil.rmtree(tmp, ignore_errors=True)
-            os.utime(dest, (mtime, mtime))
-
-        _write(f1, "batch1.parquet", 1_000_000_000)
-        _write(f2, "batch2.parquet", 1_000_000_100)
-        _write(late, "batch3.parquet", 1_000_000_200)
+        _write_file(f1, out, "batch1.parquet", 1_000_000_000)
+        _write_file(f2, out, "batch2.parquet", 1_000_000_100)
+        _write_file(late, out, "batch3.parquet", 1_000_000_200)
 
     return cached_sink_dir("late_fixture", sf_dir, ("events",), _write_all)
+
+
+def _write_file(df: DataFrame, out: str, name: str, mtime: int) -> None:
+    """Write ``df`` as the single parquet file ``out/name`` with the
+    given mtime, which orders the file-stream replay."""
+    tmp = os.path.join(out, f"_stage_{name}")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
+    dest = os.path.join(out, name)
+    os.replace(os.path.join(tmp, part), dest)
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.utime(dest, (mtime, mtime))
 
 
 def load_table_events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -389,6 +388,16 @@ def load_table_events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return load_table(spark, sf_dir, "events").select(
         "event_id", F.unix_micros("ts").alias("ts_us"), "event_type"
+    )
+
+
+def _late_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 3-batch late fixture as a watermarked replay stream."""
+    path = _build_late_fixture(spark, sf_dir)
+    return (
+        _replay_stream(spark, "event_id LONG, ts_us LONG, event_type STRING", path)
+        .withColumn("ts", F.timestamp_micros("ts_us"))
+        .withWatermark("ts", f"{WATERMARK_DELAY_MIN} minutes")
     )
 
 
@@ -411,24 +420,8 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally asserts the late set is non-empty and overlaps
     emitted windows — the drop is load-bearing, not vacuous.
     """
-    import shutil
-
-    path = _build_late_fixture(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts_us", LongType()),
-            StructField("event_type", StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-        .withColumn("ts", F.timestamp_micros("ts_us"))
-    )
     agg = (
-        stream.withWatermark("ts", f"{WATERMARK_DELAY_MIN} minutes")
+        _late_stream(spark, sf_dir)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -437,11 +430,7 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    _run_to_table(agg, "stream_late_data_sink", "append", state_partitions=REPLAY_STATE_PARTITIONS)
-    result = spark.table("stream_late_data_sink")
-    rows = result.count()  # materialized in the memory sink
-    assert rows >= 0
-    return result  # fixture dir is cached; cleaned at process exit
+    return _run_to_table(agg, "stream_late_data_sink", "append")
 
 
 def _run_dedup_within_watermark(
@@ -449,46 +438,21 @@ def _run_dedup_within_watermark(
 ) -> tuple[DataFrame, list]:
     """Run the bounded-state streaming dedup over the 3-batch late
     fixture; returns (emitted table, per-batch progress metrics)."""
-    import shutil
-
-    path = _build_late_fixture(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts_us", LongType()),
-            StructField("event_type", StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-        .withColumn("ts", F.timestamp_micros("ts_us"))
-    )
     dd = (
-        stream.withWatermark("ts", f"{WATERMARK_DELAY_MIN} minutes")
+        _late_stream(spark, sf_dir)
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "ts_us", "event_type")
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(REPLAY_STATE_PARTITIONS)
+    name = "stream_dedup_within_watermark_sink"
+    q = (
+        dd.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        q = (
-            dd.writeStream.format("memory")
-            .queryName("stream_dedup_within_watermark_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        progress = [p for p in q.recentProgress]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    result = spark.table("stream_dedup_within_watermark_sink")
-    result.count()  # materialized in the memory sink
-    return result, progress  # fixture dir is cached; cleaned at exit
+    q.awaitTermination()
+    return dd.sparkSession.table(name), q.recentProgress
 
 
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -523,7 +487,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_city_directories_spark.sources.tables import load_table
 
-    ev = events_stream(spark, sf_dir)
+    ev = events_stream(_replay_session(spark), sf_dir)
     customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
@@ -535,8 +499,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dec2("value")).cast("double").alias("total_value"),
         )
     )
-    _run_to_table(agg, "stream_static_join_sink", "complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    return spark.table("stream_static_join_sink")
+    return _run_to_table(agg, "stream_static_join_sink", "complete")
 
 
 JOIN_WINDOW_MIN = 30
@@ -562,7 +525,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``readStream`` scans would be (r02 shape) — at 100 TB/day the
     difference is a second full pass over the firehose.
     """
-    ev = events_stream(spark, sf_dir).filter(
+    ev = events_stream(_replay_session(spark), sf_dir).filter(
         F.col("event_type").isin("purchase", "click")
     )
     purchases = (
@@ -588,8 +551,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("p_ts").alias("p_ts_us"),
         F.unix_micros("c_ts").alias("c_ts_us"),
     )
-    _run_to_table(joined, "stream_stream_join_sink", "append", state_partitions=REPLAY_STATE_PARTITIONS)
-    return spark.table("stream_stream_join_sink")
+    return _run_to_table(joined, "stream_stream_join_sink", "append")
 
 
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -608,7 +570,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions emit exactly once and state stays bounded by the gap.
     """
     sessions = (
-        events_stream(spark, sf_dir)
+        events_stream(_replay_session(spark), sf_dir)
         .groupBy(
             F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("w"),
             "user_id",
@@ -623,10 +585,10 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    _run_to_table(
-        sessions, "stream_session_window_sink", "complete", state_partitions=REPLAY_STATE_PARTITIONS
-    )
-    return spark.table("stream_session_window_sink")
+    return _run_to_table(sessions, "stream_session_window_sink", "complete")
+
+
+_PURCHASE_SCHEMA = "user_id LONG, ts_us LONG, event_id LONG, value DOUBLE"
 
 
 def _purchase_replay_source(spark: SparkSession, sf_dir: str) -> str:
@@ -634,45 +596,42 @@ def _purchase_replay_source(spark: SparkSession, sf_dir: str) -> str:
     multi-microbatch fixture for the foreachBatch merge and the
     StatefulProcessor operator (``maxFilesPerTrigger=1`` gives each
     file its own microbatch, so cross-batch state provably
-    accumulates). Written once per (process, sf_dir, events stamp);
-    the split-point aggregate lives inside the write closure (r11) so
-    a cached-path call costs zero Spark jobs."""
-    import os
-    import shutil
-
+    accumulates)."""
     from etl_city_directories_spark.sources.tables import load_table
 
-    def _write_all(src_dir: str) -> None:
-        purchases = (
-            load_table(spark, sf_dir, "events")
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                "user_id",
-                F.unix_micros("ts").alias("ts_us"),
-                "event_id",
-                dec2("value").cast("double").alias("value"),
-            )
-        )
-        lo, hi = purchases.agg(F.min("ts_us"), F.max("ts_us")).collect()[0]
+    return _time_split_fixture(
+        "fbu_src",
+        sf_dir,
+        lambda: load_table(spark, sf_dir, "events")
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            "user_id",
+            F.unix_micros("ts").alias("ts_us"),
+            "event_id",
+            dec2("value").cast("double").alias("value"),
+        ),
+    )
+
+
+def _time_split_fixture(
+    kind: str, sf_dir: str, feed: Callable[[], DataFrame]
+) -> str:
+    """Write ``feed()`` as b1.parquet / b2.parquet, split at the
+    midpoint of its ``ts_us`` range, b1 first in replay order. Written
+    once per (process, sf_dir, events stamp); the split-point
+    aggregate lives inside the write closure (r11) so a cached-path
+    call costs zero Spark jobs."""
+
+    def _write_all(out: str) -> None:
+        df = feed()
+        lo, hi = df.agg(F.min("ts_us"), F.max("ts_us")).collect()[0]
         split_us = (lo + hi) // 2
+        early = df.filter(F.col("ts_us") < split_us)
+        _write_file(early, out, "b1.parquet", 1_000_000_000)
+        late = df.filter(F.col("ts_us") >= split_us)
+        _write_file(late, out, "b2.parquet", 1_000_000_100)
 
-        def _write(df: DataFrame, name: str, mtime: int) -> None:
-            tmp = os.path.join(src_dir, f"_stage_{name}")
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-            dest = os.path.join(src_dir, name)
-            os.replace(os.path.join(tmp, part), dest)
-            shutil.rmtree(tmp, ignore_errors=True)
-            os.utime(dest, (mtime, mtime))
-
-        _write(
-            purchases.filter(F.col("ts_us") < split_us), "b1.parquet", 1_000_000_000
-        )
-        _write(
-            purchases.filter(F.col("ts_us") >= split_us), "b2.parquet", 1_000_000_100
-        )
-
-    return cached_sink_dir("fbu_src", sf_dir, ("events",), _write_all)
+    return cached_sink_dir(kind, sf_dir, ("events",), _write_all)
 
 
 def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -687,74 +646,49 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matches the batch aggregate of BOTH halves — the property that
     makes streaming jobs restartable in production.
     """
-    import os
-    import shutil
-    import tempfile
+    import pyarrow.parquet as pq
 
     fixture = _purchase_replay_source(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
     src_dir = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
     os.makedirs(src_dir)
+    replay = _replay_session(spark)
 
-    def _agg_query():
-        stream = spark.readStream.schema(
-            "user_id LONG, ts_us LONG, event_id LONG, value DOUBLE"
-        ).parquet(src_dir)
-        return (
-            stream.groupBy("user_id")
+    def _run(file: str, name: str):
+        """Add one fixture file, then run from the shared checkpoint."""
+        shutil.copy(os.path.join(fixture, file), src_dir)
+        q = (
+            replay.readStream.schema(_PURCHASE_SCHEMA)
+            .parquet(src_dir)
+            .groupBy("user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_purchases"),
                 F.sum(dec2("value")).cast("double").alias("total_value"),
             )
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
         )
+        q.awaitTermination()
+        return q
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(REPLAY_STATE_PARTITIONS)
+    # phase 1: only b1 visible; run to completion and STOP
+    _run("b1.parquet", "stream_ckpt_phase1")
+    n_phase1 = replay.table("stream_ckpt_phase1").count()
+    assert n_phase1 > 0, "phase 1 must aggregate something"
+    # phase 2: b2 arrives; RESTART from the same checkpoint
+    q2 = _run("b2.parquet", "stream_checkpoint_recovery_sink")
+    # recovery proof: the restarted query read ONLY the new file
+    total_in = sum(p.get("numInputRows", 0) for p in q2.recentProgress)
+    b2_rows = pq.read_metadata(os.path.join(fixture, "b2.parquet")).num_rows
+    assert total_in == b2_rows, (
+        f"restart reprocessed data: read {total_in}, b2 has {b2_rows}"
     )
-    try:
-        # phase 1: only b1 visible; run to completion and STOP
-        shutil.copy(os.path.join(fixture, "b1.parquet"), src_dir)
-        q1 = (
-            _agg_query()
-            .writeStream.format("memory")
-            .queryName("stream_ckpt_phase1")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q1.awaitTermination()
-        n_phase1 = spark.table("stream_ckpt_phase1").count()
-        assert n_phase1 > 0, "phase 1 must aggregate something"
-        # phase 2: b2 arrives; RESTART from the same checkpoint
-        shutil.copy(os.path.join(fixture, "b2.parquet"), src_dir)
-        q2 = (
-            _agg_query()
-            .writeStream.format("memory")
-            .queryName("stream_checkpoint_recovery_sink")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q2.awaitTermination()
-        # recovery proof: the restarted query read ONLY the new file
-        progs = [p for p in q2.recentProgress if p.get("numInputRows", 0) > 0]
-        total_in = sum(p["numInputRows"] for p in progs)
-        import pyarrow.parquet as _pq
-
-        b2_rows = _pq.read_metadata(
-            os.path.join(fixture, "b2.parquet")
-        ).num_rows
-        assert total_in == b2_rows, (
-            f"restart reprocessed data: read {total_in}, b2 has {b2_rows}"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     rolling_dir(spark, (sf_dir, "ckpt"), work)  # keep live for the returned plan
-    return spark.table("stream_checkpoint_recovery_sink").orderBy("user_id")
+    return replay.table("stream_checkpoint_recovery_sink").orderBy("user_id")
 
 
 def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -766,61 +700,54 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     value sums accumulate across the microbatches (complete mode);
     the DuckDB batch aggregate is the oracle, so the custom source's
     offset planning provably loses/duplicates nothing."""
-    from etl_city_directories_spark.sources.events_stream_source import (
-        events_replay_stream,
-    )
-
-    import re as _re
-    import time as _time
+    import json
+    import re
+    import time
 
     from etl_city_directories_spark.sources.events_stream_source import (
         _row_count,
+        events_replay_stream,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src = events_replay_stream(spark, sf_dir, batches=3)
+    replay = _replay_session(spark)
+    tables.events_conf(replay, sf_dir)
     agg = (
-        src.groupBy("event_type")
+        events_replay_stream(replay, sf_dir, batches=3)
+        .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(dec2("value")).cast("double").alias("total_value"),
         )
     )
-    import json as _json
-
     total = _row_count(f"{sf_dir}/events.parquet")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(REPLAY_STATE_PARTITIONS)
+    # availableNow would freeze the bound at the FIRST latestOffset
+    # call (one giant batch); a processing-time trigger lets the
+    # source advance its offset 3×. Stop when the committed batches
+    # account for EVERY file row exactly — cumulative numInputRows
+    # == total rules out loss AND duplication, and (unlike waiting
+    # for a trailing empty batch) doesn't stall on Spark's 10 s
+    # noDataProgressEventInterval, which suppresses the empty
+    # batch's progress event and used to cost this query 10.5 s of
+    # pure idle wait (the r04 perf flag).
+    q = (
+        agg.writeStream.format("memory")
+        .queryName("stream_python_source_sink")
+        .outputMode("complete")
+        .trigger(processingTime="50 milliseconds")
+        .start()
     )
     try:
-        # availableNow would freeze the bound at the FIRST latestOffset
-        # call (one giant batch); a processing-time trigger lets the
-        # source advance its offset 3×. Stop when the committed batches
-        # account for EVERY file row exactly — cumulative numInputRows
-        # == total rules out loss AND duplication, and (unlike waiting
-        # for a trailing empty batch) doesn't stall on Spark's 10 s
-        # noDataProgressEventInterval, which suppresses the empty
-        # batch's progress event and used to cost this query 10.5 s of
-        # pure idle wait (the r04 perf flag).
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("stream_python_source_sink")
-            .outputMode("complete")
-            .trigger(processingTime="50 milliseconds")
-            .start()
-        )
-        deadline = _time.time() + 180
-        while _time.time() < deadline:
+        deadline = time.time() + 180
+        while time.time() < deadline:
             p = q.lastProgress
             if p and p.get("sources"):
                 # offset serialization varies (json vs repr); the row
                 # index is the only number in it either way
                 end = str(p["sources"][0].get("endOffset") or "")
-                m = _re.search(r"\d+", end)
+                m = re.search(r"\d+", end)
                 if m and int(m.group()) >= total:
                     consumed = sum(
-                        _json.loads(pp.json).get("numInputRows", 0)
+                        json.loads(pp.json).get("numInputRows", 0)
                         for pp in q.recentProgress
                     )
                     if consumed >= total:
@@ -828,14 +755,13 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                             f"replay duplicated rows: {consumed} > {total}"
                         )
                         break
-            _time.sleep(0.05)
+            time.sleep(0.05)
         else:
             raise TimeoutError("events_replay never reached end offset")
-        q.stop()
-        q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table("stream_python_source_sink").orderBy("event_type")
+        q.stop()  # a processing-time query never stops by itself
+    q.awaitTermination()
+    return replay.table("stream_python_source_sink").orderBy("event_type")
 
 
 _TWS_OUT = StructType(
@@ -869,13 +795,9 @@ def stream_stateful_processor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle pins whichever path executed. With protobuf present the
     typed StatefulProcessor path runs."""
     src = _purchase_replay_source(spark, sf_dir)
-    schema = "user_id LONG, ts_us LONG, event_id LONG, value DOUBLE"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withColumn("cents", F.round(F.col("value") * 100).cast("long"))
-    )
+    stream = _replay_stream(
+        spark, _PURCHASE_SCHEMA, src, PY_STATE_PARTITIONS
+    ).withColumn("cents", F.round(F.col("value") * 100).cast("long"))
     try:
         import google.protobuf  # noqa: F401  (TWS worker dependency)
 
@@ -943,10 +865,7 @@ def stream_stateful_processor(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    _run_to_table(
-        result, "stream_stateful_processor_sink", "update", state_partitions=PY_STATE_PARTITIONS
-    )
-    emitted = spark.table("stream_stateful_processor_sink")
+    emitted = _run_to_table(result, "stream_stateful_processor_sink", "update")
     return (
         emitted.groupBy("user_id")
         .agg(F.max(F.struct("n_purchases", "total_cents")).alias("s"))
@@ -975,7 +894,7 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     finalization contract stream_late_data pins. State is two window
     stores bounded by the watermark; at production scale this is the
     pattern that halves the number of streaming hops."""
-    src = events_stream(spark, sf_dir).withWatermark("ts", "0 seconds")
+    src = events_stream(_replay_session(spark), sf_dir).withWatermark("ts", "0 seconds")
     hourly = (
         src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -997,10 +916,7 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_active_hours").cast("bigint").alias("n_active_hours"),
         )
     )
-    _run_to_table(
-        daily, "stream_chained_windows_sink", "append", state_partitions=REPLAY_STATE_PARTITIONS
-    )
-    return spark.table("stream_chained_windows_sink")
+    return _run_to_table(daily, "stream_chained_windows_sink", "append")
 
 
 def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1021,20 +937,8 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     same code targets a Delta table and the per-batch collapse
     bounds shuffle volume by |batch keys|, not |snapshot|.
     """
-    import os
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from etl_city_directories_spark.sources.tables import load_table
-
-    src = _purchase_replay_source(spark, sf_dir)
-
-    snap_root = tempfile.mkdtemp(prefix="spark_graft_fbu_snap_")
-    holder: dict[str, Any] = {"cur": None, "v": 0}
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        delta = (
+    def _delta(batch: DataFrame) -> DataFrame:
+        return (
             batch.groupBy("user_id")
             .agg(
                 F.max_by(
@@ -1051,59 +955,68 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_purchases",
             )
         )
-        if holder["cur"] is not None:
-            old = batch.sparkSession.read.parquet(holder["cur"])
-            delta = (
-                old.unionByName(delta)
-                .groupBy("user_id")
-                .agg(
-                    F.max_by(
-                        F.struct("last_value", "last_ts_us", "last_event_id"),
-                        F.struct("last_ts_us", "last_event_id"),
-                    ).alias("s"),
-                    F.sum("n_purchases").alias("n_purchases"),
-                )
-                .select("user_id", "s.*", "n_purchases")
+
+    def _merge(both: DataFrame) -> DataFrame:
+        return (
+            both.groupBy("user_id")
+            .agg(
+                F.max_by(
+                    F.struct("last_value", "last_ts_us", "last_event_id"),
+                    F.struct("last_ts_us", "last_event_id"),
+                ).alias("s"),
+                F.sum("n_purchases").alias("n_purchases"),
             )
-        nxt = os.path.join(snap_root, f"v{holder['v']}")
-        delta.write.mode("overwrite").parquet(nxt)
-        holder["cur"], holder["v"] = nxt, holder["v"] + 1
-
-    stream_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("ts_us", LongType()),
-            StructField("event_id", LongType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    # right-size the per-batch merge shuffle for the finite replay
-    # (same rationale as _run_to_table's state_partitions)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(REPLAY_STATE_PARTITIONS)
-    )
-    try:
-        q = (
-            spark.readStream.schema(stream_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(_merge)
-            .trigger(availableNow=True)
-            .start()
+            .select("user_id", "s.*", "n_purchases")
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert holder["v"] >= 2, "expected >=2 microbatches through the merge"
 
-    # Return the snapshot read DIRECTLY — no driver-side collect of one
-    # row per distinct purchasing user (unbounded at production scale).
-    # The snapshot dir stays alive for the caller; the PREVIOUS
-    # invocation's dir is released here instead (one live snapshot per
-    # session × sf_dir).
-    rolling_dir(spark, (sf_dir,), snap_root)
-    return spark.read.parquet(holder["cur"]).orderBy("user_id")
+    src = _purchase_replay_source(spark, sf_dir)
+    snap = _snapshot_replay(spark, (sf_dir,), src, _PURCHASE_SCHEMA, _delta, _merge)
+    return snap.orderBy("user_id")
+
+
+def _snapshot_replay(
+    spark: SparkSession,
+    key: tuple,
+    src: str,
+    schema: str,
+    delta: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Replay the fixture ``src`` (one file per microbatch) through a
+    ``foreachBatch`` merge into a versioned parquet snapshot, and
+    return the last version as a caller-session frame.
+
+    Batch 1 publishes ``delta(batch)``; every later batch publishes
+    ``merge(old ∪ delta(batch))``, a distributed read-modify-write with
+    one shuffle on the key, as a new version (the plain-parquet
+    stand-in for a Delta/Iceberg MERGE). The snapshot, not the state
+    store, holds the state. Returning the snapshot read directly
+    avoids a driver-side collect of one row per key; ``rolling_dir``
+    keeps this call's snapshot dir alive under ``key`` and releases the
+    previous call's.
+    """
+    snap_root = tempfile.mkdtemp(prefix="spark_graft_snap_")
+    versions: list[str] = []
+
+    def _publish(batch: DataFrame, batch_id: int) -> None:
+        out = delta(batch)
+        if versions:
+            old = batch.sparkSession.read.parquet(versions[-1])
+            out = merge(old.unionByName(out))
+        nxt = os.path.join(snap_root, f"v{len(versions)}")
+        out.write.mode("overwrite").parquet(nxt)
+        versions.append(nxt)
+
+    q = (
+        _replay_stream(spark, schema, src)
+        .writeStream.foreachBatch(_publish)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert len(versions) >= 2, "expected >=2 microbatches through the merge"
+    rolling_dir(spark, key, snap_root)
+    return spark.read.parquet(versions[-1])
 
 
 STREAM_TOPK = 3
@@ -1124,7 +1037,7 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     agg = (
-        events_stream(spark, sf_dir)
+        events_stream(_replay_session(spark), sf_dir)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -1133,13 +1046,12 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    _run_to_table(agg, "stream_topk_sink", "complete", state_partitions=REPLAY_STATE_PARTITIONS)
+    sink = _run_to_table(agg, "stream_topk_sink", "complete")
     wr = W.partitionBy("bucket_start_us").orderBy(
         F.desc("n_events"), F.asc("event_type")
     )
     return (
-        spark.table("stream_topk_sink")
-        .withColumn("rank", F.row_number().over(wr))
+        sink.withColumn("rank", F.row_number().over(wr))
         .filter(F.col("rank") <= STREAM_TOPK)
         .select(
             "bucket_start_us",
@@ -1407,7 +1319,7 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per open bar; the availableNow replay proves the streaming
     result equals the batch candle table."""
     agg = (
-        events_stream(spark, sf_dir)
+        events_stream(_replay_session(spark), sf_dir)
         .filter(F.col("event_type") == "purchase")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(
@@ -1434,8 +1346,7 @@ def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             "volume",
         )
     )
-    _run_to_table(agg, "stream_ohlc_bars_sink", "complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    return spark.table("stream_ohlc_bars_sink")
+    return _run_to_table(agg, "stream_ohlc_bars_sink", "complete")
 
 
 QUERIES["stream_ohlc_bars"] = stream_ohlc_bars
@@ -1468,17 +1379,14 @@ def _cdc_replay_source(spark: SparkSession, sf_dir: str) -> str:
     purchase=U, error=D) — same multi-microbatch fixture shape as
     ``_purchase_replay_source`` so the delete/revive semantics provably
     cross a batch boundary."""
-    import os
-    import shutil
-
     from etl_city_directories_spark.operators.scale_ops import _CDC_OPS
     from etl_city_directories_spark.sources.tables import load_table
 
-    def _write_all(src_dir: str) -> None:
+    def _feed() -> DataFrame:
         op = F.create_map(*[F.lit(x) for kv in _CDC_OPS.items() for x in kv])[
             F.col("event_type")
         ]
-        feed = (
+        return (
             load_table(spark, sf_dir, "events")
             .filter(F.col("event_type").isin(*_CDC_OPS))
             .select(
@@ -1489,22 +1397,8 @@ def _cdc_replay_source(spark: SparkSession, sf_dir: str) -> str:
                 op.alias("op"),
             )
         )
-        lo, hi = feed.agg(F.min("ts_us"), F.max("ts_us")).collect()[0]
-        split_us = (lo + hi) // 2
 
-        def _write(df: DataFrame, name: str, mtime: int) -> None:
-            tmp = os.path.join(src_dir, f"_stage_{name}")
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-            dest = os.path.join(src_dir, name)
-            os.replace(os.path.join(tmp, part), dest)
-            shutil.rmtree(tmp, ignore_errors=True)
-            os.utime(dest, (mtime, mtime))
-
-        _write(feed.filter(F.col("ts_us") < split_us), "b1.parquet", 1_000_000_000)
-        _write(feed.filter(F.col("ts_us") >= split_us), "b2.parquet", 1_000_000_100)
-
-    return cached_sink_dir("cdc_src", sf_dir, ("events",), _write_all)
+    return _time_split_fixture("cdc_src", sf_dir, _feed)
 
 
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1519,15 +1413,8 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     State is O(distinct keys) in the snapshot table, merge cost per
     batch is one shuffle on the key; the availableNow two-batch replay
     proves the result equals the batch CDC apply bit-for-bit."""
-    import os
-    import tempfile
-
-    src = _cdc_replay_source(spark, sf_dir)
-    snap_root = tempfile.mkdtemp(prefix="spark_graft_cdc_snap_")
-    holder: dict[str, Any] = {"cur": None, "v": 0}
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        delta = (
+    def _delta(batch: DataFrame) -> DataFrame:
+        return (
             batch.groupBy("user_id")
             .agg(
                 F.max_by(
@@ -1551,67 +1438,37 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_deletes",
             )
         )
-        if holder["cur"] is not None:
-            old = batch.sparkSession.read.parquet(holder["cur"])
-            delta = (
-                old.unionByName(delta)
-                .groupBy("user_id")
-                .agg(
-                    F.max_by(
-                        F.struct(
-                            "last_op", "last_value", "last_ts_us", "last_event_id"
-                        ),
-                        F.struct("last_ts_us", "last_event_id"),
-                    ).alias("s"),
-                    F.sum("n_ops").alias("n_ops"),
-                    F.sum("n_inserts").alias("n_inserts"),
-                    F.sum("n_updates").alias("n_updates"),
-                    F.sum("n_deletes").alias("n_deletes"),
-                )
-                .select(
-                    "user_id",
-                    "s.*",
-                    "n_ops",
-                    "n_inserts",
-                    "n_updates",
-                    "n_deletes",
-                )
+
+    def _merge(both: DataFrame) -> DataFrame:
+        return (
+            both.groupBy("user_id")
+            .agg(
+                F.max_by(
+                    F.struct(
+                        "last_op", "last_value", "last_ts_us", "last_event_id"
+                    ),
+                    F.struct("last_ts_us", "last_event_id"),
+                ).alias("s"),
+                F.sum("n_ops").alias("n_ops"),
+                F.sum("n_inserts").alias("n_inserts"),
+                F.sum("n_updates").alias("n_updates"),
+                F.sum("n_deletes").alias("n_deletes"),
             )
-        nxt = os.path.join(snap_root, f"v{holder['v']}")
-        delta.write.mode("overwrite").parquet(nxt)
-        holder["cur"], holder["v"] = nxt, holder["v"] + 1
-
-    stream_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("ts_us", LongType()),
-            StructField("event_id", LongType()),
-            StructField("value", DoubleType()),
-            StructField("op", StringType()),
-        ]
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(REPLAY_STATE_PARTITIONS)
-    )
-    try:
-        q = (
-            spark.readStream.schema(stream_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(_merge)
-            .trigger(availableNow=True)
-            .start()
+            .select(
+                "user_id",
+                "s.*",
+                "n_ops",
+                "n_inserts",
+                "n_updates",
+                "n_deletes",
+            )
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert holder["v"] >= 2, "expected >=2 microbatches through the CDC merge"
 
-    rolling_dir(spark, (sf_dir, "cdc"), snap_root)
+    src = _cdc_replay_source(spark, sf_dir)
+    schema = f"{_PURCHASE_SCHEMA}, op STRING"
+    snap = _snapshot_replay(spark, (sf_dir, "cdc"), src, schema, _delta, _merge)
     return (
-        spark.read.parquet(holder["cur"])
-        .filter(F.col("last_op") != "D")
+        snap.filter(F.col("last_op") != "D")
         .select(
             "user_id",
             "last_op",
@@ -1658,14 +1515,10 @@ def stream_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState fallback otherwise.
     """
     src = _purchase_replay_source(spark, sf_dir)
-    schema = "user_id LONG, ts_us LONG, event_id LONG, value DOUBLE"
     day_us = 86_400_000_000
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withColumn("day", F.expr(f"ts_us div {day_us}"))
-    )
+    stream = _replay_stream(
+        spark, _PURCHASE_SCHEMA, src, PY_STATE_PARTITIONS
+    ).withColumn("day", F.expr(f"ts_us div {day_us}"))
     try:
         import google.protobuf  # noqa: F401
 
@@ -1737,10 +1590,8 @@ def stream_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    _run_to_table(
-        result, "stream_new_vs_returning_sink", "update", state_partitions=PY_STATE_PARTITIONS
-    )
-    emitted = spark.table("stream_new_vs_returning_sink").distinct()
+    emitted = _run_to_table(result, "stream_new_vs_returning_sink", "update")
+    emitted = emitted.distinct()
     return (
         emitted.groupBy("day")
         .agg(
@@ -1792,7 +1643,7 @@ def stream_windowed_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
     COUNT(DISTINCT) exactly.
     """
     ev = (
-        events_stream(spark, sf_dir)
+        events_stream(_replay_session(spark), sf_dir)
         .withWatermark("ts", "1 hour")
         .select(F.window("ts", "1 hour").alias("w"), "user_id")
         .dropDuplicates(["w", "user_id"])
@@ -1805,15 +1656,8 @@ def stream_windowed_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
             F.col("n_distinct_users").cast("bigint").alias("n_distinct_users"),
         )
     )
-    _run_to_table(
-        agg,
-        "stream_windowed_distinct_users_sink",
-        "complete",
-        state_partitions=REPLAY_STATE_PARTITIONS,
-    )
-    return spark.table("stream_windowed_distinct_users_sink").orderBy(
-        "bucket_start_us"
-    )
+    sink = _run_to_table(agg, "stream_windowed_distinct_users_sink", "complete")
+    return sink.orderBy("bucket_start_us")
 
 
 QUERIES["stream_windowed_distinct_users"] = stream_windowed_distinct_users
@@ -1844,13 +1688,9 @@ def stream_zscore_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the double compare. Output: per-user alert counts.
     """
     src = _purchase_replay_source(spark, sf_dir)
-    schema = "user_id LONG, ts_us LONG, event_id LONG, value DOUBLE"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withColumn("cents", F.round(F.col("value") * 100).cast("long"))
-    )
+    stream = _replay_stream(
+        spark, _PURCHASE_SCHEMA, src, PY_STATE_PARTITIONS
+    ).withColumn("cents", F.round(F.col("value") * 100).cast("long"))
     out_schema = "user_id LONG, n_scored LONG, n_alerts LONG"
 
     def _score_group(
@@ -1892,11 +1732,7 @@ def stream_zscore_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    _run_to_table(
-        result, "stream_zscore_alerts_sink", "update",
-        state_partitions=PY_STATE_PARTITIONS,
-    )
-    emitted = spark.table("stream_zscore_alerts_sink")
+    emitted = _run_to_table(result, "stream_zscore_alerts_sink", "update")
     return (
         emitted.groupBy("user_id")
         .agg(
@@ -1966,7 +1802,7 @@ def stream_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle) is exactly the same filter, making this the
     strongest possible stream≡batch equivalence check.
     """
-    ev = events_stream(spark, sf_dir)
+    ev = events_stream(_replay_session(spark), sf_dir)
     keep = (
         F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 12), 16, 10)
         .cast("long")
@@ -1980,8 +1816,8 @@ def stream_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         dec2("value").cast("double").alias("value"),
     )
-    _run_to_table(sampled, "stream_hash_sample_sink", "append")
-    return spark.table("stream_hash_sample_sink").orderBy("event_id")
+    sink = _run_to_table(sampled, "stream_hash_sample_sink", "append")
+    return sink.orderBy("event_id")
 
 
 QUERIES["stream_hash_sample"] = stream_hash_sample
@@ -2015,7 +1851,7 @@ def stream_funnel_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     and at production scale the same rollup is the downstream batch
     job reading the join's sink table.
     """
-    ev = events_stream(spark, sf_dir).filter(
+    ev = events_stream(_replay_session(spark), sf_dir).filter(
         F.col("event_type").isin("purchase", "click")
     )
     purchases = (
@@ -2041,10 +1877,7 @@ def stream_funnel_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
             >= F.col("p_ts") - F.expr(f"INTERVAL {JOIN_WINDOW_MIN} MINUTES")
         ),
     ).select("p_user", "p_id", "p_ts")
-    _run_to_table(
-        joined, "stream_funnel_conversions_sink", "append", state_partitions=REPLAY_STATE_PARTITIONS
-    )
-    emitted = spark.table("stream_funnel_conversions_sink")
+    emitted = _run_to_table(joined, "stream_funnel_conversions_sink", "append")
     return (
         emitted.select(
             F.unix_micros(F.date_trunc("hour", "p_ts")).alias("hour_us"),
@@ -2069,7 +1902,7 @@ def stream_error_share_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     subscribes to.
     """
     agg = (
-        events_stream(spark, sf_dir)
+        events_stream(_replay_session(spark), sf_dir)
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_total"),
@@ -2083,11 +1916,8 @@ def stream_error_share_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_err",
         )
     )
-    _run_to_table(
-        agg, "stream_error_share_hourly_sink", "complete", state_partitions=REPLAY_STATE_PARTITIONS
-    )
     return (
-        spark.table("stream_error_share_hourly_sink")
+        _run_to_table(agg, "stream_error_share_hourly_sink", "complete")
         .select(
             "hour_us",
             F.col("n_total").cast("bigint").alias("n_total"),
@@ -2148,17 +1978,14 @@ def stream_max_event_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins the 1-row frontier scalar batch-side over the sink.
     """
     agg = (
-        events_stream(spark, sf_dir)
+        events_stream(_replay_session(spark), sf_dir)
         .groupBy("event_type")
         .agg(
             F.max(F.unix_micros("ts")).alias("max_ts_us"),
             F.count(F.lit(1)).alias("n_events"),
         )
     )
-    _run_to_table(
-        agg, "stream_max_event_time_sink", "complete", state_partitions=REPLAY_STATE_PARTITIONS
-    )
-    sink = spark.table("stream_max_event_time_sink")
+    sink = _run_to_table(agg, "stream_max_event_time_sink", "complete")
     frontier = sink.agg(F.max("max_ts_us").alias("frontier_us"))
     return (
         sink.crossJoin(F.broadcast(frontier))
@@ -2202,7 +2029,7 @@ def stream_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     double divide after the replay — identical arithmetic to the
     batch oracle and order-independent under any microbatch split.
     """
-    ev = events_stream(spark, sf_dir).filter(
+    ev = events_stream(_replay_session(spark), sf_dir).filter(
         F.col("event_type") == "purchase"
     )
     k = F.get_json_object("props", "$.k").cast("long")
@@ -2231,8 +2058,7 @@ def stream_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("vwap"),
         )
     )
-    _run_to_table(agg, "stream_vwap_sink", "complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    return spark.table("stream_vwap_sink")
+    return _run_to_table(agg, "stream_vwap_sink", "complete")
 
 
 QUERIES["stream_vwap"] = stream_vwap
@@ -2268,7 +2094,7 @@ def stream_entropy_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot touch it (counters are split-invariant integers).
     """
     agg = (
-        events_stream(spark, sf_dir)
+        events_stream(_replay_session(spark), sf_dir)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("c"))
         .select(
@@ -2277,9 +2103,7 @@ def stream_entropy_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c",
         )
     )
-    _run_to_table(agg, "stream_entropy_hourly_sink", "complete",
-                  state_partitions=REPLAY_STATE_PARTITIONS)
-    sink = spark.table("stream_entropy_hourly_sink")
+    sink = _run_to_table(agg, "stream_entropy_hourly_sink", "complete")
     from pyspark.sql import Window as W
 
     w_hour = W.partitionBy("hour_start_us")
@@ -2320,7 +2144,7 @@ def stream_moments_jb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_city_directories_spark.operators.stats import _JB_SELECT
 
-    ev = events_stream(spark, sf_dir)
+    ev = events_stream(_replay_session(spark), sf_dir)
     c = (dec2("value") * 100).cast("long").cast("decimal(18,0)")
     agg = (
         ev.select("event_type", c.alias("c"))
@@ -2337,10 +2161,8 @@ def stream_moments_jb(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("s4"),
         )
     )
-    _run_to_table(agg, "stream_moments_jb_sink", "complete",
-                  state_partitions=REPLAY_STATE_PARTITIONS)
     return (
-        spark.table("stream_moments_jb_sink")
+        _run_to_table(agg, "stream_moments_jb_sink", "complete")
         .selectExpr(*_JB_SELECT)
         .orderBy("event_type")
     )
@@ -2385,15 +2207,13 @@ def stream_daily_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-side over the materialized sink, exactly the batch
     operator's math on exactly the batch operator's grid.
     """
-    ev = events_stream(spark, sf_dir).filter(
+    ev = events_stream(_replay_session(spark), sf_dir).filter(
         F.col("event_type") == "purchase"
     )
     agg = ev.groupBy(
         F.date_format("ts", "yyyy-MM-dd").alias("day")
     ).agg((F.sum(dec2("value")) * 100).cast("bigint").alias("cents"))
-    _run_to_table(agg, "stream_daily_drawdown_sink", "complete",
-                  state_partitions=REPLAY_STATE_PARTITIONS)
-    sink = spark.table("stream_daily_drawdown_sink")
+    sink = _run_to_table(agg, "stream_daily_drawdown_sink", "complete")
     from pyspark.sql import Window as W
 
     w = W.partitionBy().orderBy("day").rowsBetween(
@@ -2436,7 +2256,7 @@ def stream_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream ≡ batch.
     """
     users = (
-        events_stream(spark, sf_dir)
+        events_stream(_replay_session(spark), sf_dir)
         .select("user_id")
         .dropDuplicates(["user_id"])
     )
@@ -2450,10 +2270,10 @@ def stream_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(arm_a, 1).otherwise(0)).alias("na"),
         F.sum(F.when(arm_a, 0).otherwise(1)).alias("nb"),
     )
-    _run_to_table(agg, "stream_srm_monitor_sink", "complete", state_partitions=REPLAY_STATE_PARTITIONS)
+    sink = _run_to_table(agg, "stream_srm_monitor_sink", "complete")
     from etl_city_directories_spark.operators.forecast import _SRM_SELECT
 
-    return spark.table("stream_srm_monitor_sink").selectExpr(*_SRM_SELECT)
+    return sink.selectExpr(*_SRM_SELECT)
 
 
 QUERIES["stream_srm_monitor"] = stream_srm_monitor
@@ -2481,9 +2301,6 @@ def stream_ivm_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: per-batch cost is one broadcast join + a shuffle on
     |batch nations| partials; the snapshot is O(nations).
     """
-    import os
-    import tempfile
-
     from etl_city_directories_spark.sources.tables import load_table
 
     cust = load_table(spark, sf_dir, "customer").select(
@@ -2497,12 +2314,8 @@ def stream_ivm_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("c_custkey").alias("user_id"), "nation")
     )
 
-    src = _purchase_replay_source(spark, sf_dir)
-    snap_root = tempfile.mkdtemp(prefix="spark_graft_ivm_snap_")
-    holder: dict[str, Any] = {"cur": None, "v": 0}
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        delta = (
+    def _delta(batch: DataFrame) -> DataFrame:
+        return (
             batch.join(F.broadcast(dim), "user_id")
             .groupBy("nation")
             .agg(
@@ -2512,56 +2325,22 @@ def stream_ivm_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("cents"),
             )
         )
-        if holder["cur"] is not None:
-            old = batch.sparkSession.read.parquet(holder["cur"])
-            delta = (
-                old.unionByName(delta)
-                .groupBy("nation")
-                .agg(
-                    F.sum("n_purchases").alias("n_purchases"),
-                    F.sum("cents").cast("decimal(38,0)").alias("cents"),
-                )
-            )
-        nxt = os.path.join(snap_root, f"v{holder['v']}")
-        delta.write.mode("overwrite").parquet(nxt)
-        holder["cur"], holder["v"] = nxt, holder["v"] + 1
 
-    stream_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("ts_us", LongType()),
-            StructField("event_id", LongType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(REPLAY_STATE_PARTITIONS)
-    )
-    try:
-        q = (
-            spark.readStream.schema(stream_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(_merge)
-            .trigger(availableNow=True)
-            .start()
+    def _merge(both: DataFrame) -> DataFrame:
+        return both.groupBy("nation").agg(
+            F.sum("n_purchases").alias("n_purchases"),
+            F.sum("cents").cast("decimal(38,0)").alias("cents"),
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert holder["v"] >= 2, "expected >=2 microbatches through the view merge"
 
-    rolling_dir(spark, (sf_dir, "ivm"), snap_root)
-    return (
-        spark.read.parquet(holder["cur"])
-        .select(
-            "nation",
-            F.col("n_purchases").cast("bigint").alias("n_purchases"),
-            F.col("cents").cast("bigint").alias("revenue_cents"),
-        )
-        .orderBy("nation")
+    src = _purchase_replay_source(spark, sf_dir)
+    snap = _snapshot_replay(
+        spark, (sf_dir, "ivm"), src, _PURCHASE_SCHEMA, _delta, _merge
     )
+    return snap.select(
+        "nation",
+        F.col("n_purchases").cast("bigint").alias("n_purchases"),
+        F.col("cents").cast("bigint").alias("revenue_cents"),
+    ).orderBy("nation")
 
 
 QUERIES["stream_ivm_view"] = stream_ivm_view

@@ -264,3 +264,52 @@ def test_stream_cdc_apply_equals_batch_merge(spark):
             w.last_op, w.last_value, w.last_ts_us,
             w.n_ops, w.n_inserts, w.n_updates, w.n_deletes,
         ), (g, w)
+
+
+def test_replays_leave_the_caller_session_alone(spark, monkeypatch):
+    """Each replay builds and runs in a clone of the caller's session:
+    its state operators use the replay's own partition count, the
+    caller's conf is never written, and no memory-sink view lands in
+    the caller's catalog."""
+    import pyspark.sql.streaming.readwriter as rw
+
+    from etl_city_directories_spark.streaming import stream_ops as so
+
+    expect = {
+        "stream_tumbling_agg": so.REPLAY_STATE_PARTITIONS,  # JVM state store
+        "stream_sessionize": so.PY_STATE_PARTITIONS,  # Python state
+        "stream_foreachbatch_upsert": None,  # snapshot merge, no state store
+        "stream_checkpoint_recovery": so.REPLAY_STATE_PARTITIONS,
+    }
+    started = []
+    orig_start = rw.DataStreamWriter.start
+
+    def _start(self, *args, **kwargs):
+        q = orig_start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(rw.DataStreamWriter, "start", _start)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        for name, parts in expect.items():
+            started.clear()
+            so.QUERIES[name](spark, SF).collect()
+            assert started, name
+            ops = [
+                op
+                for q in started
+                for p in q.recentProgress
+                for op in p["stateOperators"]
+            ]
+            if parts is not None:
+                assert ops, name
+            assert {op["numShufflePartitions"] for op in ops} <= {parts}, (name, ops)
+            assert spark.conf.get(key) == "5", name
+        views = {t.name for t in spark.catalog.listTables()}
+        sinks = {f"{n}_sink" for n in expect} | {"stream_ckpt_phase1"}
+        assert not views & sinks, views & sinks
+    finally:
+        spark.conf.set(key, prev)
