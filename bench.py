@@ -19,21 +19,19 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod
 from etl_city_directories_spark.functions import memo
-from etl_city_directories_spark.session import get_spark
+from etl_city_directories_spark.session import get_spark, int_env
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    queries = entry_mod.queries()
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
+    # knobs are checked before Spark starts, so a bad value fails fast
+    runs = int_env("SPARK_GRAFT_BENCH_RUNS", "2")
     # Sweep de-contention: Spark's ContextCleaner only releases stale
     # broadcast variables / shuffle files when the DRIVER JVM garbage
     # collects, and with an 8g heap a 338-query sweep rarely GCs on its
@@ -41,7 +39,10 @@ def main() -> None:
     # (r5→r6 overlap ratio 1.17x with zero plan changes). An explicit
     # System.gc() every GC_EVERY queries keeps per-key timings tracking
     # plans instead of sweep depth.
-    gc_every = int(os.environ.get("SPARK_GRAFT_BENCH_GC_EVERY", "25"))
+    gc_every = int_env("SPARK_GRAFT_BENCH_GC_EVERY", "25", minimum=0)
+    spark = get_spark("bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    queries = entry_mod.queries()
     try:
         # py4j-only handle; absent under Spark Connect / non-py4j
         # runtimes, and System.gc() is advisory anyway — degrade to
@@ -94,11 +95,7 @@ def main() -> None:
     # this file; humans and
     # later rounds diff it against the archived BENCH_r{N}.json.
     detail_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_DETAIL",
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "tools", "simlogs", "bench_last_detail.json",
-        ),
+        "SPARK_GRAFT_BENCH_DETAIL", os.path.join(ROOT, "bench_last_detail.json")
     )
     if detail_path:
         try:

@@ -17,8 +17,6 @@ float noise below 1e-6 can't flip ranks across engines.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -112,16 +110,6 @@ KMEANS_ITERS = 2
 IVF_NPROBE = 2
 
 
-def _ivf_n_cells() -> int:
-    """Resolve the IVF/SemDeDup cell count K. Defaults to N_CELLS=8 —
-    the value the bit-exact Lloyd DuckDB oracles replay. Production
-    scales K ~ sqrt(n) (SemDeDup used 50k cells for LAION); the
-    SPARK_GRAFT_IVF_CELLS env override lets the scale probe resize K
-    with N and show the within-cell (N/K)² cost stays linear when K
-    follows the data, without touching the oracle-pinned default."""
-    return int(os.environ.get("SPARK_GRAFT_IVF_CELLS", N_CELLS))
-
-
 def _dist2(v: Column, c: Column) -> Column:
     """Squared L2 distance as a sequential left fold (bit-identical to
     the DuckDB list_reduce fold)."""
@@ -159,7 +147,6 @@ def kmeans_cells(spark: SparkSession, sf_dir: str, n_best: int = 1) -> DataFrame
     construction runs once, every query amortizes it (functions.memo).
     """
     vecs = _vectors(spark, sf_dir)
-    n_cells = _ivf_n_cells()
     return vecs.join(
         memo_df(
             spark,
@@ -167,10 +154,10 @@ def kmeans_cells(spark: SparkSession, sf_dir: str, n_best: int = 1) -> DataFrame
                 "ivf_cells",
                 sf_dir,
                 n_best,
-                n_cells,
+                N_CELLS,
                 table_stamp(sf_dir, ("embeddings",)),
             ),
-            lambda: _kmeans_assign(spark, sf_dir, n_best, n_cells),
+            lambda: _kmeans_assign(spark, sf_dir, n_best, N_CELLS),
         ),
         "vec_id",
     )
@@ -241,6 +228,24 @@ def _kmeans_assign(
     return assigned.select("vec_id", "cell", "cell_rank")
 
 
+def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The IVF index: every vector with its IVF_NPROBE nearest cells.
+    Memoized because the index is reused across queries (the EDBT 2020
+    incremental top-k search setting): ann_ivf_bucketed, ann_ivf_pq,
+    emb_hard_negatives and emb_ivf_balance all probe the same one."""
+    return memo_df(
+        spark,
+        (
+            "ivf_vecs",
+            sf_dir,
+            IVF_NPROBE,
+            N_CELLS,
+            table_stamp(sf_dir, ("embeddings",)),
+        ),
+        lambda: kmeans_cells(spark, sf_dir, n_best=IVF_NPROBE),
+    )
+
+
 def ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: k-means-trained coarse cells; each probe searches its
     IVF_NPROBE nearest cells, the corpus lives in its rank-1 cell. The
@@ -248,18 +253,7 @@ def ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     × vs brute force; recall vs brute force is asserted in
     tests/test_dedup_quality.py. A probe's nprobe cells are distinct,
     so no pair dedup is needed."""
-    # cell assignments ARE the IVF index — build once per data stamp
-    vecs = memo_df(
-        spark,
-        (
-            "ivf_vecs",
-            sf_dir,
-            IVF_NPROBE,
-            _ivf_n_cells(),
-            table_stamp(sf_dir, ("embeddings",)),
-        ),
-        lambda: kmeans_cells(spark, sf_dir, n_best=IVF_NPROBE),
-    )
+    vecs = _ivf_index(spark, sf_dir)
     probes = vecs.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"),
         F.col("cell").alias("bucket"),
@@ -360,6 +354,22 @@ def _buckets_col() -> Column:
 _BUCKETS_COL: Column | None = None
 
 
+def _srp_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The multi-table SRP-LSH index: one (vec_id, v, nrm, t, bucket)
+    row per vector and table. Memoized because the index is reused
+    across queries (ann_lsh_cosine, emb_cosine_threshold_curve), and
+    the 32-projection bucket expressions are the dominant cost."""
+    vecs = _vectors(spark, sf_dir)
+    buckets = _buckets_col()
+    return memo_df(
+        spark,
+        ("srp_hashed", sf_dir, table_stamp(sf_dir, ("embeddings",))),
+        lambda: vecs.select(
+            "vec_id", "v", "nrm", F.posexplode(buckets).alias("t", "bucket")
+        ),
+    )
+
+
 def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signed-random-projection LSH ANN (Charikar 2002): N_TABLES
     independent hash tables of N_PLANES sign bits each; a vector is a
@@ -375,18 +385,7 @@ def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole result) is exactly reproducible. Recall vs brute force
     is asserted in tests/test_dedup_quality.py.
     """
-    vecs = _vectors(spark, sf_dir)
-    buckets = _buckets_col()
-    # The (vec, table, bucket) rows ARE the multi-table LSH index —
-    # memoized per data stamp (probe and corpus sides self-join it,
-    # and the 32-projection bucket expressions are the dominant cost)
-    hashed = memo_df(
-        spark,
-        ("srp_hashed", sf_dir, table_stamp(sf_dir, ("embeddings",))),
-        lambda: vecs.select(
-            "vec_id", "v", "nrm", F.posexplode(buckets).alias("t", "bucket")
-        ),
-    )
+    hashed = _srp_index(spark, sf_dir)
     probes = hashed.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"),
         "t",
@@ -1467,17 +1466,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     new corpus pass. Candidate generation is a broadcast join from the
     rank-1 cell table to the probes' cell lists; the LUT join carries
     probe_id so each probe scores only its own cells' codes."""
-    cells = memo_df(
-        spark,
-        (
-            "ivf_vecs",
-            sf_dir,
-            IVF_NPROBE,
-            _ivf_n_cells(),
-            table_stamp(sf_dir, ("embeddings",)),
-        ),
-        lambda: kmeans_cells(spark, sf_dir, n_best=IVF_NPROBE),
-    )
+    cells = _ivf_index(spark, sf_dir)
     cents, codes = _pq_codebooks(spark, sf_dir)
     vecs = _vectors(spark, sf_dir)
 
@@ -1855,17 +1844,7 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the probe's IVF_NPROBE cells — the bucketed (never
     probe × corpus) scale path, same memoized cell index as
     ann_ivf_bucketed."""
-    cells = memo_df(
-        spark,
-        (
-            "ivf_vecs",
-            sf_dir,
-            IVF_NPROBE,
-            _ivf_n_cells(),
-            table_stamp(sf_dir, ("embeddings",)),
-        ),
-        lambda: kmeans_cells(spark, sf_dir, n_best=IVF_NPROBE),
-    )
+    cells = _ivf_index(spark, sf_dir)
     probes = (
         cells.filter(F.col("vec_id") < N_PROBES)
         .select(
@@ -2370,17 +2349,7 @@ def emb_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_cells means one mega-cell owns the corpus and nprobe tuning
     can't save it.
     """
-    cells = memo_df(
-        spark,
-        (
-            "ivf_vecs",
-            sf_dir,
-            IVF_NPROBE,
-            _ivf_n_cells(),
-            table_stamp(sf_dir, ("embeddings",)),
-        ),
-        lambda: kmeans_cells(spark, sf_dir, n_best=IVF_NPROBE),
-    ).filter(F.col("cell_rank") == 1)
+    cells = _ivf_index(spark, sf_dir).filter(F.col("cell_rank") == 1)
     per_cell = cells.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
     wt = Window.partitionBy()
     return (
@@ -2457,14 +2426,7 @@ def emb_cosine_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     is unchanged.
     """
     vecs = _vectors(spark, sf_dir)
-    buckets = _buckets_col()
-    hashed = memo_df(
-        spark,
-        ("srp_hashed", sf_dir, table_stamp(sf_dir, ("embeddings",))),
-        lambda: vecs.select(
-            "vec_id", "v", "nrm", F.posexplode(buckets).alias("t", "bucket")
-        ),
-    )
+    hashed = _srp_index(spark, sf_dir)
     ids = hashed.select("vec_id", "t", "bucket")
     w_cap = Window.partitionBy("t", "bucket").orderBy(
         F.md5(F.col("vec_id").cast("string")), F.col("vec_id")

@@ -10,18 +10,19 @@ results are timezone-independent.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 
-def _positive_int_env(name: str, default: str) -> int:
+def int_env(name: str, default: str, minimum: int = 1) -> int:
     raw = os.environ.get(name, default)
     try:
         value = int(raw)
     except ValueError:
-        value = 0
-    if value < 1:
-        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
+        value = minimum - 1
+    if value < minimum:
+        raise ValueError(f"{name} must be an integer >= {minimum}, got {raw!r}")
     return value
 
 
@@ -32,6 +33,13 @@ def _bool_env(name: str, default: str) -> str:
     return raw.lower()
 
 
+def _jvm_size_env(name: str, default: str) -> str:
+    raw = os.environ.get(name, default)
+    if not re.fullmatch(r"\d+[kmgt]?", raw, re.IGNORECASE):
+        raise ValueError(f"{name} must be a JVM size such as 8g, got {raw!r}")
+    return raw
+
+
 def get_spark(
     app_name: str = "etl-city-directories-spark",
     cpus: int | None = None,
@@ -40,8 +48,9 @@ def get_spark(
     # env knobs are checked before the session is built: getOrCreate on a
     # live session would otherwise write a bad value into its conf
     if cpus is None:
-        cpus = _positive_int_env("SPARK_GRAFT_CPUS", "32")
+        cpus = int_env("SPARK_GRAFT_CPUS", "32")
     df_debugging = _bool_env("SPARK_GRAFT_DF_DEBUGGING", "false")
+    driver_mem = _jvm_size_env("SPARK_GRAFT_DRIVER_MEM", "8g")
     if shuffle_partitions is None:
         # local mode: one shuffle partition per core; AQE coalesces
         # further at runtime. On a real cluster this would be set to
@@ -75,7 +84,7 @@ def get_spark(
         # micros/millis files). sources.tables.load_table inspects the
         # actual footer per sf_dir and normalizes ts either way.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Python workers import the package from its root, whatever the cwd

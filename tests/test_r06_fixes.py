@@ -3,13 +3,12 @@
 - q_spearman_corr zero-variance guard (NULL, never NaN),
 - multimodal PIL tripwire polarity (log, never raise),
 - dedup_ngram_jaccard per-bucket df cap (hot buckets dropped whole),
-- parameterized IVF cell count K (SPARK_GRAFT_IVF_CELLS override).
+- parameterized IVF cell count K (similarity.N_CELLS).
 """
 
 from __future__ import annotations
 
 import math
-import os
 
 import pyspark.sql.functions as F
 
@@ -153,13 +152,13 @@ def test_ngram_cap_keeps_small_clusters(spark):
 
 
 def test_ivf_cells_env_override(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_IVF_CELLS", "16")
-    assert similarity._ivf_n_cells() == 16
+    default = similarity.N_CELLS
+    monkeypatch.setattr(similarity, "N_CELLS", 16)
     cells = similarity.kmeans_cells(spark, SF_TINY, n_best=1)
     n_cells = cells.select("cell").distinct().count()
     assert n_cells == 16
-    monkeypatch.delenv("SPARK_GRAFT_IVF_CELLS")
-    assert similarity._ivf_n_cells() == similarity.N_CELLS
+    monkeypatch.undo()
+    assert similarity.N_CELLS == default == 8
     # default-K index is memoized under a different key: both coexist
     cells8 = similarity.kmeans_cells(spark, SF_TINY, n_best=1)
-    assert cells8.select("cell").distinct().count() == similarity.N_CELLS
+    assert cells8.select("cell").distinct().count() == default

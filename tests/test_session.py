@@ -14,6 +14,7 @@ from etl_city_directories_spark.session import get_spark
         ("SPARK_GRAFT_DF_DEBUGGING", "1"),
         ("SPARK_GRAFT_CPUS", "0"),
         ("SPARK_GRAFT_CPUS", "abc"),
+        ("SPARK_GRAFT_DRIVER_MEM", "8 GB"),
     ],
 )
 def test_bad_env_knob_fails_early(spark, monkeypatch, knob, value):

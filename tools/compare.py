@@ -1,15 +1,13 @@
 """Local mirror of the driver's correctness gate.
 
 Runs a Spark query and its DuckDB oracle on the same parquet dir and
-compares row count, column names, and an order-insensitive canonical
-value frame. Used by tests/test_correctness.py; keeps surprises out of
-the driver's CORRECTNESS_r{N}.json.
+compares them the way the driver does: column names, row count, then
+the rows with columns sorted by name, every value as ``str()``, rows
+sorted. Used by tests/test_correctness.py and tools/driver_sim.py;
+keeps surprises out of the driver's CORRECTNESS_r{N}.json.
 """
 
 from __future__ import annotations
-
-import datetime as _dt
-import math
 
 import duckdb
 import pandas as pd
@@ -26,25 +24,11 @@ def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def _canon_val(v) -> str:
-    if v is None:
-        return "∅"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(v)
-    if isinstance(v, (_dt.datetime, _dt.date)):
-        return v.isoformat()
-    if isinstance(v, bytes):
-        return v.hex()
-    if isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray":
-        return "[" + ",".join(_canon_val(x) for x in v) + "]"
-    return str(v)
-
-
-def canon_rows(df: pd.DataFrame) -> list[tuple]:
-    df = df.reindex(sorted(df.columns), axis=1)
-    return sorted(tuple(_canon_val(v) for v in row) for row in df.itertuples(index=False))
+def canon(df: pd.DataFrame) -> list[tuple]:
+    """The driver's hash form: columns sorted by name, str() of each
+    value, rows sorted."""
+    cols = sorted(df.columns)
+    return sorted(tuple(str(v) for v in row) for row in df[cols].itertuples(index=False))
 
 
 def compare(spark_df, oracle_sql: str, sf_dir: str) -> dict:
@@ -67,7 +51,7 @@ def compare(spark_df, oracle_sql: str, sf_dir: str) -> dict:
         result["values_match"] = False
         return result
 
-    a, b = canon_rows(spark_pd), canon_rows(oracle_pd)
+    a, b = canon(spark_pd), canon(oracle_pd)
     result["values_match"] = a == b
     if not result["values_match"]:
         diffs = [(x, y) for x, y in zip(a, b) if x != y]

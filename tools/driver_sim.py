@@ -3,7 +3,7 @@ session.get_spark — the r01 gate failure was exactly that difference),
 every queries() entry vs its DuckDB oracle at sf0.01, column-name-sorted
 stringified-row compare (the driver's hash check).
 
-Usage: PYTHONPATH=/root/repo python tools/driver_sim.py [sf_dir] [key ...]
+Usage: python tools/driver_sim.py [sf_dir] [key ...]
 
 Session shape overrides (the r02 ts flip only showed under a vanilla
 session; an ALTERNATE shape catches partitioning-sensitive bugs):
@@ -18,19 +18,15 @@ import time
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the vanilla session sets no executorEnv, so Python workers find the
+# package through the PYTHONPATH the JVM inherits from this process
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 import __spark_entry__ as m  # noqa: E402
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def canon(df) -> list[tuple]:
-    cols = sorted(df.columns)
-    rows = [tuple(str(v) for v in row) for row in df[cols].itertuples(index=False)]
-    return sorted(rows)
+from tools.compare import canon, duckdb_connection  # noqa: E402
 
 
 def cli_sim(spark) -> int:
@@ -192,9 +188,7 @@ def main() -> int:
     rows = m.entry(spark).collect()
     print(f"entry: {len(rows)} rows", flush=True)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    con = duckdb_connection(sf)
 
     qs, os_ = m.queries(), m.oracle_sql()
     n_pass = n_rows_only = n_fail = 0

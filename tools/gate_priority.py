@@ -10,7 +10,7 @@ Ordering policy (the one every round's verdict asks for):
 3. confirmed-green keys by staleness (oldest confirming round first);
 4. rows-only keys already confirmed as `no_oracle`.
 
-Usage: PYTHONPATH=/root/repo python tools/gate_priority.py
+Usage: python tools/gate_priority.py
 Prints the ready-to-paste Python list; diff against
 __spark_entry__._GATE_PRIORITY and commit early in the round.
 """

@@ -8,7 +8,7 @@ generating operators at 1× and K× and prints the runtime ratio; a
 healthy LSH/blocked operator lands near K, an accidental all-pairs
 operator lands near K².
 
-Usage: python tools/scale_probe.py [K]   (default 10)
+Usage: python tools/scale_probe.py [K] [key ...]   (K defaults to 10)
 """
 
 from __future__ import annotations
@@ -207,12 +207,18 @@ OPS = [
 ]
 
 
-# ops whose within-cell pair scoring is quadratic in cell population
-# when the cell count K is held fixed (SemDeDup compares all pairs
-# inside a k-means cell). Production resizes K ~ sqrt(N); the probe
-# replays that policy via SPARK_GRAFT_IVF_CELLS on the big corpus, so
-# the cell should come back near-linear instead of (N/K)².
-RESIZE_CELLS_WITH_N = {"dedup_semantic"}
+# ops over the IVF quantizer (similarity.kmeans_cells). Production
+# resizes its cell count K with N; the probe replays that policy by
+# setting similarity.N_CELLS for the big run, so the per-cell
+# population stays fixed. SemDeDup compares all pairs inside a cell,
+# so at a fixed K it would come back (N/K)² instead of near-linear.
+RESIZE_CELLS_WITH_N = {
+    "dedup_semantic",
+    "ann_ivf_bucketed",
+    "ann_ivf_pq",
+    "emb_hard_negatives",
+    "emb_ivf_balance",
+}
 
 # Verdict bands (ratio = t_big / t_base at K× data):
 # - ratio <= NOTE_BAND*k      → LINEAR-ish: total runtime grew no faster
@@ -234,7 +240,7 @@ HARD = 1.5
 
 # One-line cause notes for cells allowed to sit between NOTE_BAND*k and
 # HARD*k. Each must state the mechanism, not hand-wave; the r6 round
-# backs the map-op notes with a 3-point affine fit (see simlogs).
+# backs the map-op notes with a 3-point affine fit.
 CAUSE_NOTES = {
     "er_blocked_pairs": (
         "data-scaled suffix width holds block population at ~6 rows "
@@ -384,6 +390,8 @@ def main() -> None:
     big = build_corpus(k)
 
     import __spark_entry__ as m
+    from etl_city_directories_spark.functions import memo
+    from etl_city_directories_spark.operators import similarity
     from etl_city_directories_spark.session import get_spark
 
     spark = get_spark("scale-probe")
@@ -397,7 +405,8 @@ def main() -> None:
     # LAION follow the same proportional sizing. Lloyd assignment is
     # O(N·K) under this policy — production trains the quantizer on a
     # fixed-size SAMPLE to keep that flat; at probe sizes it is minor.
-    scaled_cells = max(8, 8 * k)
+    default_cells = similarity.N_CELLS
+    scaled_cells = default_cells * k
 
     n_flagged = 0
     print(f"{'operator':24} {'1x sec':>8} {f'{k}x sec':>8} {'ratio':>6}  verdict")
@@ -406,12 +415,15 @@ def main() -> None:
         failed = None
         for label, sf_dir in (("base", BASE), ("big", big)):
             if name in RESIZE_CELLS_WITH_N and label == "big":
-                os.environ["SPARK_GRAFT_IVF_CELLS"] = str(scaled_cells)
+                similarity.N_CELLS = scaled_cells
             # best-of-2: a single-shot cell is GC/page-cache noise-prone
             # (one stray 4x reading flips the verdict at these sizes)
             best = None
             for _ in range(2):
+                # cold, as in bench.py: a memoized index (IVF cells, PQ
+                # codebooks, LSH buckets) is rebuilt, not read back
                 spark.catalog.clearCache()
+                memo.reset()
                 t0 = time.perf_counter()
                 try:
                     qs[name](spark, sf_dir).collect()
@@ -421,7 +433,7 @@ def main() -> None:
                 dt = time.perf_counter() - t0
                 best = dt if best is None else min(best, dt)
             times[label] = best
-            os.environ.pop("SPARK_GRAFT_IVF_CELLS", None)
+            similarity.N_CELLS = default_cells
             if failed:
                 break
         if failed:
