@@ -40,9 +40,20 @@ def main() -> None:
     # System.gc() every GC_EVERY queries keeps per-key timings tracking
     # plans instead of sweep depth.
     gc_every = int_env("SPARK_GRAFT_BENCH_GC_EVERY", "25", minimum=0)
+    queries = entry_mod.queries()
+    # Optional subset for smoke runs: comma-separated queries() keys.
+    only = os.environ.get("SPARK_GRAFT_BENCH_KEYS", "")
+    if only:
+        wanted = {k.strip() for k in only.split(",") if k.strip()}
+        unknown = sorted(wanted - queries.keys())
+        if unknown or not wanted:
+            raise ValueError(
+                f"SPARK_GRAFT_BENCH_KEYS must name queries() keys; unknown "
+                f"{unknown} in {only!r}"
+            )
+        queries = {k: v for k, v in queries.items() if k in wanted}
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = entry_mod.queries()
     try:
         # py4j-only handle; absent under Spark Connect / non-py4j
         # runtimes, and System.gc() is advisory anyway — degrade to
@@ -50,15 +61,9 @@ def main() -> None:
         jvm_gc = spark.sparkContext._jvm.System.gc
     except Exception:
         jvm_gc = lambda: None  # noqa: E731
-    # Optional subset for smoke runs: comma-separated queries() keys.
-    only = os.environ.get("SPARK_GRAFT_BENCH_KEYS", "")
     timings: dict[str, float] = {}
     # warm the JVM + parquet footer cache once, outside timed region
     entry_mod.entry(spark).collect()
-
-    if only:
-        wanted = {k.strip() for k in only.split(",") if k.strip()}
-        queries = {k: v for k, v in queries.items() if k in wanted}
 
     attempts: dict[str, list[float]] = {}
     for idx, name in enumerate(sorted(queries)):

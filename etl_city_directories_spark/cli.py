@@ -16,7 +16,9 @@ Config keys (mirroring `city-directories.js`):
 
 - ``tableUrl``  — path to the HTML manifest table (:135-160; a local
   path or any Hadoop-readable URI — the sandbox has no network).
-- ``dataUrl``   — directory holding ``{uuid}.tar.gz`` archives.
+- ``dataUrl``   — base URI of the ``{uuid}.tar.gz`` archives (:76-89):
+  ``http(s)://``, ``file://`` or a bare local path; any other scheme
+  fails before the step writes anything.
 - ``minYear`` / ``maxYear`` — optional directory-year window
   (:182-195: keep directories with getMinYear >= minYear and
   getMaxYear <= maxYear).
@@ -73,8 +75,8 @@ from etl_city_directories_spark.operators.citydir import (
     point_geometry,
     validity,
 )
+from etl_city_directories_spark.operators.ingest import fetch_archives
 from etl_city_directories_spark.sources.hocr import read_hocr_lines
-from etl_city_directories_spark.sources.local import local_frame
 from etl_city_directories_spark.sources.manifest import read_manifest
 from etl_city_directories_spark.sources.ndjson import read_ndjson, write_ndjson
 
@@ -94,65 +96,20 @@ def _year_lo() -> Column:
 
 def step_download(spark: SparkSession, cfg: dict, work: str) -> int:
     """Manifest-driven archive fetch with the reference's error-file
-    contract: found archives land in download/data/, misses produce an
-    empty ``{uuid}.xml`` and the run continues (:76-106)."""
-    import pandas as pd
-
+    contract (``ingest.fetch_archives``): found archives land in
+    download/data/, misses produce an empty ``{uuid}.xml`` and the run
+    continues (:76-106)."""
     if not cfg.get("tableUrl") or not cfg.get("dataUrl"):
         # the reference's own config validation (:141-144)
         raise ValueError("Please set both dataUrl and tableUrl in the configuration file")
-    out = _dir(work, "download")
+    out = os.path.join(work, "download")
     data_dir = os.path.join(out, "data")
-    os.makedirs(data_dir, exist_ok=True)
-
     manifest = read_manifest(spark, cfg["tableUrl"])
+    # lazy; built first so a dataUrl scheme it cannot fetch fails here,
+    # before the step writes anything
+    status = fetch_archives(manifest, cfg["dataUrl"], data_dir)
+    os.makedirs(data_dir, exist_ok=True)
     write_ndjson(manifest, os.path.join(out, "manifest.ndjson"))
-
-    try:
-        archives = (
-            spark.read.format("binaryFile")
-            .load(os.path.join(cfg["dataUrl"], "*.tar.gz"))
-            .select(
-                F.regexp_extract(F.col("path"), r"([0-9a-f-]+)\.tar\.gz$", 1).alias(
-                    "uuid"
-                ),
-                "content",
-            )
-        )
-        archives.schema  # force path resolution now, inside the guard
-    except Exception:
-        # no .tar.gz at all: the reference's per-uuid error-file
-        # contract still applies — every manifest row gets an empty
-        # {uuid}.xml and the run continues (:91-97), so an empty
-        # archives frame feeds the left join instead of aborting
-        archives = local_frame(spark, [], "uuid string, content binary")
-
-    def _fetch(batches):
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                if row.content is not None:
-                    fname = f"{row.uuid}.tar.gz"
-                    with open(os.path.join(data_dir, fname), "wb") as f:
-                        f.write(row.content)
-                    rows.append((row.uuid, fname, "downloaded", len(row.content)))
-                else:
-                    fname = f"{row.uuid}.xml"
-                    with open(os.path.join(data_dir, fname), "wb") as f:
-                        f.write(b"")
-                    rows.append((row.uuid, fname, "error", 0))
-            yield pd.DataFrame(
-                rows, columns=["uuid", "filename", "status", "n_bytes"]
-            )
-
-    status = manifest.select("uuid").join(archives, "uuid", "left").mapInPandas(
-        _fetch, "uuid string, filename string, status string, n_bytes long"
-    )
-    # The file writes inside _fetch are idempotent (same path, same
-    # bytes), but a retried/speculated task re-EMITS its rows — dedupe
-    # by uuid so status.ndjson and the download count stay retry-safe
-    # (all rows for a uuid are identical, so any survivor is correct).
-    status = status.dropDuplicates(["uuid"])
     return write_ndjson(status, os.path.join(out, "status.ndjson"))
 
 

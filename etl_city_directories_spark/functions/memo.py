@@ -150,8 +150,16 @@ def rolling_persist(spark: SparkSession, key: tuple, df: DataFrame) -> DataFrame
     Unlike ``memo_df`` this does NOT make later invocations warm — the
     new DataFrame is persisted cold each call, so the bench keeps
     measuring the full per-row transform (shingling etc.); it only
-    bounds storage at one live artifact per callsite."""
+    bounds storage at one live artifact per callsite.
+
+    The old entry is released BEFORE ``df`` is persisted: the cache
+    manager ignores a persist of a plan it already caches, so releasing
+    afterwards would drop the one cache entry the two frames share and
+    leave ``df`` uncached."""
     key = (spark.sparkContext.applicationId, "persist") + key
+    old = _STORE.pop(key, None)
+    if old is not None:
+        _release(old)
     return _rolling(key, df.persist(), DataFrame.unpersist)
 
 

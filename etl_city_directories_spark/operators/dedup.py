@@ -99,6 +99,16 @@ def _shingled_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted (doc_id, shingles) frame every shingle-set operator
+    reads: one rolling key for one plan, so releasing it never uncaches
+    another callsite's copy. Only what downstream reads is persisted
+    (r10, guide §2.3): ``norm``, the full normalized text, and
+    lang/source were dead weight in the blocks and the verify rows."""
+    sh = _shingled_df(spark, sf_dir).select("doc_id", "shingles")
+    return rolling_persist(spark, ("doc_shingles", sf_dir), sh)
+
+
 def minhash_fn(j: int):
     """Arity-1 lambda computing the salted-md5 minhash element hash.
 
@@ -151,17 +161,9 @@ def _minhash_bands(
     """(persisted shingle frame, persisted band table) — the ONE
     definition of the minhash signature + banding pipeline, shared by
     the full self-join LSH and the incremental screen so the two can
-    never drift apart. Both frames use the shared rolling_persist
-    callsite keys: at most one live copy per session × sf_dir."""
-    sh = rolling_persist(
-        spark,
-        ("minhash_sh", sf_dir),
-        # r10 (guide §2.3): persist only what downstream reads — the
-        # banding + verify stages use (doc_id, shingles); norm (the
-        # full normalized text) and lang/source were dead weight in
-        # the materialized blocks and the verify-join rows.
-        _shingled_df(spark, sf_dir).select("doc_id", "shingles"),
-    )
+    never drift apart. Both frames are rolling_persist entries: at
+    most one live copy per session × sf_dir."""
+    sh = _doc_shingles(spark, sf_dir)
     sigs = sh.select(
         "doc_id",
         "shingles",
@@ -564,12 +566,7 @@ def dedup_shared_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers that axis).
     """
     # explode + final join read it; rolling: released on the next call
-    sh = rolling_persist(
-        spark,
-        ("shared_spans_sh", sf_dir),
-        # r10 (guide §2.3): only (doc_id, shingles) is read downstream
-        _shingled_df(spark, sf_dir).select("doc_id", "shingles"),
-    )
+    sh = _doc_shingles(spark, sf_dir)
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
     shared = (
         ex.groupBy("s")
@@ -1439,12 +1436,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set 436k → ~1.2k with no loss on true subsets, which
     share ALL their shingles at df 2). Exact set math stays the
     VERIFY stage."""
-    sh = rolling_persist(
-        spark,
-        ("cont_sh", sf_dir),
-        # r10 (guide §2.3): only (doc_id, shingles) is read downstream
-        _shingled_df(spark, sf_dir).select("doc_id", "shingles"),
-    )
+    sh = _doc_shingles(spark, sf_dir)
     ex = sh.select("doc_id", F.explode("shingles").alias("g"))
     rare = ex.join(
         ex.groupBy("g")
@@ -1545,11 +1537,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows, and a long sort instead of a string sort. (48 bits over
     # ~10^6 distinct shingles: collision expectation ~1e-3 — and a
     # collision changes both engines identically.)
-    sh_docs = rolling_persist(
-        spark,
-        ("novelty_sh", sf_dir),
-        _shingled_df(spark, sf_dir).select("doc_id", "shingles"),
-    )
+    sh_docs = _doc_shingles(spark, sf_dir)
     sh = (
         sh_docs.select("doc_id", F.explode("shingles").alias("gs"))
         .select(
@@ -2143,12 +2131,7 @@ def dedup_minhash_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shares the persisted shingle/signature stages with
     dedup_minhash_lsh; pair mass is the LSH collision set, never n².
     """
-    sh = rolling_persist(
-        spark,
-        ("fidelity_sh", sf_dir),
-        # r10 (guide §2.3): only (doc_id, shingles) is read downstream
-        _shingled_df(spark, sf_dir).select("doc_id", "shingles"),
-    )
+    sh = _doc_shingles(spark, sf_dir)
     sigs = sh.select(
         "doc_id",
         "shingles",
@@ -2281,17 +2264,11 @@ def dedup_band_collision_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     band's pair-join output, so this is the number an operator reads
     BEFORE unleashing the self-join at a new scale.
 
-    Reuses the persisted signature/band build (same rolling_persist
-    key as dedup_minhash_lsh — warm runs share it); the rollup is
-    O(buckets) and the stats are exact integers.
+    Reads the same persisted shingle frame as dedup_minhash_lsh
+    (``_doc_shingles``); the rollup is O(buckets) and the stats are
+    exact integers.
     """
-    sh = rolling_persist(
-        spark,
-        ("minhash_sh", sf_dir),
-        # r10 (guide §2.3): same narrow projection as the primary
-        # minhash_sh callsite — only (doc_id, shingles) is read.
-        _shingled_df(spark, sf_dir).select("doc_id", "shingles"),
-    )
+    sh = _doc_shingles(spark, sf_dir)
     sigs = sh.select(
         "doc_id",
         *[

@@ -18,7 +18,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_city_directories_spark.functions.memo import cached_sink_dir
-from etl_city_directories_spark.sources.hocr import parse_hocr_lines, read_hocr_pages
+from etl_city_directories_spark.sources.hocr import (
+    parse_hocr_lines,
+    read_hocr_lines,
+    read_hocr_pages,
+)
 from etl_city_directories_spark.sources.manifest import read_manifest
 from etl_city_directories_spark.sources.ndjson import read_ndjson, write_ndjson
 
@@ -80,16 +84,16 @@ def validate_base_uri(base_uri: str) -> None:
 
 def default_fetcher(base_uri: str, uuid: str) -> bytes:
     """Resolve ``{base_uri}/{uuid}.tar.gz`` to archive bytes — the
-    pluggable seam under cd_download (the reference's
+    pluggable seam under fetch_archives (the reference's
     ``got.stream(url)`` at city-directories.js:76-89).
 
     Schemes: ``http(s)://`` streams via urllib (the real-remote path —
     loopback-proven in tests/test_sources.py); ``file://`` and bare
     paths read the local/NFS mount. Any OTHER scheme (s3://, hdfs://,
-    gs://…) raises ``ValueError`` up front — ``cd_download`` validates
-    it on the driver so a misconfigured base_uri fails fast instead of
-    silently turning every manifest row into an error artifact; plug a
-    custom ``fetcher`` for object stores. Any per-archive exception is
+    gs://…) raises ``ValueError`` up front — ``fetch_archives``
+    validates it on the driver so a misconfigured base_uri fails fast
+    instead of silently turning every manifest row into an error
+    artifact; plug a custom ``fetcher`` for object stores. Any per-archive exception is
     the caller's error signal; this function never swallows one. Runs
     ON THE EXECUTOR (closure-shipped), so a custom fetcher must be
     picklable.
@@ -106,56 +110,29 @@ def default_fetcher(base_uri: str, uuid: str) -> bytes:
         return f.read()
 
 
-def cd_download(
-    spark: SparkSession,
-    sf_dir: str,
-    dest: str | None = None,
-    base_uri: str | None = None,
+def fetch_archives(
+    manifest: DataFrame,
+    base_uri: str,
+    dest: str,
     fetcher: Callable[[str, str], bytes] | None = None,
 ) -> DataFrame:
-    """The reference's download step re-expressed Spark-first
-    (city-directories.js:76-106 download/downloadCityDirectory,
-    :135-160 manifest fetch).
+    """The reference's download loop (city-directories.js:76-106): each
+    distinct manifest ``uuid`` is fetched from ``{base_uri}/{uuid}.tar.gz``
+    into ``dest`` BY AN EXECUTOR inside ``mapInPandas`` (no driver
+    funnel). A failed fetch writes the reference's error artifact, an
+    empty ``{uuid}.xml``, marks the row ``error`` and the job keeps going
+    (per-archive tolerance, :91-97).
 
-    The manifest drives discovery: one expected ``{uuid}.tar.gz`` per
-    directory row. ``base_uri`` + ``fetcher`` form the remote seam
-    (r8 verdict's What's-missing #1): point ``base_uri`` at any
-    ``http(s)://`` base URL or mounted path and the SAME plan fetches
-    from it — the sandbox default is a ``file://`` dir seeded with the
-    fixture archive. Fetch semantics preserved:
-
-    - each manifest row is fetched BY AN EXECUTOR inside
-      ``mapInPandas`` (one task per manifest partition at scale, no
-      driver funnel), the bytes written to the dataset dir;
-    - a missing/failed archive produces the reference's error
-      artifact — an ``{uuid}.xml`` error file — and the row is marked
-      ``error`` while the job keeps going (per-archive tolerance,
-      :91-97).
-
-    Returns (uuid, filename, status, n_bytes) per manifest row.
-    Rows-only (filesystem side effects); layout + seam asserted in
-    tests/test_sources.py (good archive, failing archive, and a
-    custom-fetcher path).
-    """
+    ``fetcher`` is the remote seam (``default_fetcher`` when None, and
+    then ``base_uri`` is validated here, on the driver, so an s3://-style
+    URI fails fast instead of per row). It runs on the executor, so a
+    custom fetcher must be picklable. Returns the lazy
+    (uuid, filename, status, n_bytes) frame."""
     import pandas as pd
 
-    keep = dest is not None
-    src = None
-    if base_uri is None:
-        src = tempfile.mkdtemp(prefix="spark_graft_dl_src_")
-        shutil.copy(fixture_archive(), src)
-        base_uri = f"file://{src}"
-    if dest is None:
-        dest = tempfile.mkdtemp(prefix="spark_graft_dl_dest_")
     if fetcher is None:
-        # driver-side fast-fail (judge ADVICE r9): an s3://-style
-        # base_uri must error HERE, not per-row on the executors
         validate_base_uri(base_uri)
     fetch = fetcher if fetcher is not None else default_fetcher
-
-    manifest = read_manifest(spark, os.path.join(FIXTURES, "manifest.html")).select(
-        "uuid"
-    )
 
     def _fetch(batches):
         for pdf in batches:
@@ -178,15 +155,47 @@ def cd_download(
                 out, columns=["uuid", "filename", "status", "n_bytes"]
             )
 
-    result = manifest.mapInPandas(
+    return manifest.select("uuid").distinct().mapInPandas(
         _fetch, "uuid string, filename string, status string, n_bytes long"
-    ).orderBy("uuid")
-    result = localize_result(result)
-    if src is not None:
-        shutil.rmtree(src, ignore_errors=True)
-    if not keep:
-        shutil.rmtree(dest, ignore_errors=True)
-    return result
+    )
+
+
+def cd_download(
+    spark: SparkSession,
+    sf_dir: str,
+    dest: str | None = None,
+    base_uri: str | None = None,
+    fetcher: Callable[[str, str], bytes] | None = None,
+) -> DataFrame:
+    """The reference's download step (city-directories.js:76-106
+    download/downloadCityDirectory, :135-160 manifest fetch) over the
+    fixture manifest: ``fetch_archives``, the same core the CLI's
+    download step runs. Point ``base_uri`` at any ``http(s)://`` base
+    URL or mounted path and the same plan fetches from it; the default
+    is a ``file://`` dir seeded with the fixture archive.
+
+    Returns (uuid, filename, status, n_bytes) per manifest row.
+    Rows-only (filesystem side effects); layout + seam asserted in
+    tests/test_sources.py (good archive, failing archive, and a
+    custom-fetcher path).
+    """
+    keep = dest is not None
+    src = None
+    if base_uri is None:
+        src = tempfile.mkdtemp(prefix="spark_graft_dl_src_")
+        shutil.copy(fixture_archive(), src)
+        base_uri = f"file://{src}"
+    if dest is None:
+        dest = tempfile.mkdtemp(prefix="spark_graft_dl_dest_")
+    try:
+        manifest = read_manifest(spark, os.path.join(FIXTURES, "manifest.html"))
+        result = fetch_archives(manifest, base_uri, dest, fetcher).orderBy("uuid")
+        return localize_result(result)
+    finally:
+        if src is not None:
+            shutil.rmtree(src, ignore_errors=True)
+        if not keep:
+            shutil.rmtree(dest, ignore_errors=True)
 
 
 def hocr_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -196,17 +205,13 @@ def hocr_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def hocr_source_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same parse-step output through the Spark 4 Python Data
-    Source (sources.hocr_datasource): one InputPartition per archive,
-    executor-local untar — the pluggable-connector form of hocr_parse.
-    tests/test_hocr_datasource.py pins row-for-row equivalence with
-    the binaryFile+mapInPandas path."""
-    from etl_city_directories_spark.sources.hocr_datasource import (
-        read_hocr_pages_v2,
+    """The same parse-step output through the CLI's one-pass reader
+    (``read_hocr_lines``: one ``binaryFile`` scan, untar, page window
+    and column detection in one Python pass), with the fixture
+    manifest's window for the archive: 2 columns, pages 17-488."""
+    return read_hocr_lines(spark, {fixture_archive(): (2, 17, 488)}).orderBy(
+        "line_index"
     )
-
-    pages = read_hocr_pages_v2(spark, fixture_archive())
-    return parse_hocr_lines(pages, column_count=2).orderBy("line_index")
 
 
 def manifest_parse(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,9 +1,8 @@
 """Events replay as a Spark 4 Python STREAMING Data Source.
 
-The batch half of the connector story is ``hocr_datasource``; this is
-the streaming half — a ``DataSourceStreamReader`` (the partitioned,
-executor-scalable variant, not the driver-side Simple reader) that
-replays the events parquet in deterministic row-range microbatches:
+A ``DataSourceStreamReader`` (the partitioned, executor-scalable
+variant, not the driver-side Simple reader) that replays the events
+parquet in deterministic row-range microbatches:
 
     spark.dataSource.register(EventsReplayDataSource)
     spark.readStream.format("events_replay")

@@ -13,7 +13,7 @@ import pytest
 
 from etl_city_directories_spark import cli
 from etl_city_directories_spark.cli import STEPS, run
-from etl_city_directories_spark.operators.ingest import FIXTURES, fixture_archive
+from etl_city_directories_spark.operators.ingest import FIXTURES, _UUID, fixture_archive
 from perfbench import gen
 from perfbench.etl import check_step
 
@@ -136,6 +136,67 @@ def test_download_with_no_archives_at_all(spark, tmp_path):
     assert all(s["status"] == "error" for s in status)
 
 
+def test_download_over_http(spark, tmp_path, http_archives):
+    """``dataUrl`` is a base URI, as in the reference (:76-89): from a
+    loopback http:// server the one archive it holds downloads byte for
+    byte, and each 404 leaves an empty ``{uuid}.xml`` (:91-97)."""
+    base, archive_bytes = http_archives
+    work = str(tmp_path / "w_http")
+    cfg_path = _write_config(
+        tmp_path, tableUrl=os.path.join(FIXTURES, "manifest.html"), dataUrl=base
+    )
+    counts = run(cfg_path, work, ["download"], spark=spark)
+    status = _read_ndjson_dir(os.path.join(work, "download", "status.ndjson"))
+    assert counts["download"] == len(status) == 4
+    assert [(s["uuid"], s["n_bytes"]) for s in status if s["status"] == "downloaded"] == [
+        (_UUID, len(archive_bytes))
+    ]
+    data = os.path.join(work, "download", "data")
+    with open(os.path.join(data, f"{_UUID}.tar.gz"), "rb") as f:
+        assert f.read() == archive_bytes
+    errors = [s for s in status if s["status"] == "error"]
+    assert len(errors) == 3
+    for s in errors:
+        assert s["filename"] == f"{s['uuid']}.xml"
+        assert os.path.getsize(os.path.join(data, s["filename"])) == 0
+
+
+def test_download_rejects_unfetchable_data_url(spark, tmp_path):
+    """A dataUrl scheme the fetcher cannot serve fails on the driver
+    before the step writes anything, instead of marking every manifest
+    row ``error``."""
+    work = str(tmp_path / "w_s3")
+    cfg_path = _write_config(
+        tmp_path, tableUrl=os.path.join(FIXTURES, "manifest.html"), dataUrl="s3://bucket/cd"
+    )
+    with pytest.raises(ValueError, match="s3"):
+        run(cfg_path, work, ["download"], spark=spark)
+    assert not os.path.exists(os.path.join(work, "download", "status.ndjson"))
+    assert not os.path.exists(os.path.join(work, "download", "manifest.ndjson"))
+
+
+def test_duplicate_manifest_row_is_fetched_once(spark, tmp_path):
+    """The manifest keeps a repeated row, but its archive is fetched
+    once and has one status row."""
+    data = str(tmp_path / "d_dup")
+    os.makedirs(data)
+    shutil.copy(fixture_archive(), data)
+    with open(os.path.join(FIXTURES, "manifest.html"), encoding="utf-8") as f:
+        html = f.read()
+    row = html[html.index(f"<tr><td>{_UUID}"):]
+    row = row[: row.index("</tr>") + len("</tr>")]
+    manifest = str(tmp_path / "manifest.html")
+    with open(manifest, "w", encoding="utf-8") as f:
+        f.write(html.replace(row, row + row))
+    work = str(tmp_path / "w_dup")
+    counts = run(_write_config(tmp_path, tableUrl=manifest, dataUrl=data), work,
+                 ["download"], spark=spark)
+    rows = _read_ndjson_dir(os.path.join(work, "download", "manifest.ndjson"))
+    assert [m["uuid"] for m in rows].count(_UUID) == 2
+    status = _read_ndjson_dir(os.path.join(work, "download", "status.ndjson"))
+    assert counts["download"] == len(status) == len({s["uuid"] for s in status}) == 4
+
+
 def test_parse_silently_skips_missing_archives(cli_work):
     """The reference SKIPS manifest rows whose tar.gz was never
     downloaded instead of erroring (city-directories.js:195's
@@ -241,7 +302,7 @@ def test_geocode_custom_addresses(spark, tmp_path):
 def test_step_counts_match_written_lines(cli_work):
     """Each step returns the row count of its main output, taken from
     the write itself: it must equal the NDJSON lines in the part files
-    (for download, the status rows after dropDuplicates)."""
+    (for download, one status row per distinct manifest uuid)."""
     work, counts = cli_work
     outputs = {
         "download": "status.ndjson",
@@ -311,7 +372,7 @@ def test_geocode_with_no_hits(spark, tmp_path):
 # Spark jobs per step on the fixture run: one write job per output plus
 # the broadcasts and shuffle stages their plans need. A re-read to count
 # rows or a schema-inference pass adds jobs and trips this budget.
-STEP_JOB_BUDGET = {"download": 4, "parse": 3, "geocode": 3, "transform": 5}
+STEP_JOB_BUDGET = {"download": 3, "parse": 3, "geocode": 3, "transform": 5}
 
 
 def _newest_job_id(sc) -> int:

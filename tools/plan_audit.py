@@ -24,11 +24,8 @@ from etl_city_directories_spark.session import get_spark
 
 # ops that legitimately run Python (pandas UDF / mapInPandas)
 PYTHON_OK = {"dedup_simhash", "mm_image_meta", "mm_frame_sample", "mm_audio_meta",
-             "hocr_parse",
-             # Spark 4 Python Data Source: the executor-side archive
-             # reader IS Python by construction (same decode as
-             # hocr_parse, surfaced through the DataSource API)
-             "hocr_source_v2",
+             # archive untar + hOCR decode in one Python pass
+             "hocr_parse", "hocr_source_v2",
              # trained-perceptron decode: broadcast weights + Arrow-batched
              # mapInPandas IS the operator (the reference shells to a CRF)
              "cd_parse_tagged",
