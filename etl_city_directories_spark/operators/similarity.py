@@ -1106,7 +1106,7 @@ ORACLES["ann_rrf_hybrid"] = _rrf_oracle()
 
 
 # ---------------------------------------------------------------------------
-# r04 session 2: MMR diversity re-ranking (unrolled greedy selection)
+# r04 session 2: MMR diversity re-ranking (greedy selection per probe)
 # ---------------------------------------------------------------------------
 
 MMR_LAMBDA = 0.7
@@ -1122,14 +1122,16 @@ def ann_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval stack (dedups near-identical hits that plain top-k
     returns).
 
-    Greedy selection is inherently sequential, but K is a small
-    constant, so the loop UNROLLS into K relational selection rounds
-    (the same device as graph_pagerank_dupes' unrolled power
-    iterations): each round is one join against the selected set, one
-    max-sim aggregate, and one per-probe argmax window — all on the
-    tiny candidate table (|probes| × MMR_CAND rows), while the only
-    corpus-scale work remains the initial candidate scan. Scores are
-    rounded to 6dp with id tie-breaks, so DuckDB replays every round
+    The only corpus-scale work is the broadcast-probe candidate scan.
+    Its ``(rel desc, cid asc)`` top-MMR_CAND window and the group that
+    gathers each probe's candidates (relevance, id, vector, norm) into
+    one array share one ``probe_id`` shuffle. The rest is one program
+    per probe, with no further rounds of jobs: a MMR_CAND² similarity
+    matrix from nested ``transform``, then the greedy loop as one
+    ``aggregate`` over ``sequence(1, MMR_K)``. Each step appends the
+    ``array_max`` of ``struct(score, -cid, idx)`` over the unselected
+    candidates, so the highest score wins and ties go to the lower id.
+    Scores are rounded to 6dp, so DuckDB replays every step
     bit-for-bit."""
     vecs = _vectors(spark, sf_dir)
     probes = vecs.filter(F.col("vec_id") < N_PROBES).select(
@@ -1147,106 +1149,89 @@ def ann_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "probe_id",
             "cid",
+            "cv",
+            "cn",
             F.round(
                 _cos(F.col("pv"), F.col("cv"), F.col("pn"), F.col("cn")), 6
             ).alias("rel"),
         )
     )
     wr = Window.partitionBy("probe_id").orderBy(F.desc("rel"), F.asc("cid"))
-    cand = rolling_persist(
-        spark,
-        ("mmr_cand", sf_dir),
+    cand = (
         pairs.withColumn("rk", F.row_number().over(wr))
         .filter(F.col("rk") <= MMR_CAND)
-        .select("probe_id", "cid", "rel"),
+        .groupBy("probe_id")
+        .agg(
+            F.sort_array(F.collect_list(F.struct("rk", "rel", "cid", "cv", "cn")))
+            .alias("c")
+        )
     )
-    # pairwise candidate similarities (|probes| × MMR_CAND² rows)
-    cv = vecs.select("vec_id", "v", "nrm")
-    a = cand.select("probe_id", F.col("cid").alias("ca")).join(
-        cv, F.col("ca") == F.col("vec_id")
-    ).select("probe_id", "ca", F.col("v").alias("va"), F.col("nrm").alias("na"))
-    b = cand.select("probe_id", F.col("cid").alias("cb")).join(
-        cv, F.col("cb") == F.col("vec_id")
-    ).select("probe_id", "cb", F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    sims = rolling_persist(
-        spark,
-        ("mmr_sims", sf_dir),
-        a.join(b, "probe_id")
-        .filter(F.col("ca") != F.col("cb"))
-        .select(
-            "probe_id",
-            "ca",
-            "cb",
-            F.round(
-                _cos(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), 6
-            ).alias("sim"),
+    c = F.col("c")
+    # sims[i][j] = cos(candidate i, candidate j), rounded as the oracle
+    # does. It rides in the accumulator, so it is built once per probe.
+    sims = F.transform(
+        c,
+        lambda a: F.transform(
+            c, lambda b: F.round(_cos(a["cv"], b["cv"], a["cn"], b["cn"]), 6)
         ),
     )
 
-    def argmax(df: DataFrame, score_col: str, rank_no: int) -> DataFrame:
-        w = Window.partitionBy("probe_id").orderBy(
-            F.desc(score_col), F.asc("cid")
-        )
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(
-                "probe_id",
-                "cid",
-                "rel",
-                F.col(score_col).alias("mmr_score"),
-                F.lit(rank_no).cast("bigint").alias("mmr_rank"),
+    def step(acc: Column, t: Column) -> Column:
+        picked = acc["picked"]
+
+        def score(i: Column) -> Column:
+            rel = F.get(c, i)["rel"]
+            row = F.get(acc["sims"], i)
+            ms = F.array_max(F.transform(picked, lambda p: F.get(row, p["idx"])))
+            return F.when(t == 1, rel).otherwise(
+                F.round(F.lit(MMR_LAMBDA) * rel - F.lit(1 - MMR_LAMBDA) * ms, 6)
             )
+
+        pool = F.filter(
+            F.sequence(F.lit(0), F.size(c) - 1),
+            lambda i: ~F.exists(picked, lambda p: p["idx"] == i),
+        )
+        # one argmax per step: highest score, then lowest id; an empty
+        # pool (fewer than MMR_K candidates) appends null
+        best = F.array_max(
+            F.transform(
+                pool,
+                lambda i: F.struct(
+                    score(i).alias("score"),
+                    (-F.get(c, i)["cid"]).alias("ncid"),
+                    i.alias("idx"),
+                ),
+            )
+        )
+        return F.struct(
+            acc["sims"].alias("sims"),
+            F.concat(picked, F.array(best)).alias("picked"),
         )
 
-    # r10 optimization (guide §3.1 / §2.4): ``sel`` is referenced three
-    # times per round (anti-join, max-sim join, union), so without a
-    # persist each round re-executes every earlier round's subtree —
-    # the unrolled plan carried 132 Exchanges / 29 SortMergeJoins of
-    # mostly duplicated work. Persisting the ≤|probes|·K-row selected
-    # set per round (rolling: the previous invocation's blocks are
-    # released) and broadcast-hinting the constant-bounded sides
-    # (sel ≤ probes·K rows, maxsim ≤ probes·MMR_CAND rows) turns every
-    # round join into a BroadcastHashJoin over the persisted candidate
-    # table — no shuffled join, no sort, identical rows out.
-    sel = argmax(cand.withColumn("score", F.col("rel")), "score", 1)
-    for t in range(2, MMR_K + 1):
-        sel = rolling_persist(spark, ("mmr_sel", sf_dir, t - 1), sel)
-        remaining = cand.join(
-            F.broadcast(sel.select("probe_id", "cid")),
-            ["probe_id", "cid"],
-            "left_anti",
+    picked = F.aggregate(
+        F.sequence(F.lit(1), F.lit(MMR_K)),
+        F.struct(
+            sims.alias("sims"),
+            F.array()
+            .cast("array<struct<score: double, ncid: bigint, idx: int>>")
+            .alias("picked"),
+        ),
+        step,
+        lambda acc: F.filter(acc["picked"], lambda p: p.isNotNull()),
+    )
+    # |probes|·MMR_K rows: one partition sorts them with no range shuffle
+    return (
+        cand.select("probe_id", "c", F.posexplode(picked))
+        .select(
+            "probe_id",
+            (-F.col("col.ncid")).alias("neighbor_id"),
+            F.get(c, F.col("col.idx"))["rel"].alias("relevance"),
+            F.col("col.score").alias("mmr_score"),
+            (F.col("pos") + 1).cast("bigint").alias("mmr_rank"),
         )
-        maxsim = F.broadcast(
-            sims.join(
-                F.broadcast(sel.select("probe_id", F.col("cid").alias("cb"))),
-                ["probe_id", "cb"],
-            )
-            .groupBy("probe_id", "ca")
-            .agg(F.max("sim").alias("ms"))
-        )
-        scored = remaining.join(
-            maxsim,
-            (remaining.probe_id == maxsim.probe_id)
-            & (remaining.cid == maxsim.ca),
-        ).select(
-            remaining.probe_id,
-            "cid",
-            "rel",
-            F.round(
-                F.lit(MMR_LAMBDA) * F.col("rel")
-                - F.lit(1 - MMR_LAMBDA) * F.col("ms"),
-                6,
-            ).alias("score"),
-        )
-        sel = sel.unionByName(argmax(scored, "score", t))
-    return sel.select(
-        "probe_id",
-        F.col("cid").alias("neighbor_id"),
-        F.col("rel").alias("relevance"),
-        "mmr_score",
-        "mmr_rank",
-    ).orderBy("probe_id", "mmr_rank")
+        .coalesce(1)
+        .sortWithinPartitions("probe_id", "mmr_rank")
+    )
 
 
 QUERIES["ann_mmr_diversify"] = ann_mmr_diversify

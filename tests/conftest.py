@@ -22,6 +22,20 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def newest_job_id(spark):
+    """A callable giving the id of the newest job in the status store
+    (-1 before any job); two calls bracket the jobs run between them."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def newest() -> int:
+        sc.listenerBus().waitUntilEmpty()  # every submitted job is in the store
+        jobs = sc.statusStore().jobsList(None)  # sorted by job id, newest first
+        return -1 if jobs.isEmpty() else max(jobs.head().jobId(), jobs.last().jobId())
+
+    return newest
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_CORRECT

@@ -375,13 +375,7 @@ def test_geocode_with_no_hits(spark, tmp_path):
 STEP_JOB_BUDGET = {"download": 3, "parse": 3, "geocode": 3, "transform": 5}
 
 
-def _newest_job_id(sc) -> int:
-    sc.listenerBus().waitUntilEmpty()  # every submitted job is in the store
-    jobs = sc.statusStore().jobsList(None)  # sorted by job id, newest first
-    return -1 if jobs.isEmpty() else max(jobs.head().jobId(), jobs.last().jobId())
-
-
-def test_step_job_budget(spark, tmp_path):
+def test_step_job_budget(spark, tmp_path, newest_job_id):
     data = str(tmp_path / "d_budget")
     os.makedirs(data)
     shutil.copy(fixture_archive(), data)
@@ -392,12 +386,11 @@ def test_step_job_budget(spark, tmp_path):
         "maxYear": 1890,
     }
     work = str(tmp_path / "w_budget")
-    sc = spark.sparkContext._jsc.sc()
     jobs = {}
     for step in STEPS:
-        before = _newest_job_id(sc)
+        before = newest_job_id()
         getattr(cli, f"step_{step}")(spark, cfg, work)
-        jobs[step] = _newest_job_id(sc) - before
+        jobs[step] = newest_job_id() - before
     over = {s: n for s, n in jobs.items() if n > STEP_JOB_BUDGET[s]}
     assert not over, f"jobs {jobs} over budget {STEP_JOB_BUDGET}"
 

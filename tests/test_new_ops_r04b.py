@@ -434,7 +434,47 @@ def test_mmr_diversify_greedy_semantics(spark):
             best_score, best = scored[0]
             assert rs[t].neighbor_id == best, (probe, t, rs[t], scored[:3])
             assert abs(rs[t].mmr_score - best_score) < 1e-9
+            assert abs(rs[t].relevance - rel[best]) < 1e-9, (probe, t, rs[t])
             selected.append(best)
+
+
+def test_mmr_diversify_ties_match_oracle(spark, tmp_path):
+    """On integer vectors with exact duplicates (equal relevance, sim
+    1.0) and mirrored pairs (equal relevance, equal max-sim to the
+    selected set), exact score ties fall across the top-MMR_CAND cut
+    (7 of the 10 probes) and at the argmax of every greedy step (7, 2
+    and 4 probes at steps 1-3). The tie-break (lowest id wins) must
+    agree with the DuckDB oracle row for row."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from __spark_entry__ import oracle_sql
+    from etl_city_directories_spark.operators.similarity import ann_mmr_diversify
+    from tools.compare import canon
+
+    vectors = [
+        (1, 0, 0, 0), (0, 1, 0, 0), (1, 1, 0, 0), (1, -1, 0, 0),
+        (1, 0, 0, 0), (0, 0, 1, 0), (0, 0, -1, 0), (1, 1, 1, 0),
+        (1, 1, -1, 0), (1, -1, 1, 0), (1, 1, 0, 0), (0, 0, 0, 1),
+        (0, 0, 0, -1), (2, 0, 0, 0), (1, 0, 1, 1), (1, 0, -1, -1),
+    ]
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(len(vectors)), pa.int64()),
+            "embedding": pa.array(vectors, pa.list_(pa.float32())),
+            "label": pa.array([0] * len(vectors), pa.int32()),
+        }),
+        path,
+    )
+    got = ann_mmr_diversify(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+    want = con.execute(oracle_sql()["ann_mmr_diversify"]).fetchdf()
+    con.close()
+    assert len(got) == len(want) == 30
+    assert canon(got) == canon(want)
 
 
 def test_occupation_year_stats_shape(spark):

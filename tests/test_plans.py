@@ -1,9 +1,10 @@
 """Plan-shape assertions (SURVEY §5): the physical plans Catalyst picks
 must be the plans we'd want on a 1000-executor cluster.
 
-These tests never execute a job — they inspect ``explain("formatted")``
-output — so regressions in pushdown/pruning/broadcast/codegen are
-caught even when results stay correct.
+These tests inspect ``explain("formatted")`` output — only the job
+count check of ann_mmr_diversify runs its query — so regressions in
+pushdown/pruning/broadcast/codegen are caught even when results stay
+correct.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ import io
 import re
 
 import __spark_entry__ as entry_mod
+from etl_city_directories_spark.functions import memo
 
 SF = "/root/testdata/sf0.001"
 
@@ -770,12 +772,31 @@ def test_cold_iterative_plans_keep_their_persists(spark):
     transition matrix, so the event fact is shuffled by user once per
     pass (2 user_id shuffles), not once per power iteration (8);
     graph_pagerank_dupes embeds the dedup chain tail once (one pair
-    shuffle, 2 before); ann_mmr_diversify persists each round's
-    selected set and broadcasts the bounded join sides (1 sort-merge
-    join, 13 before)."""
+    shuffle, 2 before)."""
     keys = hash_keys(plan_of(QUERIES["q_markov_stationary"](spark, SF)))
     assert keys["user_id"] <= 2, keys
     keys = hash_keys(plan_of(QUERIES["graph_pagerank_dupes"](spark, SF)))
     assert keys["doc_a, doc_b"] == 1, keys
-    plan = plan_of(QUERIES["ann_mmr_diversify"](spark, SF))
-    assert len(re.findall(r"^\(\d+\) SortMergeJoin", plan, re.M)) <= 1, plan
+
+
+def test_mmr_is_one_per_probe_program(spark, newest_job_id):
+    """ann_mmr_diversify runs its greedy loop as one expression per
+    probe: the plan is the broadcast-probe candidate scan plus one
+    probe_id shuffle shared by the top-candidate window and the
+    per-probe group, with no sort-merge join and no persisted frame.
+    Cold (no cache, no memo), it takes at most 6 jobs: the shared
+    vector table's construction, then the broadcast, the shuffle and
+    the result (3 collect jobs, against 22 for the unrolled rounds)."""
+    spark.catalog.clearCache()
+    memo.reset()
+    start = newest_job_id()
+    df = QUERIES["ann_mmr_diversify"](spark, SF)
+    built = newest_job_id()
+    plan = plan_of(df)
+    df.collect()
+    done = newest_job_id()
+    assert "SortMergeJoin" not in plan and "InMemoryRelation" not in plan, plan
+    assert hash_keys(plan) == collections.Counter({"probe_id": 1}), shuffles(plan)
+    assert len(shuffles(plan)) == 1, shuffles(plan)
+    assert len(re.findall(r"^\(\d+\) BroadcastExchange", plan, re.M)) == 1, plan
+    assert done - built <= 3 and done - start <= 6, (built - start, done - built)

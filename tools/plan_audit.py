@@ -48,9 +48,9 @@ BNLJ_OK = {
     # both rankers join the corpus against the capped broadcast probe
     # set on a != condition — the bruteforce-baseline shape
     "ann_rrf_hybrid",
-    # candidate generation = same capped broadcast-probe != join; the
-    # unrolled selection rounds reference the persisted candidate
-    # table, so the textual plan repeats the join without re-executing
+    # candidate generation = same capped broadcast-probe != join, the
+    # plan's one BNLJ; the greedy selection after it is one per-probe
+    # expression with no further join
     "ann_mmr_diversify",
     # per-(type,bucket) bitmaps join the broadcast 10-row pair table
     # on an OR-of-equalities — non-equi against a capped side
