@@ -19,6 +19,7 @@ from pyspark.sql import types as T
 
 from etl_city_directories_spark.functions.memo import cached_sink_dir, rolling_persist
 from etl_city_directories_spark.functions.numeric import dec2, money_sum
+from etl_city_directories_spark.session import clone_session
 from etl_city_directories_spark.sources.tables import (
     load_table,
     load_table_parallel,
@@ -389,35 +390,27 @@ def q_bloom_semi_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between shuffling the whole fact table and shuffling
     the matching fraction; Catalyst inserts it automatically once the
     creation side is selective (tests/test_plans.py asserts the
-    might_contain probe in the plan).
+    might_contain probe in this frame's plan).
 
-    Result is materialized under the bloom confs and the session confs
-    restored (tiny group-count output — the deliberate finalize step).
+    The join is built in a clone of the caller's session that carries
+    ``_BLOOM_CONFS``, so it plans and runs under them while the
+    caller's conf stays untouched. The tables are read in the clone:
+    ``load_table``'s memoized relations belong to the caller's session.
     """
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        o = load_table(spark, sf_dir, "orders").filter(
-            F.col("o_orderpriority") == "1-URGENT"
+    clone = clone_session(spark, _BLOOM_CONFS)
+    o = clone.read.parquet(f"{sf_dir}/orders.parquet").filter(
+        F.col("o_orderpriority") == "1-URGENT"
+    )
+    l = clone.read.parquet(f"{sf_dir}/lineitem.parquet")
+    return (
+        l.join(o, l.l_orderkey == o.o_orderkey)
+        .groupBy("l_returnflag")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            money_sum(dec2("l_extendedprice"), "revenue"),
         )
-        l = load_table(spark, sf_dir, "lineitem")
-        result = (
-            l.join(o, l.l_orderkey == o.o_orderkey)
-            .groupBy("l_returnflag")
-            .agg(
-                F.count(F.lit(1)).alias("n_items"),
-                money_sum(dec2("l_extendedprice"), "revenue"),
-            )
-            .orderBy("l_returnflag")
-        )
-        return spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        .orderBy("l_returnflag")
+    )
 
 
 # Accuracy contracts for the sketch operators (the q_hll_partial_rollup

@@ -92,3 +92,13 @@ def get_spark(
                 os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     )
     return builder.getOrCreate()
+
+
+def clone_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A clone of ``spark`` (same runtime conf, same SparkContext) with
+    ``conf`` set on top. Frames built in the clone plan and run under
+    its conf; the caller's conf is never written."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for key, value in conf.items():
+        clone.conf.set(key, value)
+    return clone

@@ -50,6 +50,7 @@ from pyspark.sql.types import (
 
 from etl_city_directories_spark.functions.memo import cached_sink_dir, rolling_dir
 from etl_city_directories_spark.functions.numeric import dec2
+from etl_city_directories_spark.session import clone_session
 from etl_city_directories_spark.sources import tables
 
 SESSION_GAP_MIN = 30  # must match operators.windows.SESSION_GAP_MIN
@@ -84,9 +85,7 @@ def _replay_session(
 ) -> SparkSession:
     """A clone of ``spark`` (same runtime conf) with ``partitions``
     shuffle/state partitions, for one replay to build and run in."""
-    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
-    clone.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    return clone
+    return clone_session(spark, {"spark.sql.shuffle.partitions": str(partitions)})
 
 
 def _events_schema(sf_dir: str) -> StructType:

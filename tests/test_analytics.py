@@ -17,6 +17,7 @@ from etl_city_directories_spark.operators.analytics import (
     q_pareto_abc,
     q_regr_trend,
 )
+from tools.plan_audit import fingerprint, plan_of
 
 SF = "/root/testdata/sf0.001"
 
@@ -138,8 +139,8 @@ def test_skew_salted_join_uses_merge_join_and_matches_plain(spark):
     from etl_city_directories_spark.sources.tables import load_table
 
     df = q_skew_salted_join(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan  # the salt exists for this path
+    # the salt exists for this path
+    assert fingerprint(plan_of(df)).joins["SortMergeJoin"]
     got = {r.c_mktsegment: (r.n_events, r.total_value) for r in df.collect()}
     ev = load_table(spark, SF, "events")
     cust = load_table(spark, SF, "customer")

@@ -4,7 +4,6 @@ reference's usage surface (config file + step dirs) on fixtures."""
 import glob
 import json
 import os
-import re
 import shutil
 import subprocess
 import sys
@@ -16,6 +15,7 @@ from etl_city_directories_spark.cli import STEPS, run
 from etl_city_directories_spark.operators.ingest import FIXTURES, _UUID, fixture_archive
 from perfbench import gen
 from perfbench.etl import check_step
+from tools.plan_audit import fingerprint
 
 
 def _write_config(tmp_path, **cfg):
@@ -494,12 +494,11 @@ def test_parse_is_one_scan_and_one_python_pass(ledger_run):
     one Python pass (untar, page window, column detection), with no
     union of per-column-count scans."""
     plan = ledger_run[3]
-    tree = plan.split("== Physical Plan ==", 1)[1].split("\n\n", 1)[0]
-    executed = tree.split("== Initial Plan ==", 1)[0]  # AQE's final plan
-    assert "InsertIntoHadoopFsRelationCommand" in executed
-    assert len(re.findall(r"\w*(?:Pandas|Python|Arrow)\w*", executed)) == 1, executed
-    assert executed.count("Scan binaryFile") == 1, executed
-    assert "Union" not in executed, executed
+    fp = fingerprint(plan)  # AQE's final plan only
+    assert fp.nodes["Execute InsertIntoHadoopFsRelationCommand"] == 1, plan
+    assert sum(fp.python.values()) == 1, plan
+    assert [fmt for fmt, _ in fp.scans.elements()].count("binaryFile") == 1, plan
+    assert not fp.nodes["Union"], plan
 
 
 def test_cli_runs_from_another_directory(tmp_path):

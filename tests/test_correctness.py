@@ -1,5 +1,6 @@
 """Mirror of the driver's t2 gate: every queries() entry with an
-oracle must hash-match DuckDB at sf0.01."""
+oracle must hash-match DuckDB at sf0.01, and every entry's plan must
+pass the plan audit's flags (tools/plan_audit.py)."""
 
 from __future__ import annotations
 
@@ -7,6 +8,7 @@ import pytest
 
 import __spark_entry__ as entry_mod
 from tools.compare import compare
+from tools.plan_audit import fingerprint, flags, plan_of
 
 QUERIES = entry_mod.queries()
 ORACLES = entry_mod.oracle_sql()
@@ -20,6 +22,7 @@ def test_every_oracle_has_query():
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, sf_dir):
     df = QUERIES[name](spark, sf_dir)
+    assert flags(name, fingerprint(plan_of(df))) == [], name
     if name not in ORACLES:
         # rows-only contract: must run and return a stable schema
         assert df.count() >= 0

@@ -10,6 +10,7 @@ from etl_city_directories_spark.operators.windows import (
     q_histogram_equidepth,
 )
 from etl_city_directories_spark.sources.tables import load_table
+from tools.plan_audit import fingerprint, plan_of
 
 SF = "/root/testdata/sf0.01"
 SF_TINY = "/root/testdata/sf0.001"
@@ -82,14 +83,10 @@ def test_equidepth_no_single_reducer_sort(spark):
     """The DATA path stays distributed: the plan range-partitions the
     orders rows and contains no windowed NTILE (which would force the
     whole table through one reducer)."""
-    plan = (
-        q_histogram_equidepth(spark, SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = plan_of(q_histogram_equidepth(spark, SF))
     assert "ntile" not in plan.lower()
-    assert "rangepartitioning" in plan.lower()
+    moved = fingerprint(plan).shuffles
+    assert any(a.startswith("rangepartitioning") for a, _ in moved), moved
 
 
 def test_hierarchy_rollup_replay(spark):

@@ -1,59 +1,47 @@
 """Plan-shape assertions (SURVEY §5): the physical plans Catalyst picks
 must be the plans we'd want on a 1000-executor cluster.
 
-These tests inspect ``explain("formatted")`` output — only the job
-count check of ann_mmr_diversify runs its query — so regressions in
-pushdown/pruning/broadcast/codegen are caught even when results stay
-correct.
+Node counts come from ``tools.plan_audit.fingerprint`` (each operator
+once); pushed filters, read schemas and expression names are read from
+the plan text. Most tests only plan their query; q1's codegen check and
+the fingerprint's own test run it to see AQE's final plan, the MMR and
+bloom tests count their jobs, and the bucketed-join and DPP tests write
+tables.
 """
 
 from __future__ import annotations
 
-import collections
-import contextlib
-import io
 import re
+
+from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
 from etl_city_directories_spark.functions import memo
+from tools.plan_audit import fingerprint, plan_of
 
 SF = "/root/testdata/sf0.001"
 
 QUERIES = entry_mod.queries()
 
 
-def plan_of(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+def fp_of(name: str, spark):
+    return fingerprint(plan_of(QUERIES[name](spark, SF)))
 
 
-def shuffles(plan: str) -> list[tuple[str, list[str]]]:
-    """(partitioning, input columns) of every shuffle Exchange in the
-    detail section of a formatted plan, with expression ids, partition
-    counts and plan ids stripped, e.g.
-    ``("hashpartitioning(l_orderkey), ENSURE_REQUIREMENTS", ["l_orderkey", "buf"])``."""
-    found = re.findall(
-        r"^\(\d+\) Exchange\nInput \[\d+\]: \[(.*)\]\nArguments: (.*)$", plan, re.M
-    )
-    out = []
-    for cols, args in found:
-        args = re.sub(r"#\d+L?|, \[plan_id=\d+\]", "", args)
-        args = re.sub(r", \d+\)", ")", args)
-        args = re.sub(r"RoundRobinPartitioning\(\d+\)", "RoundRobinPartitioning", args)
-        out.append((args, re.sub(r"#\d+L?", "", cols).split(", ")))
-    return out
-
-
-def hash_keys(plan: str) -> collections.Counter:
-    """Shuffle Exchanges per hash-partitioning key list, e.g.
-    ``Counter({"l_orderkey": 2, "part_a, part_b": 1})``."""
-    return collections.Counter(
-        m.group(1)
-        for args, _ in shuffles(plan)
-        if (m := re.match(r"hashpartitioning\((.*)\),", args))
-    )
+def test_fingerprint_counts_each_node_once(spark):
+    """One shuffle, one broadcast and one nested-loop join count 1 each,
+    although the text names each twice (tree and detail section) and a
+    substring "Exchange" also matches "BroadcastExchange". Once the plan
+    has run, AQE's description carries the final plan and the initial
+    plan it replaced; only the final plan counts."""
+    a = spark.range(64).repartition(3, "id")
+    df = a.join(F.broadcast(spark.range(4).toDF("k")), F.col("id") < F.col("k"))
+    before = plan_of(df)
+    df.collect()
+    for plan in (before, plan_of(df)):
+        fp = fingerprint(plan)
+        assert (len(fp.shuffles), fp.broadcasts, fp.joins) == (1, 1, {"BroadcastNestedLoopJoin": 1}), plan
+    assert "== Initial Plan ==" in plan, plan
 
 
 def test_q6_filters_pushed_to_scan(spark):
@@ -76,13 +64,12 @@ def test_scan_prunes_columns(spark):
 def test_q5_broadcasts_dimensions(spark):
     """6-way join: small dims (region/nation/supplier) broadcast, never
     shuffle the fact table on a dim key."""
-    plan = plan_of(QUERIES["q5_local_supplier"](spark, SF))
-    assert plan.count("BroadcastHashJoin") >= 2, plan
+    fp = fp_of("q5_local_supplier", spark)
+    assert fp.joins["BroadcastHashJoin"] >= 2, fp
 
 
 def test_ann_broadcasts_probe_side(spark):
-    plan = plan_of(QUERIES["ann_topk_bruteforce"](spark, SF))
-    assert "Broadcast" in plan
+    assert fp_of("ann_topk_bruteforce", spark).broadcasts >= 1
 
 
 def test_jvm_operators_have_no_python_eval(spark):
@@ -102,9 +89,7 @@ def test_jvm_operators_have_no_python_eval(spark):
         "cd_parse_entries",
         "cd_geocode",
     ):
-        plan = plan_of(QUERIES[name](spark, SF))
-        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-            assert marker not in plan, f"{name} plan contains {marker}"
+        assert not fp_of(name, spark).python, name
 
 
 def test_citydir_dims_scan_no_python_rdd(spark):
@@ -121,8 +106,8 @@ def test_citydir_dims_scan_no_python_rdd(spark):
     for name in ("cd_geocode", "cd_transform_objects", "cd_relations", "cd_logs"):
         frames[name] = QUERIES[name](spark, SF)
     for name, df in frames.items():
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Scan ExistingRDD" not in plan, f"{name} scans a Python RDD"
+        scans = fingerprint(plan_of(df)).scans
+        assert not any(fmt == "ExistingRDD" for fmt, _ in scans), f"{name} scans a Python RDD"
 
 
 def test_q1_uses_wholestage_codegen(spark):
@@ -139,9 +124,9 @@ def test_q1_uses_wholestage_codegen(spark):
 def test_exact_dedup_partial_aggregates(spark):
     """hash-groupBy dedup must partial-aggregate map-side (two
     HashAggregate levels around one exchange)."""
-    plan = plan_of(QUERIES["dedup_exact"](spark, SF))
-    assert plan.count("HashAggregate") >= 2
-    assert plan.count("Exchange") >= 1
+    fp = fp_of("dedup_exact", spark)
+    assert fp.nodes["HashAggregate"] >= 2, fp
+    assert len(fp.shuffles) >= 1, fp
 
 
 def test_q14_month_filter_pushed_to_scan(spark):
@@ -154,24 +139,24 @@ def test_q14_month_filter_pushed_to_scan(spark):
 def test_q18_joins_back_broadcast(spark):
     """The HAVING-filtered orderkeys (tiny) must broadcast back onto
     orders, not shuffle the fact side."""
-    plan = plan_of(QUERIES["q18_large_orders"](spark, SF))
-    assert plan.count("BroadcastHashJoin") >= 2, plan
+    fp = fp_of("q18_large_orders", spark)
+    assert fp.joins["BroadcastHashJoin"] >= 2, fp
 
 
 def test_funnel_single_window_exchange(spark):
     """The chained-window funnel must plan exactly one shuffle for all
     three window stages plus the per-user fold (no staged re-joins)."""
-    plan = plan_of(QUERIES["q_funnel"](spark, SF))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert plan.count("Exchange") <= 4, plan
+    fp = fp_of("q_funnel", spark)
+    assert not fp.joins["BroadcastNestedLoopJoin"], fp
+    assert len(fp.shuffles) + fp.broadcasts <= 2, fp
 
 
 def test_salted_agg_two_phase(spark):
     """Salted aggregation: two HashAggregate pairs (partial+final per
     phase), and the salt column must not survive into the output."""
     df = QUERIES["q_skew_salted_agg"](spark, SF)
-    plan = plan_of(df)
-    assert plan.count("HashAggregate") >= 4, plan
+    fp = fingerprint(plan_of(df))
+    assert fp.nodes["HashAggregate"] >= 4, fp
     assert "salt" not in df.columns
 
 
@@ -179,8 +164,8 @@ def test_partsupp_queries_broadcast_dims(spark):
     """Q2/Q9: part/supplier/nation/region are dims — they must reach
     the fact joins as broadcasts, never shuffle the fact on a dim key."""
     for name, min_bcast in (("q2_min_cost_supplier", 2), ("q9_product_profit", 3)):
-        plan = plan_of(QUERIES[name](spark, SF))
-        assert plan.count("BroadcastHashJoin") >= min_bcast, f"{name}: {plan}"
+        fp = fp_of(name, spark)
+        assert fp.joins["BroadcastHashJoin"] >= min_bcast, (name, fp)
 
 
 def test_partsupp_composite_rejoin_eliminated(spark):
@@ -198,8 +183,8 @@ def test_partsupp_composite_rejoin_eliminated(spark):
     # q16's pair-distinct drop makes it single-scan too (judge ADVICE r10)
     for name in ("q9_product_profit", "q20_promotable_suppliers",
                  "q16_supplier_cnt"):
-        plan = plan_of(QUERIES[name](spark, SF))
-        assert plan.count("lineitem") == 1, f"{name}: extra lineitem scan"
+        scans = fp_of(name, spark).scans
+        assert scans["parquet", "lineitem"] == 1, (name, scans)
 
 
 def test_q7_q8_dims_filter_before_fact_join(spark):
@@ -211,10 +196,10 @@ def test_q7_q8_dims_filter_before_fact_join(spark):
     against a Catalyst/AQE version bump silently reverting it."""
     plan = plan_of(QUERIES["q7_nation_volume"](spark, SF))
     assert "In(n_name, [NATION_1,NATION_2" in plan, plan
-    assert plan.count("lineitem") == 1, "q7: extra lineitem scan"
+    assert fingerprint(plan).scans["parquet", "lineitem"] == 1, "q7: extra lineitem scan"
     plan = plan_of(QUERIES["q8_market_share"](spark, SF))
     assert "EqualTo(r_name,ASIA)" in plan, plan
-    assert plan.count("lineitem") == 1, "q8: extra lineitem scan"
+    assert fingerprint(plan).scans["parquet", "lineitem"] == 1, "q8: extra lineitem scan"
 
 
 def test_q2_q11_dims_filter_before_pair_distinct(spark):
@@ -225,7 +210,7 @@ def test_q2_q11_dims_filter_before_pair_distinct(spark):
     plan = plan_of(QUERIES["q2_min_cost_supplier"](spark, SF))
     assert "EqualTo(p_type,ECONOMY)" in plan, plan
     assert "EqualTo(r_name,EUROPE)" in plan, plan
-    assert plan.count("lineitem") == 1, "q2: extra lineitem scan"
+    assert fingerprint(plan).scans["parquet", "lineitem"] == 1, "q2: extra lineitem scan"
     plan = plan_of(QUERIES["q11_important_stock"](spark, SF))
     assert "EqualTo(n_name,NATION_3)" in plan, plan
     # two fact reads by design (per-supplier values + the total-value
@@ -238,15 +223,10 @@ def test_q21_single_window_exchange(spark):
     aggregates (and the distinct) over ONE shuffle on l_orderkey — the
     point of decorrelating the double EXISTS — with no fact self-join.
     Remaining shuffles: the s_name groupBy and the output sort."""
-    import re
-
-    plan = plan_of(QUERIES["q21_waiting_suppliers"](spark, SF))
-    # detail-section lines '(N) Exchange' count each shuffle once
-    # (BroadcastExchange lines don't match)
-    shuffles = len(re.findall(r"\(\d+\) Exchange", plan))
-    assert shuffles <= 3, f"{shuffles} shuffles: {plan}"
-    assert "SortMergeJoin" not in plan  # no lineitem self-join
-    assert plan.count("BroadcastHashJoin") >= 1  # supplier dim
+    fp = fp_of("q21_waiting_suppliers", spark)
+    assert len(fp.shuffles) <= 3, fp
+    assert not fp.joins["SortMergeJoin"], fp  # no lineitem self-join
+    assert fp.joins["BroadcastHashJoin"] >= 1, fp  # supplier dim
 
 
 def test_kmeans_assignment_broadcasts_centroids(spark):
@@ -257,16 +237,14 @@ def test_kmeans_assignment_broadcasts_centroids(spark):
     its plan is a checkpoint scan, not the Lloyd loop."""
     from etl_city_directories_spark.operators.similarity import _kmeans_assign
 
-    plan = plan_of(_kmeans_assign(spark, SF, 1))
-    assert "BroadcastNestedLoopJoin" in plan, plan
+    fp = fingerprint(plan_of(_kmeans_assign(spark, SF, 1)))
+    assert fp.joins["BroadcastNestedLoopJoin"] >= 1, fp
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     """Both sides bucketed+sorted on the join key: the SortMergeJoin
     must read the buckets directly — zero Exchange (and zero extra
     Sort) on the join inputs."""
-    import re
-
     from etl_city_directories_spark.operators.scale_ops import q_bucketed_join
 
     # disable auto-broadcast: at tiny SF Catalyst would (correctly)
@@ -275,14 +253,13 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         df = q_bucketed_join(spark, SF, path=str(tmp_path / "bkt"))
-        plan = plan_of(df)
+        fp = fingerprint(plan_of(df))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "SortMergeJoin" in plan
+    assert fp.joins["SortMergeJoin"] >= 1, fp
     # only the groupBy and orderBy above the join may shuffle — an
     # unbucketed plan would add one exchange per join input (4 total)
-    shuffles = len(re.findall(r"\(\d+\) Exchange", plan))
-    assert shuffles <= 2, f"{shuffles} shuffles: {plan}"
+    assert len(fp.shuffles) <= 2, fp
     spark.sql("DROP TABLE IF EXISTS bkt_orders")
     spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
 
@@ -290,78 +267,57 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
 def test_profile_categorical_single_scan(spark):
     """The stack-unpivot profiler must read the fact table ONCE —
     a per-column loop would show one scan per profiled column."""
-    import re
-
-    plan = plan_of(QUERIES["profile_categorical"](spark, SF))
-    scans = len(re.findall(r"\(\d+\) Scan parquet", plan))
-    assert scans == 1, f"{scans} scans: {plan}"
+    scans = fp_of("profile_categorical", spark).scans
+    assert sum(scans.values()) == 1, scans
 
 
 def test_interval_overlap_no_self_join(spark):
     """The sweep line must be union + window — no interval self-join
     (which would be O(n x overlap))."""
-    plan = plan_of(QUERIES["q_interval_overlap"](spark, SF))
-    assert "Join" not in plan, plan
-    assert "Union" in plan and "Window" in plan
+    fp = fp_of("q_interval_overlap", spark)
+    assert not fp.joins, fp
+    assert fp.nodes["Union"] and fp.nodes["Window"], fp
 
 
 def test_pq_adc_scoring_broadcasts_lut(spark):
     """PQ query path: the probe LUT and probe vectors must broadcast
     into the code scan — the corpus must never shuffle on the
     (sub, code) key."""
-    plan = plan_of(QUERIES["ann_pq_adc"](spark, SF))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
+    fp = fp_of("ann_pq_adc", spark)
+    assert fp.joins["BroadcastHashJoin"] >= 1, fp
+    assert not fp.joins["SortMergeJoin"], fp
 
 
 def test_range_frame_single_shuffle(spark):
     """The RANGE-frame trailing total is one shuffle on the customer
     key, then a single window pass."""
-    import re
-
-    plan = plan_of(QUERIES["q_range_frame_total"](spark, SF))
-    shuffles = len(re.findall(r"\(\d+\) Exchange", plan))
-    assert shuffles == 1, f"{shuffles} shuffles: {plan}"
-    assert "Window" in plan
+    fp = fp_of("q_range_frame_total", spark)
+    assert len(fp.shuffles) == 1, fp
+    assert fp.nodes["Window"], fp
 
 
-def test_bloom_semi_reduction_inserts_runtime_filter(spark):
-    """The urgent-orders bloom filter must be pushed into the lineitem
-    probe side (might_contain in the plan) under the operator's confs."""
-    from etl_city_directories_spark.operators.scale_ops import (
-        _BLOOM_CONFS,
-        load_table,
-    )
-    from pyspark.sql import functions as F
+def test_bloom_semi_reduction_inserts_runtime_filter(spark, newest_job_id):
+    """The operator's own frame pushes the urgent-orders bloom filter
+    into the lineitem probe side (might_contain in the plan): it is
+    built in a session clone under the bloom confs, so the caller's
+    conf is untouched, and building it runs only the two parquet schema
+    reads (no collect)."""
+    from etl_city_directories_spark.operators.scale_ops import _BLOOM_CONFS
 
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        o = load_table(spark, SF, "orders").filter(
-            F.col("o_orderpriority") == "1-URGENT"
-        )
-        l = load_table(spark, SF, "lineitem")
-        plan = plan_of(
-            l.join(o, l.l_orderkey == o.o_orderkey)
-            .groupBy("l_returnflag")
-            .agg(F.count(F.lit(1)).alias("n_items"))
-        )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    before = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
+    start = newest_job_id()
+    df = QUERIES["q_bloom_semi_reduction"](spark, SF)
+    built = newest_job_id()
+    plan = plan_of(df)
     assert "might_contain" in plan, plan
     assert "bloom_filter_agg" in plan, plan
+    assert {k: spark.conf.get(k, None) for k in _BLOOM_CONFS} == before
+    assert built - start <= 2, built - start  # 8 when it collected eagerly
 
 
 def test_dpp_prunes_fact_partitions(spark, tmp_path):
     """Joining the partitioned fact to a filtered dim must plan a
     dynamicpruningexpression PartitionFilter on the fact scan."""
-    from pyspark.sql import functions as F
-
     from etl_city_directories_spark.operators.scale_ops import load_table
 
     out = str(tmp_path / "dpp")
@@ -390,18 +346,17 @@ def test_dpp_prunes_fact_partitions(spark, tmp_path):
 def test_mojibake_is_pure_map_side(spark):
     """Encoding audit must ride the scan: no exchange, pruned read."""
     plan = plan_of(QUERIES["text_mojibake_stats"](spark, SF))
-    assert "Exchange" not in plan, plan
+    fp = fingerprint(plan)
+    assert not fp.shuffles and not fp.broadcasts, fp
     read = plan.split("ReadSchema:", 1)[1].splitlines()[0]
     assert "text" in read and "lang" not in read
 
 
 def test_dedup_prefix_single_shuffle(spark):
     """Prefix dedup is one hash-keyed aggregation with map-side
-    combine: exactly one exchange node, partial agg before it.
-    (formatted explain lists each node twice — tree + detail — so
-    count the detail headers.)"""
+    combine: exactly one exchange node, partial agg before it."""
     plan = plan_of(QUERIES["dedup_prefix"](spark, SF))
-    assert plan.count(") Exchange") == 1, plan
+    assert len(fingerprint(plan).shuffles) == 1, plan
     assert "partial_count" in plan  # map-side combine before the shuffle
 
 
@@ -416,42 +371,41 @@ def test_pack_sequences_partitions_by_source(spark):
 def test_geocode_normalization_keeps_broadcast(spark):
     """The normalized lookup must still broadcast both dims — the
     corpus side stays map-side."""
-    plan = plan_of(QUERIES["cd_geocode"](spark, SF))
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-    assert "SortMergeJoin" not in plan, plan
+    fp = fp_of("cd_geocode", spark)
+    assert fp.joins["BroadcastHashJoin"] >= 2, fp
+    assert not fp.joins["SortMergeJoin"], fp
 
 
 def test_validate_schema_single_agg_pass(spark):
     """All contract rules ride ONE aggregation over the transform
     output — the validator adds NO extra corpus scans beyond what
     cd_transform_objects itself performs."""
-    v = plan_of(QUERIES["cd_validate_schema"](spark, SF))
-    t = plan_of(QUERIES["cd_transform_objects"](spark, SF))
-    assert v.count(") Scan parquet") == t.count(") Scan parquet"), v
+    v = fp_of("cd_validate_schema", spark).scans
+    t = fp_of("cd_transform_objects", spark).scans
+    assert v == t, (v, t)
 
 
 def test_gopher_filter_is_pure_map_side(spark):
     """The structural quality gate must be a zero-exchange scan —
     the cheapest stage of the corpus funnel stays embarrassingly
     parallel."""
-    plan = plan_of(QUERIES["text_gopher_filter"](spark, SF))
-    assert ") Exchange" not in plan, plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    fp = fp_of("text_gopher_filter", spark)
+    assert not fp.shuffles and not fp.python, fp
 
 
 def test_reservoir_uses_partial_top_k(spark):
     """Bottom-K-by-hash must compile to TakeOrderedAndProject (each
     partition keeps a local K-heap; the driver merges heaps) — never a
     global sort of the corpus."""
-    plan = plan_of(QUERIES["sample_reservoir"](spark, SF))
-    assert "TakeOrderedAndProject" in plan, plan
+    fp = fp_of("sample_reservoir", spark)
+    assert fp.nodes["TakeOrderedAndProject"], fp
 
 
 def test_zorder_layout_single_shuffle_no_python(spark):
     """The bit-interleave chain is pure JVM codegen; the only wide op
     is the partial-aggregated bucket rollup (+ its result ordering)."""
     plan = plan_of(QUERIES["q_zorder_layout"](spark, SF))
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert not fingerprint(plan).python, plan
     assert "partial_count" in plan or "partial_min" in plan, plan
 
 
@@ -468,24 +422,23 @@ def test_cdc_apply_shares_the_key_exchange(spark):
     """The latest-op window and the per-key rollup must ride ONE
     user_id hash exchange (the second exchange is the presentation
     ordering) — the same single-shuffle contract as a MERGE INTO."""
-    plan = plan_of(QUERIES["q_cdc_apply"](spark, SF))
-    assert plan.count(") Exchange") == 2, plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    fp = fp_of("q_cdc_apply", spark)
+    assert len(fp.shuffles) == 2 and not fp.python, fp
 
 
 def test_snapshot_diff_is_join_not_cartesian(spark):
     """Reconciliation must be a keyed full-outer join — never a
     cartesian compare."""
     plan = plan_of(QUERIES["q_snapshot_diff"](spark, SF))
-    assert "CartesianProduct" not in plan, plan
+    assert not fingerprint(plan).joins["CartesianProduct"], plan
     assert "FullOuter" in plan, plan
 
 
 def test_rrf_fused_topk_uses_window_group_limit(spark):
     """The fused top-K must benefit from WindowGroupLimit (map-side
     rank pruning before the final filter)."""
-    plan = plan_of(QUERIES["ann_rrf_hybrid"](spark, SF))
-    assert "WindowGroupLimit" in plan, plan
+    fp = fp_of("ann_rrf_hybrid", spark)
+    assert fp.nodes["WindowGroupLimit"], fp
 
 
 def test_bitmap_algebra_shuffles_bitmaps_not_ids(spark):
@@ -495,7 +448,7 @@ def test_bitmap_algebra_shuffles_bitmaps_not_ids(spark):
     plan = plan_of(QUERIES["q_bitmap_set_algebra"](spark, SF))
     assert "bitmap_construct_agg" in plan
     assert "bitmap_or_agg" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert not fingerprint(plan).python, plan
 
 
 def test_attribution_joins_on_user_key(spark):
@@ -503,9 +456,9 @@ def test_attribution_joins_on_user_key(spark):
     shuffled hash on user), with the time window as a join filter —
     never a cartesian or pure-BNL plan."""
     plan = plan_of(QUERIES["q_attribution_linear"](spark, SF))
-    assert "CartesianProduct" not in plan, plan
+    joins = fingerprint(plan).joins
+    assert not joins["CartesianProduct"] and not joins["BroadcastNestedLoopJoin"], joins
     assert "c_user" in plan and "t_user" in plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_new_analytics_plans_are_scale_shaped(spark):
@@ -515,14 +468,12 @@ def test_new_analytics_plans_are_scale_shaped(spark):
     plan = plan_of(QUERIES["q_regr_trend"](spark, SF))
     read = plan.split("ReadSchema:", 1)[1].splitlines()[0]
     assert "o_orderstatus" not in read and "o_orderpriority" not in read
-    assert "BroadcastHashJoin" in plan  # customer dim broadcasts
+    assert fingerprint(plan).joins["BroadcastHashJoin"]  # customer dim broadcasts
     # market basket: support joins broadcast; no cartesian anywhere
-    plan = plan_of(QUERIES["q_market_basket"](spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
+    joins = fp_of("q_market_basket", spark).joins
+    assert joins["BroadcastHashJoin"] and not joins["CartesianProduct"], joins
     # checksum: single shuffle on the group key, no sort before agg
-    plan = plan_of(QUERIES["q_table_checksum"](spark, SF))
-    assert "CartesianProduct" not in plan
+    assert not fp_of("q_table_checksum", spark).joins["CartesianProduct"]
     for name in (
         "q_market_basket",
         "q_regr_trend",
@@ -536,9 +487,7 @@ def test_new_analytics_plans_are_scale_shaped(spark):
         "corpus_mix_epochs",
         "q_unpivot",
     ):
-        p = plan_of(QUERIES[name](spark, SF))
-        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-            assert marker not in p, f"{name} plan contains {marker}"
+        assert not fp_of(name, spark).python, name
 
 
 # ---- r08 batch plan shapes ----
@@ -566,7 +515,7 @@ def test_inventory_and_stockout_push_year_and_broadcast_part(spark):
         assert any(
             "GreaterThanOrEqual" in b for b in pushed_blocks
         ), (key, pushed_blocks)
-        assert "BroadcastHashJoin" in plan, key
+        assert fingerprint(plan).joins["BroadcastHashJoin"], key
 
 
 def test_daily_grid_windows_are_single_exchange_family(spark):
@@ -580,21 +529,17 @@ def test_daily_grid_windows_are_single_exchange_family(spark):
         "q_rsi_sma",
         "q_weighted_moving_avg",
     ):
-        plan = plan_of(QUERIES[key](spark, SF))
-        n_exchange = plan.count("Exchange")
-        assert n_exchange <= 4, (key, n_exchange)  # formatted repeats refs
-        for marker in ("BatchEvalPython", "ArrowEvalPython"):
-            assert marker not in plan, key
+        fp = fp_of(key, spark)
+        assert len(fp.shuffles) + fp.broadcasts <= 2, (key, fp)
+        assert not fp.python, key
 
 
 def test_stats_suite_scans_events_once(spark):
     """Sufficient-statistics tests must be one scan + one tiny agg:
     no join back to the fact, no Python eval."""
     for key in ("q_jarque_bera", "q_grubbs_outlier", "q_cramers_v"):
-        plan = plan_of(QUERIES[key](spark, SF))
-        assert "SortMergeJoin" not in plan, key
-        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-            assert marker not in plan, key
+        fp = fp_of(key, spark)
+        assert not fp.joins["SortMergeJoin"] and not fp.python, (key, fp)
 
 
 def test_duplicate_invoice_prunes_columns(spark):
@@ -609,9 +554,8 @@ def test_duplicate_invoice_prunes_columns(spark):
 
 def test_concentration_broadcasts_dims(spark):
     for key in ("q_customer_concentration", "q_share_nested"):
-        plan = plan_of(QUERIES[key](spark, SF))
-        assert "BroadcastHashJoin" in plan, key
-        assert "CartesianProduct" not in plan, key
+        joins = fp_of(key, spark).joins
+        assert joins["BroadcastHashJoin"] and not joins["CartesianProduct"], (key, joins)
 
 
 def test_forecast_family_is_grid_shaped(spark):
@@ -626,20 +570,16 @@ def test_forecast_family_is_grid_shaped(spark):
         "q_cross_correlation",
         "q_fdr_bh",
     ):
-        plan = plan_of(QUERIES[key](spark, SF))
-        assert "SortMergeJoin" not in plan, key
-        assert "CartesianProduct" not in plan, key
-        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-            assert marker not in plan, key
+        fp = fp_of(key, spark)
+        assert not fp.joins["SortMergeJoin"] and not fp.joins["CartesianProduct"], key
+        assert not fp.python, key
 
 
 def test_cuped_is_rollup_plus_scalar_bounds(spark):
     """CUPED's only join is the 1-row span-bounds broadcast (the
     scalar-subquery idiom); the per-user rollup must not sort-merge."""
-    plan = plan_of(QUERIES["q_cuped_adjustment"](spark, SF))
-    assert "SortMergeJoin" not in plan
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan
+    fp = fp_of("q_cuped_adjustment", spark)
+    assert not fp.joins["SortMergeJoin"] and not fp.python, fp
 
 
 def test_geo_pair_joins_are_cell_keyed_not_cartesian(spark):
@@ -647,10 +587,8 @@ def test_geo_pair_joins_are_cell_keyed_not_cartesian(spark):
     — a CartesianProduct would mean the 9-cell blocking leaked. The
     only nested-loop allowed is the 1-row radius scalar."""
     for key in ("geo_knn_join", "geo_dbscan_grid"):
-        plan = plan_of(QUERIES[key](spark, SF))
-        assert "CartesianProduct" not in plan, key
-        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-            assert marker not in plan, key
+        fp = fp_of(key, spark)
+        assert not fp.joins["CartesianProduct"] and not fp.python, (key, fp)
 
 
 # --- plan claims of the r10/r11 optimization notes ------------------
@@ -669,12 +607,12 @@ def test_basket_graph_shuffles_order_part_and_pair_keys_only(spark):
     shuffles on the composite key."""
     from etl_city_directories_spark.operators.analytics import _basket_graph
 
-    keys = hash_keys(plan_of(_basket_graph(spark, SF)[3]))
+    keys = fingerprint(plan_of(_basket_graph(spark, SF)[3])).hash_keys
     assert set(keys) == {"l_orderkey", "l_partkey", "part_a, part_b"}, keys
     assert sum(keys.values()) <= 4, keys
     for name in ("q_market_basket", "graph_degree_distribution",
                  "graph_triangle_count", "graph_assortativity"):
-        keys = hash_keys(plan_of(QUERIES[name](spark, SF)))
+        keys = fp_of(name, spark).hash_keys
         assert "l_orderkey, l_partkey" not in keys, (name, keys)
 
 
@@ -682,8 +620,8 @@ def test_small_pair_graph_is_not_repartitioned(spark):
     """r10: _oriented_graph repartitions the pair graph only when it
     holds more than 1M edges; below that the round-robin shuffle and
     the second persisted copy are skipped."""
-    plan = plan_of(QUERIES["graph_triangle_count"](spark, SF))
-    assert not any("REPARTITION_BY_NUM" in a for a, _ in shuffles(plan)), plan
+    moved = fp_of("graph_triangle_count", spark).shuffles
+    assert not any("REPARTITION_BY_NUM" in a for a, _ in moved), moved
 
 
 def test_shingle_persists_carry_no_document_text(spark):
@@ -704,7 +642,7 @@ def test_rank_windows_run_over_preaggregated_values(spark):
     distinct values per group, not the fact."""
     for name, key in (("q_weighted_median", "l_returnflag, price_c"),
                       ("feature_robust_scale", "c_mktsegment, cents")):
-        keys = hash_keys(plan_of(QUERIES[name](spark, SF)))
+        keys = fp_of(name, spark).hash_keys
         assert keys[key] == 1, (name, keys)
 
 
@@ -721,8 +659,7 @@ def test_threshold_curve_shuffles_ids_not_vectors(spark):
     """r10: emb_cosine_threshold_curve shuffles (vec_id, table, bucket)
     ids through the cap window, the collision join and the pair dedup;
     the vectors join once per distinct pair, so no shuffle carries them."""
-    plan = plan_of(QUERIES["emb_cosine_threshold_curve"](spark, SF))
-    moved = shuffles(plan)
+    moved = fp_of("emb_cosine_threshold_curve", spark).shuffles
     assert moved
     for args, cols in moved:
         assert not {"v", "nrm"} & set(cols), (args, cols)
@@ -735,8 +672,8 @@ def test_widened_scans_repartition_before_per_row_work(spark):
     the per-row md5 / log math / replicate fan-out."""
     widen = spark.sparkContext.defaultParallelism > 1
     for name in ("q_table_checksum", "q_elasticity_loglog", "q_bootstrap_ci_mean"):
-        plan = plan_of(QUERIES[name](spark, SF))
-        assert any("REPARTITION_BY_NUM" in a for a, _ in shuffles(plan)) == widen, name
+        moved = fp_of(name, spark).shuffles
+        assert any("REPARTITION_BY_NUM" in a for a, _ in moved) == widen, name
 
 
 def test_union_rewrites_stay_single_explodes(spark):
@@ -747,12 +684,11 @@ def test_union_rewrites_stay_single_explodes(spark):
     with no affected-docs join."""
     for name in ("graph_pagerank_dupes", "q_funnel_time_percentiles",
                  "q_queue_little_law"):
-        plan = plan_of(QUERIES[name](spark, SF))
-        assert not re.search(r"^\(\d+\) Union", plan, re.M), name
-    plan = plan_of(QUERIES["dedup_threshold_sweep"](spark, SF))
-    keys = hash_keys(plan)
+        assert not fp_of(name, spark).nodes["Union"], name
+    fp = fp_of("dedup_threshold_sweep", spark)
+    keys = fp.hash_keys
     assert keys["doc_a, doc_b"] == 1 and keys["cut_pct"] == 1, keys
-    assert "SortMergeJoin" not in plan
+    assert not fp.joins["SortMergeJoin"], fp
 
 
 def test_second_run_in_a_session_keeps_its_persists(spark):
@@ -760,11 +696,10 @@ def test_second_run_in_a_session_keeps_its_persists(spark):
     between, still reads its persisted frames: each callsite's old
     entry is released before the new frame is persisted, so the second
     plan has the first plan's cache scans and no more Exchanges."""
-    first = plan_of(QUERIES["graph_assortativity"](spark, SF))
-    second = plan_of(QUERIES["graph_assortativity"](spark, SF))
-    assert "InMemoryRelation" in second, second
-    n_exchanges = [len(re.findall(r"^\(\d+\) Exchange", p, re.M)) for p in (first, second)]
-    assert n_exchanges[1] <= n_exchanges[0], n_exchanges
+    first = fp_of("graph_assortativity", spark)
+    second = fp_of("graph_assortativity", spark)
+    assert second.cached["InMemoryRelation"], second
+    assert len(second.shuffles) <= len(first.shuffles), (first, second)
 
 
 def test_cold_iterative_plans_keep_their_persists(spark):
@@ -773,9 +708,9 @@ def test_cold_iterative_plans_keep_their_persists(spark):
     pass (2 user_id shuffles), not once per power iteration (8);
     graph_pagerank_dupes embeds the dedup chain tail once (one pair
     shuffle, 2 before)."""
-    keys = hash_keys(plan_of(QUERIES["q_markov_stationary"](spark, SF)))
+    keys = fp_of("q_markov_stationary", spark).hash_keys
     assert keys["user_id"] <= 2, keys
-    keys = hash_keys(plan_of(QUERIES["graph_pagerank_dupes"](spark, SF)))
+    keys = fp_of("graph_pagerank_dupes", spark).hash_keys
     assert keys["doc_a, doc_b"] == 1, keys
 
 
@@ -792,11 +727,10 @@ def test_mmr_is_one_per_probe_program(spark, newest_job_id):
     start = newest_job_id()
     df = QUERIES["ann_mmr_diversify"](spark, SF)
     built = newest_job_id()
-    plan = plan_of(df)
+    fp = fingerprint(plan_of(df))
     df.collect()
     done = newest_job_id()
-    assert "SortMergeJoin" not in plan and "InMemoryRelation" not in plan, plan
-    assert hash_keys(plan) == collections.Counter({"probe_id": 1}), shuffles(plan)
-    assert len(shuffles(plan)) == 1, shuffles(plan)
-    assert len(re.findall(r"^\(\d+\) BroadcastExchange", plan, re.M)) == 1, plan
+    assert not fp.joins["SortMergeJoin"] and not fp.cached, fp
+    assert fp.hash_keys == {"probe_id": 1}, fp.shuffles
+    assert len(fp.shuffles) == 1 and fp.broadcasts == 1, fp
     assert done - built <= 3 and done - start <= 6, (built - start, done - built)

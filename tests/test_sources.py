@@ -162,18 +162,13 @@ def test_ndjson_empty_output_keeps_schema(spark, tmp_path):
 def test_partitioned_sink_prunes_partitions(spark, tmp_path):
     """Filtered read-back of the partitioned sink must scan only the
     matching partition directories (PartitionFilters on lang)."""
-    import contextlib
-    import io
-
     from etl_city_directories_spark.operators.ingest import sink_partitioned
+    from tools.plan_audit import plan_of
 
     path = str(tmp_path / "sink")
     sink_partitioned(spark, "/root/testdata/sf0.001", path=path)  # materialize
     back = spark.read.parquet(path).filter(F.col("lang") == "en")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        back.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_of(back)
     pf = plan.split("PartitionFilters: [", 1)
     assert len(pf) == 2, plan
     assert "lang" in pf[1].split("]", 1)[0]

@@ -1,26 +1,30 @@
-"""Plan audit: physical-plan shape summary for every query.
+"""Plan audit: the one reader of physical-plan text, and the plan-shape
+flags every query must pass.
 
-Prints, per query: join strategies, exchange/sort counts, Python eval
-nodes, and flags the patterns that would hurt at 100 TB (cartesian
-product, broadcast-NLJ on a non-probe-capped side, Python eval in an
-operator that doesn't declare it). Streaming entries are skipped (the
-plan exists only while the query runs).
+``fingerprint(plan_text)`` counts each operator of a formatted plan
+description (``plan_of``) once, from its ``(N) Name`` detail header
+(the tree repeats every node). Where AQE's description carries a final
+or current plan next to the initial one, the nodes only the initial
+plan holds are dropped. ``flags(name, fp)`` names the patterns that
+would hurt at 100 TB: a cartesian product, a broadcast nested-loop join
+on a side that is not capped, Python eval in an operator that doesn't
+declare it. ``tests/test_correctness.py`` asserts no flags on every
+query; ``tests/test_plans.py`` pins shapes with the fingerprint.
 
-Usage: python tools/plan_audit.py [sf_dir]
+Usage: python tools/plan_audit.py [sf_dir] [key ...]
+Prints every query's fingerprint (or only the named keys') and the
+total flag count.
 """
 
 from __future__ import annotations
 
+import collections
 import contextlib
 import io
 import os
 import re
 import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-import __spark_entry__ as m
-from etl_city_directories_spark.session import get_spark
+from typing import NamedTuple
 
 # ops that legitimately run Python (pandas UDF / mapInPandas)
 PYTHON_OK = {"dedup_simhash", "mm_image_meta", "mm_frame_sample", "mm_audio_meta",
@@ -172,15 +176,28 @@ BNLJ_OK = {
     # bootstrap expansion is the operator) + 1-row point-estimate frame
     "q_bootstrap_ci_mean",
 }
-SKIP = {"stream_tumbling_agg", "stream_sessionize", "stream_dedup_exact",
-        "ndjson_sink", "dedup_lsh_clusters"}  # run side effects / driver loops
+JOINS = {"BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+         "BroadcastNestedLoopJoin", "CartesianProduct"}
+# "(N) Name ..." detail header and the lines of its block; scans and
+# writes keep their second word ("Scan parquet", "Execute InsertInto...")
+_NODE = re.compile(r"^\((\d+)\) ((?:Scan|Execute) \S+|\S+)(.*)((?:\n.+)*)", re.M)
+_AQE = re.compile(r"^ *\+- == (Final|Current|Initial) Plan ==\n.*?\((\d+)\)", re.M)
 
-MARKS = [
-    "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
-    "BroadcastNestedLoopJoin", "CartesianProduct",
-    "Exchange", "Sort ", "ArrowEvalPython", "BatchEvalPython",
-    "MapInPandas", "FlatMapGroupsInPandas",
-]
+
+class Fingerprint(NamedTuple):
+    """Each operator of one physical plan, counted once."""
+
+    nodes: collections.Counter  # operator name -> count
+    # (partitioning, input columns) of every shuffle Exchange, with
+    # expression ids, partition counts and plan ids stripped, e.g.
+    # ("hashpartitioning(l_orderkey), ENSURE_REQUIREMENTS", ["l_orderkey", "buf"])
+    shuffles: list
+    hash_keys: collections.Counter  # shuffles per hash key list, e.g. {"part_a, part_b": 1}
+    broadcasts: int  # BroadcastExchange nodes
+    joins: collections.Counter  # join nodes by strategy
+    python: collections.Counter  # Python-eval nodes (ArrowEvalPython, MapInPandas, ...)
+    scans: collections.Counter  # (format, table or file stem) -> count
+    cached: collections.Counter  # InMemoryRelation / InMemoryTableScan nodes
 
 
 def plan_of(df) -> str:
@@ -190,33 +207,87 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def _superseded(plan: str) -> set[int]:
+    """Ids of the nodes that only an AQE initial plan holds. Formatted
+    explain numbers an adaptive plan's final (or current) plan first, in
+    post-order, then the initial plan's remaining nodes: so those are
+    the ids after the final plan's root, up to the initial plan's root."""
+    out: set[int] = set()
+    final_roots = []
+    for m in _AQE.finditer(plan):
+        if m.group(1) == "Initial":
+            out.update(range(final_roots.pop() + 1, int(m.group(2)) + 1))
+        else:
+            final_roots.append(int(m.group(2)))
+    return out
+
+
+def fingerprint(plan: str) -> Fingerprint:
+    """Count each operator of a formatted plan once (see the module doc)."""
+    dropped = _superseded(plan)
+    nodes, shuffles, scans = collections.Counter(), [], collections.Counter()
+    for m in _NODE.finditer(plan):
+        node_id, name, rest, body = int(m.group(1)), m.group(2), m.group(3), m.group(4)
+        if node_id in dropped:
+            continue
+        nodes[name] += 1
+        if name == "Exchange":
+            cols = re.search(r"^Input(?: \[\d+\])?: \[(.*)\]$", body, re.M).group(1)
+            args = re.search(r"^Arguments: (.*)$", body, re.M).group(1)
+            args = re.sub(r"#\d+L?|, \[plan_id=\d+\]", "", args)
+            args = re.sub(r", \d+\)", ")", args)
+            args = re.sub(r"RoundRobinPartitioning\(\d+\)", "RoundRobinPartitioning", args)
+            shuffles.append((args, re.sub(r"#\d+L?", "", cols).split(", ") if cols else []))
+        elif name.startswith("Scan "):
+            loc = re.search(r"^Location: [^\[]*\[([^,\]]*)", body, re.M)
+            table = rest.strip() or os.path.basename(loc.group(1) if loc else "").split(".")[0]
+            scans[name[5:], table] += 1
+
+    def only(match) -> collections.Counter:
+        return collections.Counter({k: n for k, n in nodes.items() if match(k)})
+
+    hash_keys = collections.Counter(
+        m.group(1) for args, _ in shuffles if (m := re.match(r"hashpartitioning\((.*)\),", args))
+    )
+    return Fingerprint(
+        nodes, shuffles, hash_keys, nodes["BroadcastExchange"], only(JOINS.__contains__),
+        only(re.compile("Pandas|Python|Arrow").search), scans,
+        only(("InMemoryRelation", "InMemoryTableScan").__contains__),
+    )
+
+
+def flags(name: str, fp: Fingerprint) -> list[str]:
+    """The plan-shape flags of query ``name``: [] when its plan is fine."""
+    out = []
+    if fp.joins["CartesianProduct"]:
+        out.append("CARTESIAN")
+    if fp.joins["BroadcastNestedLoopJoin"] and name not in BNLJ_OK:
+        out.append("BNLJ")
+    if fp.python and name not in PYTHON_OK:
+        out.append("PYTHON")
+    return out
+
+
 def main() -> None:
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as m
+    from etl_city_directories_spark.session import get_spark
+
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])  # optional key subset: audit just-landed ops
     spark = get_spark("plan-audit", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     flags_total = 0
     for name, fn in sorted(m.queries().items()):
-        if name in SKIP or (only and name not in only):
+        if only and name not in only:
             continue
-        plan = plan_of(fn(spark, sf_dir))
-        counts = {mk.strip(): len(re.findall(re.escape(mk), plan)) for mk in MARKS}
-        counts = {k: v for k, v in counts.items() if v}
-        flags = []
-        if counts.get("CartesianProduct"):
-            flags.append("CARTESIAN")
-        if counts.get("BroadcastNestedLoopJoin") and name not in BNLJ_OK:
-            flags.append("BNLJ")
-        if (
-            any(counts.get(k) for k in
-                ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-                 "FlatMapGroupsInPandas"))
-            and name not in PYTHON_OK
-        ):
-            flags.append("PYTHON")
-        flags_total += len(flags)
-        flag_str = (" ⚠ " + ",".join(flags)) if flags else ""
-        print(f"{name:24} {counts}{flag_str}")
+        fp = fingerprint(plan_of(fn(spark, sf_dir)))
+        found = flags(name, fp)
+        flags_total += len(found)
+        flag_str = (" ⚠ " + ",".join(found)) if found else ""
+        print(f"{name:24} shuffles={len(fp.shuffles)} broadcasts={fp.broadcasts} "
+              f"joins={dict(fp.joins)} python={dict(fp.python)} "
+              f"scans={sum(fp.scans.values())} cached={dict(fp.cached)}{flag_str}")
     print(f"\nflags: {flags_total}")
     spark.stop()
 
