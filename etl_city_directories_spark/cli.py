@@ -34,7 +34,8 @@ and materializes the typed manifest; ``parse`` emits column-assigned,
 entry-parsed OCR lines as NDJSON, each with the reference's makeId
 ``id`` (year.page.bbox, :261-270), since year, page and bbox are all
 known there; ``geocode`` emits per-location geocode results carrying
-the line's ``id`` and the matched address's ``geom_x`` / ``geom_y``;
+the line's key (``LINE_KEY``) and ``id`` and the matched address's
+``geom_x`` / ``geom_y``;
 ``transform`` reads only the parse and geocode outputs and emits
 ``objects`` / ``relations`` / ``logs`` NDJSON (:443-450). Geocode is the
 only step that reads the ``addresses`` key, as in the reference, whose
@@ -50,8 +51,18 @@ for transform — counted by the write's own job, not by re-reading.
 
 Scale shape: every step is the same declarative plan the operator
 surface uses — parse is one scan and one Python pass (below), the entry
-parser is pure JVM expressions, the address dims broadcast, and all
-sinks are Spark's distributed NDJSON writer (no driver funnel).
+parser is pure JVM expressions, and all sinks are Spark's distributed
+NDJSON writer (no driver funnel).
+
+Only geocode broadcasts: its two address dims hold the address dataset,
+which is real data at any scale and far smaller than the corpus side.
+The other steps broadcast nothing. A broadcast hash table holds at
+least one memory page (32 MB with a 2 GB driver heap on local[2]) until
+the context cleaner drops it, however few rows it has. So download dedupes the manifest's
+uuids on the driver, parse takes the manifest columns its lines carry
+from the manifest rows it has already collected, as a literal map keyed
+by uuid, and transform builds each object in one keyed aggregation over
+the lines and their geocode rows, with no join.
 
 Parse reads every windowed archive in one ``binaryFile`` scan;
 ``spark.sql.files.maxPartitionBytes`` groups archives into partitions,
@@ -66,6 +77,7 @@ import os
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType, StringType
 
 from etl_city_directories_spark.operators.citydir import (
     geocode_locations,
@@ -81,6 +93,9 @@ from etl_city_directories_spark.sources.manifest import read_manifest
 from etl_city_directories_spark.sources.ndjson import read_ndjson, write_ndjson
 
 STEPS = ("download", "parse", "geocode", "transform")
+# one parsed line: two pages of an archive may share a page number, so
+# the page's uuid is part of the key
+LINE_KEY = ("uuid", "page_uuid", "page_num", "line_index")
 
 
 def _dir(work: str, step: str) -> str:
@@ -125,18 +140,29 @@ def step_parse(spark: SparkSession, cfg: dict, work: str) -> int:
         manifest = manifest.filter(
             F.coalesce("year_end", "year_start") <= int(cfg["maxYear"])
         )
-    archives = {}
-    for r in manifest.select("uuid", "column_count", "start_page", "end_page").collect():
+    carried = manifest.select("year_raw", "start_page", "end_page").schema
+    archives, meta = {}, {}
+    for r in manifest.select("uuid", "column_count", *carried.fieldNames()).collect():
         path = os.path.join(dl, "data", f"{r.uuid}.tar.gz")
         if os.path.exists(path):  # the reference re-checks at parse time (:195)
-            archives[path] = tuple(r[1:])
-    # the Python pass applies the page window; the join brings the
-    # manifest columns the later steps read
-    windowed = read_hocr_lines(spark, archives).withColumn(
-        "uuid", F.regexp_extract(F.col("archive"), r"([0-9a-f-]+)\.tar\.gz$", 1)
-    ).join(
-        F.broadcast(manifest.select("uuid", "year_raw", "start_page", "end_page")),
-        "uuid",
+            # a uuid the manifest lists twice is read once, with its
+            # last row's window and year
+            archives[path] = (r.column_count, r.start_page, r.end_page)
+            meta[r.uuid] = r[2:]
+    # the Python pass applies the page window; the manifest columns the
+    # later steps read come from the rows collected above, as a literal
+    # map keyed by uuid (no join, no broadcast)
+    by_uuid = F.create_map(
+        *(c for u, vals in meta.items() for c in (F.lit(u), F.struct(*map(F.lit, vals))))
+    ).cast(MapType(StringType(), carried))
+    lines = read_hocr_lines(spark, archives)
+    windowed = (
+        lines.withColumn(
+            "uuid", F.regexp_extract(F.col("archive"), r"([0-9a-f-]+)\.tar\.gz$", 1)
+        )
+        .withColumn("m", by_uuid[F.col("uuid")])
+        .filter(F.col("m").isNotNull())  # an archive name that gives no listed uuid
+        .select("uuid", *lines.columns, "m.*")
     )
     entries = parse_entries_real(windowed).withColumn(
         "id",
@@ -160,15 +186,11 @@ def step_geocode(spark: SparkSession, cfg: dict, work: str) -> int:
         spark.read.parquet(cfg["addresses"]) if cfg.get("addresses") else None
     )
     locs = lines.select(
-        "uuid",
-        "page_num",
-        "line_index",
+        *LINE_KEY,
         "id",
         F.posexplode("locations").alias("loc_idx", "loc"),
     ).select(
-        "uuid",
-        "page_num",
-        "line_index",
+        *LINE_KEY,
         "id",
         "loc_idx",
         F.col("loc.value").alias("loc_value"),
@@ -187,23 +209,35 @@ def step_transform(spark: SparkSession, cfg: dict, work: str) -> int:
     lines = read_ndjson(spark, os.path.join(pr, "lines.ndjson"))
     geo = read_ndjson(spark, os.path.join(gc, "geocoded.ndjson"))
 
-    key = ["uuid", "page_num", "line_index"]
-    pts = geo.groupBy(*key).agg(*geocode_summary())
     since, until = validity(F.col("year_raw"), _year_lo())
-    objects = lines.join(pts, key, "left").select(
-        "id",
-        F.lit("st:Person").alias("type"),
-        F.col("subject").alias("name"),
-        since.alias("validSince"),
-        until.alias("validUntil"),
-        F.col("uuid").alias("volumeUuid"),
-        F.col("page_uuid").alias("pageUuid"),
-        F.col("page_num").alias("pageNum"),
-        "text",
-        F.try_element_at("occupations", F.lit(1)).alias("occupation"),
-        F.coalesce("n_locations", F.lit(0)).alias("n_locations"),
-        F.coalesce("n_geocoded", F.lit(0)).alias("n_geocoded"),
-        point_geometry(F.col("pts")).alias("geometry"),
+    obj = lines.select(
+        *LINE_KEY,
+        F.struct(
+            "id",
+            F.lit("st:Person").alias("type"),
+            F.col("subject").alias("name"),
+            since.alias("validSince"),
+            until.alias("validUntil"),
+            F.col("uuid").alias("volumeUuid"),
+            F.col("page_uuid").alias("pageUuid"),
+            F.col("page_num").alias("pageNum"),
+            "text",
+            F.try_element_at("occupations", F.lit(1)).alias("occupation"),
+        ).alias("object"),
+    )
+    # One keyed aggregation over the lines and their geocode rows in
+    # place of a join: every line object in a key's group gets the
+    # group's summary, so a repeated key gives one object per line,
+    # and a geocode row with a null key part matches no line.
+    hits = geo.dropna(subset=list(LINE_KEY)).select(
+        *LINE_KEY, "loc_idx", "loc_value", "address_id", "geom_x", "geom_y"
+    )
+    objects = (
+        obj.unionByName(hits, allowMissingColumns=True)
+        .groupBy(*LINE_KEY)
+        .agg(F.collect_list("object").alias("objects"), *geocode_summary())
+        .select(F.explode("objects").alias("o"), "n_locations", "n_geocoded", "pts")
+        .select("o.*", "n_locations", "n_geocoded", point_geometry(F.col("pts")).alias("geometry"))
     )
     relations = geo.filter(F.col("address_id").isNotNull()).select(
         F.col("id").alias("from"),

@@ -23,6 +23,7 @@ from etl_city_directories_spark.sources.hocr import (
     read_hocr_lines,
     read_hocr_pages,
 )
+from etl_city_directories_spark.sources.local import local_frame
 from etl_city_directories_spark.sources.manifest import read_manifest
 from etl_city_directories_spark.sources.ndjson import read_ndjson, write_ndjson
 
@@ -123,6 +124,12 @@ def fetch_archives(
     empty ``{uuid}.xml``, marks the row ``error`` and the job keeps going
     (per-archive tolerance, :91-97).
 
+    The manifest is a driver-sized table (one row per directory volume),
+    so its distinct uuids are taken on the driver, in manifest order; a
+    ``read_manifest`` frame is a local relation, and collecting it runs
+    no job. The fetch runs over a local frame of those uuids, spread
+    over up to ``defaultParallelism`` tasks, with no shuffle.
+
     ``fetcher`` is the remote seam (``default_fetcher`` when None, and
     then ``base_uri`` is validated here, on the driver, so an s3://-style
     URI fails fast instead of per row). It runs on the executor, so a
@@ -155,9 +162,10 @@ def fetch_archives(
                 out, columns=["uuid", "filename", "status", "n_bytes"]
             )
 
-    return manifest.select("uuid").distinct().mapInPandas(
-        _fetch, "uuid string, filename string, status string, n_bytes long"
-    )
+    uuids = dict.fromkeys(r.uuid for r in manifest.select("uuid").collect())
+    return local_frame(
+        manifest.sparkSession, [(u,) for u in uuids], "uuid string"
+    ).mapInPandas(_fetch, "uuid string, filename string, status string, n_bytes long")
 
 
 def cd_download(

@@ -396,12 +396,17 @@ def q_bloom_semi_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_BLOOM_CONFS``, so it plans and runs under them while the
     caller's conf stays untouched. The tables are read in the clone:
     ``load_table``'s memoized relations belong to the caller's session.
+    The clone reads them with those relations' schemas, so building the
+    frame runs no schema-inference job.
     """
     clone = clone_session(spark, _BLOOM_CONFS)
-    o = clone.read.parquet(f"{sf_dir}/orders.parquet").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    l = clone.read.parquet(f"{sf_dir}/lineitem.parquet")
+
+    def read(name: str) -> DataFrame:
+        schema = load_table(spark, sf_dir, name).schema
+        return clone.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+
+    o = read("orders").filter(F.col("o_orderpriority") == "1-URGENT")
+    l = read("lineitem")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .groupBy("l_returnflag")

@@ -2,17 +2,21 @@
 reference's usage surface (config file + step dirs) on fixtures."""
 
 import glob
+import gzip
+import io
 import json
 import os
 import shutil
 import subprocess
 import sys
+import tarfile
 
 import pytest
 
 from etl_city_directories_spark import cli
 from etl_city_directories_spark.cli import STEPS, run
 from etl_city_directories_spark.operators.ingest import FIXTURES, _UUID, fixture_archive
+from etl_city_directories_spark.sources.ndjson import SCHEMA_FILE, write_ndjson
 from perfbench import gen
 from perfbench.etl import check_step
 from tools.plan_audit import fingerprint
@@ -175,12 +179,8 @@ def test_download_rejects_unfetchable_data_url(spark, tmp_path):
     assert not os.path.exists(os.path.join(work, "download", "manifest.ndjson"))
 
 
-def test_duplicate_manifest_row_is_fetched_once(spark, tmp_path):
-    """The manifest keeps a repeated row, but its archive is fetched
-    once and has one status row."""
-    data = str(tmp_path / "d_dup")
-    os.makedirs(data)
-    shutil.copy(fixture_archive(), data)
+def _repeated_row_manifest(tmp_path):
+    """The fixture manifest with the fixture archive's row listed twice."""
     with open(os.path.join(FIXTURES, "manifest.html"), encoding="utf-8") as f:
         html = f.read()
     row = html[html.index(f"<tr><td>{_UUID}"):]
@@ -188,6 +188,16 @@ def test_duplicate_manifest_row_is_fetched_once(spark, tmp_path):
     manifest = str(tmp_path / "manifest.html")
     with open(manifest, "w", encoding="utf-8") as f:
         f.write(html.replace(row, row + row))
+    return manifest
+
+
+def test_duplicate_manifest_row_is_fetched_once(spark, tmp_path):
+    """The manifest keeps a repeated row, but its archive is fetched
+    once and has one status row."""
+    data = str(tmp_path / "d_dup")
+    os.makedirs(data)
+    shutil.copy(fixture_archive(), data)
+    manifest = _repeated_row_manifest(tmp_path)
     work = str(tmp_path / "w_dup")
     counts = run(_write_config(tmp_path, tableUrl=manifest, dataUrl=data), work,
                  ["download"], spark=spark)
@@ -195,6 +205,29 @@ def test_duplicate_manifest_row_is_fetched_once(spark, tmp_path):
     assert [m["uuid"] for m in rows].count(_UUID) == 2
     status = _read_ndjson_dir(os.path.join(work, "download", "status.ndjson"))
     assert counts["download"] == len(status) == len({s["uuid"] for s in status}) == 4
+
+
+def test_duplicate_manifest_row_is_parsed_once(spark, tmp_path, cli_work):
+    """A uuid the manifest lists twice is read once: parse writes each
+    of its lines once, the same lines as with the row listed once, so
+    no object id repeats downstream."""
+    data = str(tmp_path / "d_dup_parse")
+    os.makedirs(data)
+    shutil.copy(fixture_archive(), data)
+    cfg = _write_config(
+        tmp_path, tableUrl=_repeated_row_manifest(tmp_path), dataUrl=data,
+        minYear=1850, maxYear=1890,
+    )
+    work = str(tmp_path / "w_dup_parse")
+    counts = run(cfg, work, ["download", "parse"], spark=spark)
+
+    def lines(w):
+        rows = _read_ndjson_dir(os.path.join(w, "parse", "lines.ndjson"))
+        return sorted((ln["id"], ln["year_raw"], ln["text"]) for ln in rows)
+
+    assert counts["parse"] == cli_work[1]["parse"]
+    assert lines(work) == lines(cli_work[0])
+    assert len({i for i, _, _ in lines(work)}) == counts["parse"]
 
 
 def test_parse_silently_skips_missing_archives(cli_work):
@@ -241,11 +274,12 @@ def test_parse_skips_archive_missing_after_download(spark, tmp_path):
     assert counts["parse"] == 0
 
 
-def test_year_window_excludes_all(spark, tmp_path):
+def test_year_window_excludes_all(spark, tmp_path, cli_work):
     """A minYear above every directory leaves parse empty — the
     reference's directory windowing (:191-195). Parse still writes an
-    empty, schema-carrying output, so the later steps run on it and
-    write empty outputs instead of failing on a missing path."""
+    empty output that carries the same schema as a non-empty one, so
+    the later steps run on it and write empty outputs instead of
+    failing on a missing path."""
     work = str(tmp_path / "w2")
     data = str(tmp_path / "d2")
     os.makedirs(data)
@@ -263,6 +297,12 @@ def test_year_window_excludes_all(spark, tmp_path):
     counts = run(cfg_path, work, spark=spark)
     assert counts == {"download": counts["download"], "parse": 0, "geocode": 0, "transform": 0}
     assert counts["download"] > 0
+    for step, name in (("parse", "lines"), ("geocode", "geocoded"), ("transform", "objects")):
+        schemas = [
+            open(os.path.join(w, step, f"{name}.ndjson", SCHEMA_FILE), encoding="utf-8").read()
+            for w in (work, cli_work[0])
+        ]
+        assert schemas[0] == schemas[1], step
     out = os.path.join(work, "transform")
     for name in ("objects", "relations", "logs"):
         assert os.path.isdir(os.path.join(out, f"{name}.ndjson"))
@@ -369,10 +409,75 @@ def test_geocode_with_no_hits(spark, tmp_path):
     assert len(_read_ndjson_dir(os.path.join(out, "objects.ndjson"))) == counts["transform"]
 
 
+def test_pages_sharing_a_number_keep_their_own_locations(spark, tmp_path):
+    """Two hOCR members of one archive may carry the same page number.
+    Each object counts its own line's locations, not those of the line
+    at the same place on the other page: the page's uuid is part of
+    the key that geocode carries and transform groups on."""
+    with open(os.path.join(FIXTURES, "sample_entries.hocr"), "rb") as f:
+        hocr = f.read()
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w") as tf:
+        for image_id, page_uuid in (("111", "pageA"), ("222", "pageB")):
+            info = tarfile.TarInfo(f"{_UUID}/20.{image_id}.{page_uuid}.processed.hocr")
+            info.size = len(hocr)
+            tf.addfile(info, io.BytesIO(hocr))
+    data = tmp_path / "d_pages"
+    data.mkdir()
+    (data / f"{_UUID}.tar.gz").write_bytes(gzip.compress(buf.getvalue()))
+    work = str(tmp_path / "w_pages")
+    cfg = _write_config(
+        tmp_path, tableUrl=os.path.join(FIXTURES, "manifest.html"), dataUrl=str(data)
+    )
+    run(cfg, work, spark=spark)
+    lines = _read_ndjson_dir(os.path.join(work, "parse", "lines.ndjson"))
+    geo = _read_ndjson_dir(os.path.join(work, "geocode", "geocoded.ndjson"))
+    objs = _read_ndjson_dir(os.path.join(work, "transform", "objects.ndjson"))
+    assert {o["pageUuid"] for o in objs} == {"pageA", "pageB"}
+    # the two pages hold the same lines, so (page uuid, id) names a line
+    assert {(o["pageUuid"], o["id"]): o["n_locations"] for o in objs} == {
+        (ln["page_uuid"], ln["id"]): len(ln["locations"]) for ln in lines
+    }
+    assert sum(o["n_geocoded"] for o in objs) == sum(
+        g.get("address_id") is not None for g in geo
+    )
+
+
+def test_transform_gives_one_object_per_line(spark, tmp_path):
+    """Every parsed line gives exactly one object, also when two lines
+    share a key or a key part is null. Lines that share a key share its
+    geocode rows; a line with a null key part matches none."""
+    work = str(tmp_path / "w_keys")
+    lines = spark.createDataFrame(
+        [
+            ("u1", 3, 0, "p1", "1850", "Wilson Jas, porter, h 23 Pearl",
+             "Wilson Jas", ["porter"], [("23 Pearl", "home")], "a"),
+            ("u1", 3, 0, "p1", "1850", "Brown Wm, lab., 88 Water",
+             "Brown Wm", ["lab."], [("88 Water", "address")], "b"),
+            ("u1", 3, None, "p1", "1850", "Smith Jno, cartman, 23 Pearl",
+             "Smith Jno", ["cartman"], [("23 Pearl", "address")], "c"),
+            ("u1", 3, None, "p1", "1850", "Jones Ann, widow",
+             "Jones Ann", [], [], "d"),
+        ],
+        "uuid string, page_num int, line_index int, page_uuid string,"
+        " year_raw string, text string, subject string,"
+        " occupations array<string>,"
+        " locations array<struct<value: string, loc_type: string>>, id string",
+    )
+    write_ndjson(lines, os.path.join(work, "parse", "lines.ndjson"))
+    assert cli.step_geocode(spark, {}, work) == 3
+    assert cli.step_transform(spark, {}, work) == 4
+    objs = _read_ndjson_dir(os.path.join(work, "transform", "objects.ndjson"))
+    assert sorted((o["id"], o["n_locations"]) for o in objs) == [
+        ("a", 2), ("b", 2), ("c", 0), ("d", 0)
+    ]
+    assert [o.get("geometry") for o in objs if o["id"] in ("c", "d")] == [None, None]
+
+
 # Spark jobs per step on the fixture run: one write job per output plus
 # the broadcasts and shuffle stages their plans need. A re-read to count
 # rows or a schema-inference pass adds jobs and trips this budget.
-STEP_JOB_BUDGET = {"download": 3, "parse": 3, "geocode": 3, "transform": 5}
+STEP_JOB_BUDGET = {"download": 2, "parse": 2, "geocode": 3, "transform": 4}
 
 
 def test_step_job_budget(spark, tmp_path, newest_job_id):
@@ -411,7 +516,6 @@ def test_surface_divergences(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from etl_city_directories_spark.operators.citydir import cd_logs, geocode_locations
-    from etl_city_directories_spark.sources.ndjson import write_ndjson
 
     corner, miss = "Pearl c Cherry", "26 Elm"  # 26 = 2 x GEOCODE_MISS_MOD
     work = str(tmp_path / "w_div")
@@ -458,21 +562,31 @@ def test_surface_divergences(spark, tmp_path):
 @pytest.fixture(scope="module")
 def ledger_run(spark, tmp_path_factory):
     """``cli.run`` over the benchmark generator's tiny inputs, one step at
-    a time, with the executed plan of the parse write: the newest SQL
-    execution once parse returns, read from the SQL status store (live
-    with the UI off)."""
+    a time, with the executed plans of each step's SQL executions, read
+    from the SQL status store (live with the UI off) once the step
+    returns."""
     inputs = gen.inputs(str(tmp_path_factory.mktemp("gen")), "tiny", 7)
     cfg_path = _write_config(tmp_path_factory.mktemp("ledger"), **inputs.config())
     work = str(tmp_path_factory.mktemp("ledger_work"))
     store = spark._jsparkSession.sharedState().statusStore()
-    counts, parse_plan = {}, None
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def newest(n):
+        """The newest ``n`` executions, oldest first."""
+        total = int(store.executionsCount())
+        seq = store.executionsList(max(total - n, 0), min(n, total))
+        return [seq.apply(i) for i in range(seq.size())]
+
+    counts, plans = {}, {}
     for step in STEPS:
+        bus.waitUntilEmpty()
+        last = max((e.executionId() for e in newest(1)), default=-1)
         counts.update(run(cfg_path, work, [step], spark=spark))
-        if step == "parse":
-            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-            newest = store.executionsList(int(store.executionsCount()) - 1, 1).head()
-            parse_plan = newest.physicalPlanDescription()
-    return work, counts, inputs.ledger, parse_plan
+        bus.waitUntilEmpty()
+        plans[step] = [
+            e.physicalPlanDescription() for e in newest(8) if e.executionId() > last
+        ]
+    return work, counts, inputs.ledger, plans
 
 
 def test_cli_matches_generator_ledger(ledger_run):
@@ -492,13 +606,28 @@ def test_cli_matches_generator_ledger(ledger_run):
 def test_parse_is_one_scan_and_one_python_pass(ledger_run):
     """The parse write reads every archive in one binaryFile scan and
     one Python pass (untar, page window, column detection), with no
-    union of per-column-count scans."""
-    plan = ledger_run[3]
+    union of per-column-count scans and no broadcast: the manifest
+    columns ride in a literal map built from the rows the step already
+    collected."""
+    plan = ledger_run[3]["parse"][-1]
     fp = fingerprint(plan)  # AQE's final plan only
     assert fp.nodes["Execute InsertIntoHadoopFsRelationCommand"] == 1, plan
     assert sum(fp.python.values()) == 1, plan
     assert [fmt for fmt, _ in fp.scans.elements()].count("binaryFile") == 1, plan
     assert not fp.nodes["Union"], plan
+    assert fp.broadcasts == 0, plan
+
+
+def test_transform_broadcasts_nothing(ledger_run):
+    """Transform's three writes plan no broadcast, before or after AQE
+    re-plans at run time: objects come from one keyed aggregation over
+    the lines and their geocode rows, with one shuffle and no join."""
+    plans = ledger_run[3]["transform"]
+    assert len(plans) == 3, plans
+    fps = [fingerprint(p) for p in plans]
+    assert [fp.broadcasts for fp in fps] == [0, 0, 0], plans
+    assert [sum(fp.joins.values()) for fp in fps] == [0, 0, 0], plans
+    assert len(fps[0].shuffles) == 1, plans[0]
 
 
 def test_cli_runs_from_another_directory(tmp_path):

@@ -300,11 +300,13 @@ def test_bloom_semi_reduction_inserts_runtime_filter(spark, newest_job_id):
     """The operator's own frame pushes the urgent-orders bloom filter
     into the lineitem probe side (might_contain in the plan): it is
     built in a session clone under the bloom confs, so the caller's
-    conf is untouched, and building it runs only the two parquet schema
-    reads (no collect)."""
-    from etl_city_directories_spark.operators.scale_ops import _BLOOM_CONFS
+    conf is untouched, and once ``load_table`` holds the two relations,
+    building it runs no job: no collect, and no parquet schema read."""
+    from etl_city_directories_spark.operators.scale_ops import _BLOOM_CONFS, load_table
 
     before = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
+    for name in ("orders", "lineitem"):
+        load_table(spark, SF, name)
     start = newest_job_id()
     df = QUERIES["q_bloom_semi_reduction"](spark, SF)
     built = newest_job_id()
@@ -312,7 +314,7 @@ def test_bloom_semi_reduction_inserts_runtime_filter(spark, newest_job_id):
     assert "might_contain" in plan, plan
     assert "bloom_filter_agg" in plan, plan
     assert {k: spark.conf.get(k, None) for k in _BLOOM_CONFS} == before
-    assert built - start <= 2, built - start  # 8 when it collected eagerly
+    assert built - start == 0, built - start  # 2 with schema inference, 8 with a collect
 
 
 def test_dpp_prunes_fact_partitions(spark, tmp_path):

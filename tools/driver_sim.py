@@ -93,7 +93,7 @@ def cli_sim(spark) -> int:
         FROM lines
       ),
       pz AS (
-        SELECT g.uuid, g.page_num, g.line_index,
+        SELECT g.uuid, g.page_uuid, g.page_num, g.line_index,
                COUNT(g.address_id) AS n_geocoded,
                COUNT(g.loc_value) AS n_locations,
                list_sort(list({{'loc_idx': g.loc_idx,
@@ -103,7 +103,7 @@ def cli_sim(spark) -> int:
                list(g.address_id)
                  FILTER (WHERE g.address_id IS NOT NULL) AS address_ids
         FROM geo g LEFT JOIN addresses a USING (address_id)
-        GROUP BY 1, 2, 3
+        GROUP BY 1, 2, 3, 4
       )
     """
     replays = {
@@ -127,14 +127,14 @@ def cli_sim(spark) -> int:
                                     || CAST(trunc(q.geom_y) AS INT)), ',')
                          || ')'
                END AS geometry
-        FROM keyed k LEFT JOIN pz p USING (uuid, page_num, line_index)
+        FROM keyed k LEFT JOIN pz p USING (uuid, page_uuid, page_num, line_index)
         """,
         "cli_relations": base_ctes
         + """
         SELECT entry_id AS "from", CAST(aid AS VARCHAR) AS "to",
                'st:in' AS type
         FROM (SELECT k.entry_id, unnest(p.address_ids) AS aid
-              FROM keyed k JOIN pz p USING (uuid, page_num, line_index))
+              FROM keyed k JOIN pz p USING (uuid, page_uuid, page_num, line_index))
         WHERE aid IS NOT NULL
         """,
         "cli_logs": """

@@ -27,7 +27,7 @@ import sys
 from typing import NamedTuple
 
 # ops that legitimately run Python (pandas UDF / mapInPandas)
-PYTHON_OK = {"dedup_simhash", "mm_image_meta", "mm_frame_sample", "mm_audio_meta",
+PYTHON_OK = {"mm_image_meta", "mm_frame_sample", "mm_audio_meta",
              # archive untar + hOCR decode in one Python pass
              "hocr_parse", "hocr_source_v2",
              # trained-perceptron decode: broadcast weights + Arrow-batched
@@ -66,9 +66,6 @@ BNLJ_OK = {
     # + target totals) — the scalar-subquery idiom
     "sample_dsir",
     "q22_idle_customers",
-    # k-means assignment: crossJoin(broadcast(K-row centroid table))
-    # is the intended map-side shape (asserted in tests/test_plans.py)
-    "ann_ivf_bucketed",
     # 1-row global-total crossJoin (scalar-subquery idiom)
     "q11_important_stock",
     # PQ LUT build: probes.crossJoin(broadcast(M×K codebook rows)) —
@@ -98,7 +95,6 @@ BNLJ_OK = {
     # scalar-subquery idiom; the pair joins themselves are cell-key
     # SMJ/BHJ, never cartesian
     "geo_knn_join",
-    "geo_dbscan_grid",
     # 1-row max-orderdate crossJoin (the delta cutoff) — the
     # scalar-subquery idiom; the view joins themselves are SMJ/BHJ
     "q_ivm_delta_join",
@@ -107,8 +103,8 @@ BNLJ_OK = {
     "q_queue_little_law",
     # 1-row span-bounds crossJoin (the fold-step scalar)
     "sample_kfold_timeseries",
-    # k-means-style crossJoin(broadcast(K-row centroid table)) — the
-    # same intended map-side shape as ann_ivf_bucketed
+    # k-means-style crossJoin(broadcast(K-row centroid table)), the
+    # intended map-side shape for a K-row side
     "emb_silhouette",
     # date-spine densification: users.crossJoin(broadcast(spine)) —
     # the spine is O(days), the canonical gap-fill expansion shape
@@ -145,11 +141,9 @@ BNLJ_OK = {
     # capped broadcast-probe != join (the bruteforce-baseline shape,
     # both cosines computed in the one pair scan)
     "emb_matryoshka_recall",
-    # r06 batch 3: freshest-date 1-row scalar; per-round 1-row
-    # broadcast center (the k-center distance pass); K×K centroid
-    # != join (labels are dimension-sized)
+    # r06 batch 3: freshest-date 1-row scalar; K×K centroid != join
+    # (labels are dimension-sized)
     "q_data_freshness_audit",
-    "sample_coreset_kcenter",
     "emb_label_separation",
     # batch-side 1-row frontier scalar over the streaming sink
     "stream_max_event_time",
