@@ -158,7 +158,8 @@ def step_parse(spark: SparkSession, cfg: dict, work: str) -> int:
     lines = read_hocr_lines(spark, archives)
     windowed = (
         lines.withColumn(
-            "uuid", F.regexp_extract(F.col("archive"), r"([0-9a-f-]+)\.tar\.gz$", 1)
+            # the archive's file name, as download named it: {uuid}.tar.gz
+            "uuid", F.regexp_extract(F.col("archive"), r"([^/]+)\.tar\.gz$", 1)
         )
         .withColumn("m", by_uuid[F.col("uuid")])
         .filter(F.col("m").isNotNull())  # an archive name that gives no listed uuid

@@ -230,7 +230,7 @@ def parse_entry_struct(text: Column) -> Column:
 
 def parse_entries_real(lines: DataFrame, text_col: str = "text") -> DataFrame:
     """Apply the real-form parser to an hOCR line DataFrame (the output
-    of sources.hocr.parse_hocr_lines), flattening the struct."""
+    of sources.hocr.read_hocr_lines), flattening the struct."""
     e = parse_entry_struct(F.col(text_col))
     return lines.withColumn("entry", e).select(
         *lines.columns,

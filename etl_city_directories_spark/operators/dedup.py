@@ -100,12 +100,13 @@ def _shingled_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted (doc_id, shingles) frame every shingle-set operator
-    reads: one rolling key for one plan, so releasing it never uncaches
-    another callsite's copy. Only what downstream reads is persisted
-    (r10, guide §2.3): ``norm``, the full normalized text, and
-    lang/source were dead weight in the blocks and the verify rows."""
-    sh = _shingled_df(spark, sf_dir).select("doc_id", "shingles")
+    """The persisted (doc_id, lang, source, shingles) frame every
+    shingle-set operator reads: one rolling key for one plan, so
+    releasing it never uncaches another callsite's copy. ``norm``, the
+    full normalized text, is dropped before the persist; lang/source
+    (the ngram blocking key, the eval split) add ~1 % to the shingles'
+    width."""
+    sh = _shingled_df(spark, sf_dir).select("doc_id", "lang", "source", "shingles")
     return rolling_persist(spark, ("doc_shingles", sf_dir), sh)
 
 
@@ -120,6 +121,17 @@ def minhash_fn(j: int):
     """
     salt = f"{j}|"
     return lambda s: F.md5(F.concat(F.lit(salt), s))
+
+
+def minhash_sigs(shingles: str | Column) -> Column:
+    """The NUM_HASHES-long minhash signature of a shingle-set column:
+    element j is the least ``minhash_fn(j)`` hash over the set."""
+    return F.array(
+        *[
+            F.array_min(F.transform(shingles, minhash_fn(j)))
+            for j in range(1, NUM_HASHES + 1)
+        ]
+    )
 
 
 def _jaccard(a: Column, b: Column) -> Column:
@@ -155,42 +167,59 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_bands(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(persisted shingle frame, persisted band table) — the ONE
-    definition of the minhash signature + banding pipeline, shared by
-    the full self-join LSH and the incremental screen so the two can
-    never drift apart. Both frames are rolling_persist entries: at
-    most one live copy per session × sf_dir."""
-    sh = _doc_shingles(spark, sf_dir)
-    sigs = sh.select(
+def _band_rows(sh: DataFrame) -> DataFrame:
+    """The ONE definition of minhash banding: NUM_BANDS bands of two
+    signature elements per document of the shingle frame ``sh``, band
+    key md5(sig[2b+1] || sig[2b+2]); the rows carry ``source`` for the
+    train/eval split. Every banded-LSH operator reads these rows, so
+    they can never drift apart."""
+    sigs = sh.select("doc_id", "source", minhash_sigs("shingles").alias("sig"))
+    return sigs.select(
         "doc_id",
-        "shingles",
-        *[
-            F.array_min(
-                F.transform(
-                    "shingles", minhash_fn(j)
-                )
-            ).alias(f"sig{j}")
-            for j in range(1, NUM_HASHES + 1)
-        ],
-    )
-    bands = sigs.select(
-        "doc_id",
+        "source",
         F.posexplode(
             F.array(
                 *[
-                    F.md5(F.concat(F.col(f"sig{2 * b + 1}"), F.col(f"sig{2 * b + 2}")))
+                    F.md5(
+                        F.concat(
+                            F.element_at("sig", 2 * b + 1),
+                            F.element_at("sig", 2 * b + 2),
+                        )
+                    )
                     for b in range(NUM_BANDS)
                 ]
             )
         ).alias("band_idx", "band_key"),
     )
-    # both self-join sides read it; avoids 2× signature pass.
+
+
+def _minhash_bands(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(persisted shingle frame, persisted band table), shared by the
+    self-join LSH, the incremental screen, the train × eval screen and
+    the fidelity audit. Both frames are rolling_persist entries: at
+    most one live copy per session × sf_dir."""
+    sh = _doc_shingles(spark, sf_dir)
+    # every reader's two sides scan it; avoids a 2× signature pass.
     # rolling: the previous invocation's blocks release on re-entry
-    bands = rolling_persist(spark, ("minhash_bands", sf_dir), bands)
+    bands = rolling_persist(spark, ("minhash_bands", sf_dir), _band_rows(sh))
     return sh, bands
+
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs that share a band bucket."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -205,17 +234,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature table written once and joined twice.
     """
     sh, bands = _minhash_bands(spark, sf_dir)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _band_pairs(bands)
     sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     return (
@@ -241,29 +260,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle replays the identical candidate generation including
     the cap, so the threshold-filtered output is bit-identical.
     """
-    # bands + both verify sides; rolling: released on re-entry
-    sh = rolling_persist(
-        spark,
-        ("ngram_sh", sf_dir),
-        # r10 (guide §2.3): norm is unused downstream — drop it from
-        # the persisted blocks (bands need lang/source, verify needs
-        # shingles).
-        _shingled_df(spark, sf_dir).select("doc_id", "lang", "source", "shingles"),
-    )
+    sh = _doc_shingles(spark, sf_dir)
     bands = sh.select(
         "doc_id",
         "lang",
         "source",
-        F.posexplode(
-            F.array(
-                *[
-                    F.array_min(
-                        F.transform("shingles", minhash_fn(j))
-                    )
-                    for j in range(1, NUM_HASHES + 1)
-                ]
-            )
-        ).alias("band_idx", "band_key"),
+        F.posexplode(minhash_sigs("shingles")).alias("band_idx", "band_key"),
     )
     bands = rolling_persist(spark, ("ngram_bands", sf_dir), bands)
     # df cap: drop hot buckets whole before the self-join (see
@@ -2128,61 +2130,20 @@ def dedup_minhash_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the exact jaccard, with the absolute error. The eval that
     tells you whether NUM_HASHES is big enough BEFORE trusting the
     sketch at 100 TB, over exactly the pairs the index will surface.
-    Shares the persisted shingle/signature stages with
+    Reads the persisted shingle frame and band table of
     dedup_minhash_lsh; pair mass is the LSH collision set, never n².
     """
-    sh = _doc_shingles(spark, sf_dir)
-    sigs = sh.select(
-        "doc_id",
-        "shingles",
-        F.array(
-            *[
-                F.array_min(F.transform("shingles", minhash_fn(j)))
-                for j in range(1, NUM_HASHES + 1)
-            ]
-        ).alias("sig"),
-    )
-    sigs = rolling_persist(spark, ("fidelity_sigs", sf_dir), sigs)
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat(
-                            F.element_at("sig", 2 * b + 1),
-                            F.element_at("sig", 2 * b + 2),
-                        )
-                    )
-                    for b in range(NUM_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_key"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("sh_a"),
-        F.col("sig").alias("sig_a"),
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-        F.col("sig").alias("sig_b"),
-    )
+    sh, bands = _minhash_bands(spark, sf_dir)
+    cand = _band_pairs(bands)
+    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
+    # signatures of candidate docs only: the pair set is the LSH
+    # collision set, far smaller than the corpus the bands were cut from
     n_match = F.aggregate(
         F.zip_with(
-            "sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)
+            minhash_sigs("sh_a"),
+            minhash_sigs("sh_b"),
+            lambda x, y: F.when(x == y, 1).otherwise(0),
         ),
         F.lit(0),
         lambda acc, x: acc + x,
@@ -2264,29 +2225,13 @@ def dedup_band_collision_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     band's pair-join output, so this is the number an operator reads
     BEFORE unleashing the self-join at a new scale.
 
-    Reads the same persisted shingle frame as dedup_minhash_lsh
-    (``_doc_shingles``); the rollup is O(buckets) and the stats are
-    exact integers.
+    Counts the same band rows as dedup_minhash_lsh (``_band_rows``
+    over the persisted shingle frame); the rollup is O(buckets) and
+    the stats are exact integers.
     """
-    sh = _doc_shingles(spark, sf_dir)
-    sigs = sh.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform("shingles", minhash_fn(j))).alias(f"sig{j}")
-            for j in range(1, NUM_HASHES + 1)
-        ],
-    )
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.md5(F.concat(F.col(f"sig{2 * b + 1}"), F.col(f"sig{2 * b + 2}")))
-                    for b in range(NUM_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_key"),
-    )
+    # one scan of the band rows: persisting them would add a job and a
+    # cached copy for a single reader
+    bands = _band_rows(_doc_shingles(spark, sf_dir))
     buckets = bands.groupBy("band_idx", "band_key").agg(
         F.count(F.lit(1)).alias("sz")
     )

@@ -946,10 +946,7 @@ def ann_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed on rounded scores (cos 6dp, jaccard 4dp) with
     neighbor_id tie-break, so both engines rank identically; the RRF
     score is then a pure function of two integer ranks."""
-    from etl_city_directories_spark.operators.dedup import (
-        norm_col,
-        shingles_col,
-    )
+    from etl_city_directories_spark.operators.dedup import _doc_shingles
 
     # --- vector ranking over the full corpus (minus self) ---
     vecs = _vectors(spark, sf_dir)
@@ -989,12 +986,8 @@ def ann_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expression, and under the join projection it would re-evaluate
     # once per (pair, side) — 10× redundant work, measured 15 s → 3 s
     # at sf0.1 with the persist + widened scan.
-    docs = rolling_persist(
-        spark,
-        ("rrf_shingles", sf_dir),
-        load_table_parallel(spark, sf_dir, "documents").select(
-            "doc_id", shingles_col(norm_col()).alias("sh")
-        ),
+    docs = _doc_shingles(spark, sf_dir).select(
+        "doc_id", F.col("shingles").alias("sh")
     )
     tprobes = docs.filter(F.col("doc_id") < N_PROBES).select(
         F.col("doc_id").alias("probe_id"), F.col("sh").alias("psh")

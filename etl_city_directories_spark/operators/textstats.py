@@ -13,7 +13,9 @@ from pyspark.sql import functions as F
 
 from etl_city_directories_spark.operators.dedup import (
     SHINGLE_CTE as _DEDUP_SHINGLE_CTE,
-    minhash_fn,
+    _doc_shingles,
+    _jaccard,
+    _minhash_bands,
     norm_col,
     shingles_col,
 )
@@ -341,10 +343,7 @@ def corpus_prepare_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from etl_city_directories_spark.operators.dedup import (
-        dedup_lsh_clusters,
-        shingles_col,
-    )
+    from etl_city_directories_spark.operators.dedup import dedup_lsh_clusters
 
     norm = norm_col()
     w_ = _words(norm)
@@ -635,12 +634,12 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     larger eval sets the same join degrades gracefully to a shuffle
     join on the shingle.
 
-    The shingled stage is persisted: train and eval both read it, and
-    an unpersisted plan inlines the shingle expression into each
-    explode generator where it re-evaluates per OUTPUT row (~60× the
-    work — measured 13 s vs 5 s at sf0.1).
+    Train and eval both read the persisted shingle frame
+    (``_doc_shingles``): an unpersisted plan inlines the shingle
+    expression into each explode generator where it re-evaluates per
+    OUTPUT row (~60× the work — measured 13 s vs 5 s at sf0.1).
     """
-    sh = rolling_persist(spark, ("decon_sh", sf_dir), _shingled(spark, sf_dir))
+    sh = _doc_shingles(spark, sf_dir)
     train = sh.filter(F.col("source") != EVAL_SOURCE).select(
         "doc_id", F.explode("shingles").alias("shingle")
     )
@@ -713,54 +712,14 @@ def decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     paraphrased/partially-edited leaks the exact 3-gram audit
     (decontaminate) can miss at its shingle granularity.
 
-    Same machinery as dedup_minhash_lsh, but the banded join is
-    train × eval instead of a self-join: 8 salted-md5 minhashes → 4
-    bands of 2; the band key is the shuffle key and the EVAL band
-    table (the small side by construction) broadcasts, so cost is
-    O(train corpus) + O(collisions) however big training gets. Exact
-    jaccard verifies candidates only.
+    Same band table as dedup_minhash_lsh (``_minhash_bands``: 8
+    salted-md5 minhashes → 4 bands of 2), but the banded join is train
+    × eval instead of a self-join; the band key is the shuffle key and
+    the EVAL band table (the small side by construction) broadcasts,
+    so cost is O(train corpus) + O(collisions) however big training
+    gets. Exact jaccard verifies candidates only.
     """
-    from etl_city_directories_spark.operators.dedup import (
-        NUM_BANDS,
-        NUM_HASHES,
-        _jaccard,
-        _shingled_df,
-    )
-
-    # bands + both verify sides read it; rolling: released on re-entry
-    sh = rolling_persist(
-        spark,
-        ("deconf_sh", sf_dir),
-        # r10 (guide §2.3): norm/lang unused downstream — persist only
-        # (doc_id, source, shingles).
-        _shingled_df(spark, sf_dir).select("doc_id", "source", "shingles"),
-    )
-    sigs = sh.select(
-        "doc_id",
-        "source",
-        *[
-            F.array_min(
-                F.transform("shingles", minhash_fn(j))
-            ).alias(f"sig{j}")
-            for j in range(1, NUM_HASHES + 1)
-        ],
-    )
-    bands = sigs.select(
-        "doc_id",
-        "source",
-        F.posexplode(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat(F.col(f"sig{2 * b + 1}"), F.col(f"sig{2 * b + 2}"))
-                    )
-                    for b in range(NUM_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_key"),
-    )
-    # train and eval sides both read it; rolling: released on re-entry
-    bands = rolling_persist(spark, ("deconf_bands", sf_dir), bands)
+    sh, bands = _minhash_bands(spark, sf_dir)
     train_b = bands.filter(F.col("source") != EVAL_SOURCE).select(
         F.col("doc_id").alias("train_doc"), "band_idx", "band_key"
     )
@@ -826,13 +785,6 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("lp").cast("double") / F.count(F.lit(1)).cast("double"), 4
             ).alias("mean_surprisal"),
         )
-    )
-
-
-def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table_parallel(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", "source", shingles_col(norm_col()).alias("shingles")
     )
 
 

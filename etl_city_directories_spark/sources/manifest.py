@@ -7,10 +7,11 @@ int or ``1850/51`` → [1850, 1851]; drop rows missing any required field
 or with a columnCount below 1.
 
 The manifest is a few hundred rows — a driver-side parse into a
-DataFrame is the correct distribution strategy (it's the broadcast dim
-of every downstream join; shipping an HTML parser to executors for 2 KB
-of input would be cargo-cult parallelism). The rows become a JVM-local
-relation (``sources.local``), so scanning them starts no Python worker.
+DataFrame is the correct distribution strategy (shipping an HTML parser
+to executors for 2 KB of input would be cargo-cult parallelism; parse
+collects the rows back to the driver and applies them as a literal map
+keyed by uuid, with no join). The rows become a JVM-local relation
+(``sources.local``), so scanning them starts no Python worker.
 """
 
 from __future__ import annotations

@@ -230,6 +230,28 @@ def test_duplicate_manifest_row_is_parsed_once(spark, tmp_path, cli_work):
     assert len({i for i, _, _ in lines(work)}) == counts["parse"]
 
 
+def test_uppercase_uuid_volume_is_parsed(spark, tmp_path, cli_work):
+    """Parse takes each line's uuid from its archive's file name, the
+    name download gave it, whatever characters the manifest's uuid
+    holds: a volume listed under an uppercase uuid yields the same
+    lines as under the lowercase one."""
+    upper = _UUID.upper()
+    with open(os.path.join(FIXTURES, "manifest.html"), encoding="utf-8") as f:
+        html = f.read()
+    manifest = tmp_path / "manifest_upper.html"
+    manifest.write_text(html.replace(_UUID, upper), encoding="utf-8")
+    data = tmp_path / "d_upper"
+    data.mkdir()
+    shutil.copy(fixture_archive(), data / f"{upper}.tar.gz")
+    work = str(tmp_path / "w_upper")
+    cfg = _write_config(tmp_path, tableUrl=str(manifest), dataUrl=str(data),
+                        minYear=1850, maxYear=1890)
+    counts = run(cfg, work, ["download", "parse"], spark=spark)
+    lines = _read_ndjson_dir(os.path.join(work, "parse", "lines.ndjson"))
+    assert {ln["uuid"] for ln in lines} == {upper}
+    assert counts["parse"] == len(lines) == cli_work[1]["parse"] > 0
+
+
 def test_parse_silently_skips_missing_archives(cli_work):
     """The reference SKIPS manifest rows whose tar.gz was never
     downloaded instead of erroring (city-directories.js:195's

@@ -6,7 +6,10 @@ or resetting an entry must free what it holds."""
 
 from __future__ import annotations
 
+import ast
+import collections
 import os
+import pathlib
 import shutil
 
 from pyspark.sql import functions as F
@@ -99,6 +102,44 @@ def test_rolling_persist_replaces_previous(spark):
     assert len(_live("roll_t")) == 1
     assert df2.storageLevel.useMemory  # the store holds the new one
     assert not df1.storageLevel.useMemory  # released
+
+
+_KEYED = ("rolling_persist", "memo_df", "plan_memo", "rolling_dir")
+
+
+def _literal_key_sites() -> dict[str, list[str]]:
+    """Literal first key element -> its callsites ("file:line"), over
+    every ``rolling_persist`` / ``memo_df`` / ``plan_memo`` /
+    ``rolling_dir`` call in the package whose key is a tuple display
+    starting with a string."""
+    pkg = pathlib.Path(memo.__file__).resolve().parents[1]
+    sites = collections.defaultdict(list)
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            if name not in _KEYED:
+                continue
+            key = next((k.value for k in node.keywords if k.arg == "key"),
+                       node.args[1] if len(node.args) > 1 else None)
+            if (isinstance(key, ast.Tuple) and key.elts
+                    and isinstance(key.elts[0], ast.Constant)
+                    and isinstance(key.elts[0].value, str)):
+                sites[key.elts[0].value].append(
+                    f"{path.relative_to(pkg)}:{node.lineno}")
+    return sites
+
+
+def test_each_literal_memo_key_has_one_callsite():
+    """A rolling or memo key names one callsite: a second callsite
+    under the same key would release (or serve) the first one's frame
+    for a different plan."""
+    sites = _literal_key_sites()
+    assert len(sites) > 40, sorted(sites)  # the scan found the callsites
+    shared = {k: v for k, v in sites.items() if len(v) > 1}
+    assert not shared, shared
 
 
 def test_cached_sink_rebuilds_on_new_stamp(tmp_path):

@@ -627,13 +627,14 @@ def test_small_pair_graph_is_not_repartitioned(spark):
 
 
 def test_shingle_persists_carry_no_document_text(spark):
-    """r10: every persisted shingle frame projects to (doc_id,
-    shingles), plus lang/source where banding is blocked, before the
-    persist: the normalized text ``norm`` reaches no cached block and no
-    band or verify shuffle."""
+    """r10: the one persisted shingle frame projects to (doc_id, lang,
+    source, shingles) before the persist: the normalized text ``norm``
+    reaches no cached block and no band or verify shuffle."""
     for name in ("dedup_minhash_lsh", "dedup_ngram_jaccard",
                  "dedup_shared_spans", "dedup_containment",
-                 "dedup_minhash_fidelity", "decontaminate_fuzzy"):
+                 "dedup_minhash_fidelity", "decontaminate_fuzzy",
+                 "decontaminate", "ann_rrf_hybrid",
+                 "dedup_band_collision_stats"):
         plan = plan_of(QUERIES[name](spark, SF))
         assert not re.search(r"\bnorm#", plan), name
 
@@ -697,11 +698,14 @@ def test_second_run_in_a_session_keeps_its_persists(spark):
     """An operator run again in the same session, with no memo reset
     between, still reads its persisted frames: each callsite's old
     entry is released before the new frame is persisted, so the second
-    plan has the first plan's cache scans and no more Exchanges."""
-    first = fp_of("graph_assortativity", spark)
-    second = fp_of("graph_assortativity", spark)
-    assert second.cached["InMemoryRelation"], second
-    assert len(second.shuffles) <= len(first.shuffles), (first, second)
+    plan has the first plan's cache scans and no more Exchanges. The
+    same holds when another operator that persists under the same keys
+    (the shingle frame, the band table) runs in between."""
+    for runs in (("graph_assortativity",) * 2,
+                 ("decontaminate_fuzzy", "dedup_minhash_lsh", "decontaminate_fuzzy")):
+        first, *_, last = [fp_of(name, spark) for name in runs]
+        assert last.cached["InMemoryRelation"], (runs, last)
+        assert len(last.shuffles) <= len(first.shuffles), (runs, first, last)
 
 
 def test_cold_iterative_plans_keep_their_persists(spark):
