@@ -57,12 +57,14 @@ NDJSON writer (no driver funnel).
 Only geocode broadcasts: its two address dims hold the address dataset,
 which is real data at any scale and far smaller than the corpus side.
 The other steps broadcast nothing. A broadcast hash table holds at
-least one memory page (32 MB with a 2 GB driver heap on local[2]) until
-the context cleaner drops it, however few rows it has. So download dedupes the manifest's
-uuids on the driver, parse takes the manifest columns its lines carry
-from the manifest rows it has already collected, as a literal map keyed
-by uuid, and transform builds each object in one keyed aggregation over
-the lines and their geocode rows, with no join.
+least one memory page until the context cleaner drops it; with pages
+sized to the heap (``session.page_size_bytes``: 1 MB up to an 8 GB
+driver heap) that costs about 1 MB, and geocode's two add under 4 MB.
+A broadcast still costs a job of its own, so download dedupes the
+manifest's uuids on the driver, parse takes the manifest columns its
+lines carry from the manifest rows it has already collected, as a
+literal map keyed by uuid, and transform builds each object in one
+keyed aggregation over the lines and their geocode rows, with no join.
 
 Parse reads every windowed archive in one ``binaryFile`` scan;
 ``spark.sql.files.maxPartitionBytes`` groups archives into partitions,

@@ -5,6 +5,21 @@ setting is chosen to also be the right default on a 1000-executor
 cluster: AQE (runtime coalesce + skew-join splitting), broadcast joins
 for dims, Arrow for the few Python-side operators, UTC session time so
 results are timezone-independent.
+
+Tungsten page size follows the heap, not the heap's share per core.
+Every hash aggregate, sort buffer and string-keyed broadcast allocates
+execution memory in pages, and holds at least one zeroed page as soon
+as it holds a row. Spark's default page is a share of the execution
+pool (pool / cores / 16, up to 64 MB): 32 MB at a 2 GB heap on
+local[2], 64 MB at 8 GB on local[4], whatever the rows. With G1's
+1 MB regions each such page is a humongous object placed straight in
+the old generation, so small-row jobs fill the old generation with
+mostly empty pages. ``page_size_bytes`` instead takes the smallest
+power of two >= 1 MB whose page table (8192 pages per task) covers the
+whole heap: 1 MB up to an 8 GB heap, 2 MB at 16 GB, 8 MB at 64 GB. A
+task can then address more than its share of the pool, so a large
+aggregate takes more pages and never runs out of page-table entries
+before it runs out of memory.
 """
 
 from __future__ import annotations
@@ -33,11 +48,38 @@ def _bool_env(name: str, default: str) -> str:
     return raw.lower()
 
 
-def _jvm_size_env(name: str, default: str) -> str:
+_JVM_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+# Spark refuses a heap below 1.5 x its 300 MB system reserve
+# (UnifiedMemoryManager), but only once the JVM is up
+MIN_DRIVER_HEAP = 450 << 20
+# pages one task can address (TaskMemoryManager.PAGE_TABLE_SIZE)
+PAGE_TABLE_SIZE = 8192
+
+
+def jvm_size_bytes(raw: str) -> int | None:
+    """Bytes in a JVM size such as ``8g`` (no suffix: bytes, as -Xmx
+    reads it); None when ``raw`` is not one."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)", raw, re.IGNORECASE)
+    return int(m[1]) * _JVM_UNITS[m[2].lower()] if m else None
+
+
+def _jvm_size_env(name: str, default: str) -> tuple[str, int]:
+    """(raw value, bytes) of a driver-heap knob of at least 450 MB."""
     raw = os.environ.get(name, default)
-    if not re.fullmatch(r"\d+[kmgt]?", raw, re.IGNORECASE):
-        raise ValueError(f"{name} must be a JVM size such as 8g, got {raw!r}")
-    return raw
+    size = jvm_size_bytes(raw)
+    if size is None or size < MIN_DRIVER_HEAP:
+        raise ValueError(f"{name} must be a JVM size of at least 450m, such as 8g, got {raw!r}")
+    return raw, size
+
+
+def page_size_bytes(heap_bytes: int) -> int:
+    """Tungsten page size for a driver heap (see the module docstring):
+    the smallest power of two >= 1 MB such that PAGE_TABLE_SIZE pages
+    cover the heap."""
+    page = 1 << 20
+    while page * PAGE_TABLE_SIZE < heap_bytes:
+        page <<= 1
+    return page
 
 
 def get_spark(
@@ -50,7 +92,7 @@ def get_spark(
     if cpus is None:
         cpus = int_env("SPARK_GRAFT_CPUS", "32")
     df_debugging = _bool_env("SPARK_GRAFT_DF_DEBUGGING", "false")
-    driver_mem = _jvm_size_env("SPARK_GRAFT_DRIVER_MEM", "8g")
+    driver_mem, heap_bytes = _jvm_size_env("SPARK_GRAFT_DRIVER_MEM", "8g")
     if shuffle_partitions is None:
         # local mode: one shuffle partition per core; AQE coalesces
         # further at runtime. On a real cluster this would be set to
@@ -87,6 +129,10 @@ def get_spark(
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # pages sized to cover the heap, not to a core's share of it: a
+        # consumer holding a few rows pins one page, not 32-64 MB of old
+        # generation (module docstring)
+        .config("spark.buffer.pageSize", str(page_size_bytes(heap_bytes)))
         # Python workers import the package from its root, whatever the cwd
         .config("spark.executorEnv.PYTHONPATH",
                 os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

@@ -522,6 +522,27 @@ def test_step_job_budget(spark, tmp_path, newest_job_id):
     assert not over, f"jobs {jobs} over budget {STEP_JOB_BUDGET}"
 
 
+def test_geocode_pins_no_large_page(spark, tmp_path):
+    """Geocode's two address-dim broadcasts hold their hash tables in
+    storage memory until the context cleaner drops them, at least one
+    Tungsten page each. With pages sized to the heap
+    (``session.page_size_bytes``) the step adds under 4 MB; with Spark's
+    default, 64 MB pages at an 8 GB heap on local[4], it added 128 MB.
+    A concurrent cleaner release can only shrink the delta."""
+    data = str(tmp_path / "d_pages")
+    os.makedirs(data)
+    shutil.copy(fixture_archive(), data)
+    cfg = {"tableUrl": os.path.join(FIXTURES, "manifest.html"), "dataUrl": data}
+    work = str(tmp_path / "w_pages")
+    cli.step_download(spark, cfg, work)
+    cli.step_parse(spark, cfg, work)
+    memory = spark._jvm.org.apache.spark.SparkEnv.get().memoryManager()
+    before = memory.storageMemoryUsed()
+    assert cli.step_geocode(spark, cfg, work) > 0
+    added_mb = (memory.storageMemoryUsed() - before) / 2**20
+    assert added_mb < 4, f"geocode added {added_mb:.1f} MB of storage memory"
+
+
 def test_surface_divergences(spark, tmp_path):
     """The CLI transform and the cd_* keys replay the same reference
     step but differ on purpose in three places. Each is pinned here, so
