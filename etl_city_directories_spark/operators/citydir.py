@@ -673,16 +673,16 @@ def geocode_locations(
     spark: SparkSession,
     locs: DataFrame,
     dim: DataFrame | None = None,
-    streets: DataFrame | None = None,
 ) -> DataFrame:
     """Normalize + two-stage geocode of any (…, loc_value) DataFrame:
     exact house-level broadcast join on the normalized form, then a
     street-level fallback for number-less (corner) forms. Both dims
     broadcast; the corpus side stays map-side.
 
-    ``dim`` / ``streets`` override the built-in demo dims with a real
-    address dataset (the CLI's ``addresses`` config key) — same column
-    contract as ``addresses_dim`` / ``streets_dim``.
+    ``dim`` replaces the built-in demo dims with a real address
+    dataset (the CLI's ``addresses`` config key), with the column
+    contract of ``addresses_dim``; its streets are its distinct
+    (street_name, street_id) pairs.
 
     Output: ``locs``' columns, then ``loc_norm``, ``found`` (house or
     street hit), ``address_id`` (house hits only), ``street_name``,
@@ -692,10 +692,8 @@ def geocode_locations(
     look at the address dataset.
     """
     if dim is None:
-        dim = addresses_dim(spark)
-        if streets is None:
-            streets = streets_dim(spark)
-    elif streets is None:
+        dim, streets = addresses_dim(spark), streets_dim(spark)
+    else:
         streets = dim.select("street_name", "street_id").distinct()
     sts = streets.select(
         F.col("street_name").alias("c_street_name"),

@@ -329,22 +329,14 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_city_directories_spark.operators.similarity import (
         _buckets_col,
+        _vectors,
     )
 
-    e = load_table_parallel(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    e = e.withColumn(
-        "nrm",
-        F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x),
-    )
-    # normalized vectors + SRP buckets are the dedup INDEX (same
-    # artifact family as the memoized LSH cluster labels) — built once
-    # per (session, data stamp)
+    # the (vec_id, label, v, nrm) table every ANN index reads; its SRP
+    # buckets are the dedup INDEX (same artifact family as the memoized
+    # LSH cluster labels) — both built once per (session, data stamp)
+    e = _vectors(spark, sf_dir)
     stamp = table_stamp(sf_dir, ("embeddings",))
-    e = memo_df(spark, ("emb_norm", sf_dir, stamp), lambda: e)
     # r10: the 2048-literal bucket array is a cached module singleton
     # (similarity._buckets_col) — its per-call construction was ~2 s of
     # pure driver/py4j time even when the hashed frame memo below hit.

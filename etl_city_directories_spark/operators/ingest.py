@@ -6,6 +6,7 @@ fixtures (tests/test_sources.py) and the driver's rows-only check.
 
 from __future__ import annotations
 
+import contextlib
 import gzip
 import io
 import os
@@ -122,7 +123,9 @@ def fetch_archives(
     into ``dest`` BY AN EXECUTOR inside ``mapInPandas`` (no driver
     funnel). A failed fetch writes the reference's error artifact, an
     empty ``{uuid}.xml``, marks the row ``error`` and the job keeps going
-    (per-archive tolerance, :91-97).
+    (per-archive tolerance, :91-97). Each fetch also removes the uuid's
+    other file left in ``dest`` by an earlier run, so a failed re-fetch
+    leaves no stale archive for parse to read.
 
     The manifest is a driver-sized table (one row per directory volume),
     so its distinct uuids are taken on the driver, in manifest order; a
@@ -145,7 +148,7 @@ def fetch_archives(
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                fname = f"{row.uuid}.tar.gz"
+                fname, err_name = f"{row.uuid}.tar.gz", f"{row.uuid}.xml"
                 try:
                     content = fetch(base_uri, row.uuid)
                     if content is None:
@@ -153,11 +156,16 @@ def fetch_archives(
                     with open(os.path.join(dest, fname), "wb") as f:
                         f.write(content)
                     out.append((row.uuid, fname, "downloaded", len(content)))
+                    stale = err_name
                 except Exception:
-                    err_name = f"{row.uuid}.xml"
                     with open(os.path.join(dest, err_name), "wb") as f:
                         f.write(b"")
                     out.append((row.uuid, err_name, "error", 0))
+                    stale = fname
+                # an earlier run's file for this uuid must not outlive
+                # this run's status: parse reads any {uuid}.tar.gz it finds
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(dest, stale))
             yield pd.DataFrame(
                 out, columns=["uuid", "filename", "status", "n_bytes"]
             )

@@ -161,66 +161,6 @@ def deskew_x0(
     return [int(round(l[0] - slope * (l[1] - y_min))) for l in lines]
 
 
-# k-inference thresholds (column_count=None mode): a greedy x0 cluster
-# is a REAL column only if it holds at least this share of the page's
-# lines (and >= 2 lines absolute). Continuation indents, gutter bleed,
-# and stray boxes form small clusters and fall under the floor; a
-# directory page's real columns each hold a near-equal large share.
-COLUMN_MIN_SHARE = 0.15
-MAX_COLUMN_COUNT = 6
-# A cluster at least this far from the largest cluster's center is a
-# separate column candidate, not edge bleed: real columns sit
-# ~page_width/k apart, while spine shadows and gutter bleed hug a real
-# column. Far clusters face a 0.35-of-largest population bar instead of
-# half, so a sparse section-end trailing column stays a column while
-# near-column dense junk still dies on the half bar. Geometry alone
-# cannot tell dense far junk from a sparse real column, so the far bar
-# is a population share; 0.35 keeps the spine-shadow fixture (6 junk
-# lines vs a 20-line column) below it.
-COLUMN_FAR_GAP_PX = 4 * COLUMN_TOLERANCE_PX
-COLUMN_FAR_SHARE_OF_LARGEST = 0.35
-
-
-def infer_column_count(
-    lines: list[tuple[int, int, int, int, str]],
-    xs_corr: list[int] | None = None,
-) -> int:
-    """Infer the column count when the manifest doesn't declare one
-    (city-directories.js:224-232 drives hocr-detect-columns with an
-    explicit columnCount; undeclared pages need k discovered).
-
-    Same geometry as the declared-k path: cluster the skew-corrected
-    x0s with the greedy COLUMN_TOLERANCE_PX scheme, then count
-    significant clusters (population >= max(2, COLUMN_MIN_SHARE * n)).
-    This is the density form of a gap-statistic decision — the greedy
-    tolerance IS the within-cluster dispersion bound, so any cluster
-    that clears the population floor is a real mode of the x0
-    distribution. Deterministic; clamped to [1, MAX_COLUMN_COUNT].
-    """
-    if not lines:
-        return 1
-    xs = sorted(xs_corr if xs_corr is not None else [l[0] for l in lines])
-    clusters = _greedy_clusters(xs)
-    # two floors: a share of the page AND a largest-cluster-relative
-    # bar (directory columns are near-equal in population), so dense
-    # junk that passes the page-share floor on a short page still falls
-    # under the relative bar, which is half-of-largest near the largest
-    # cluster and COLUMN_FAR_SHARE_OF_LARGEST beyond COLUMN_FAR_GAP_PX.
-    big = max(clusters, key=len)
-    largest = len(big)
-    big_center = big[(largest - 1) // 2]
-    share_floor = max(2, int(len(xs) * COLUMN_MIN_SHARE))
-    far_bar = -(-largest * COLUMN_FAR_SHARE_OF_LARGEST // 1)  # ceil
-    k = 0
-    for c in clusters:
-        center = c[(len(c) - 1) // 2]
-        near = abs(center - big_center) < COLUMN_FAR_GAP_PX
-        rel_bar = (largest + 1) // 2 if near else int(far_bar)
-        if len(c) >= max(share_floor, rel_bar):
-            k += 1
-    return max(1, min(k, MAX_COLUMN_COUNT))
-
-
 def column_centers(
     lines: list[tuple[int, int, int, int, str]],
     column_count: int,
@@ -354,15 +294,16 @@ def archive_pages(path: str, blob: bytes) -> Iterator[tuple[int, str, str, str]]
 
 
 def page_lines(
-    hocr: str, column_count: int | None
+    hocr: str, column_count: int
 ) -> list[tuple[int, int, int, int, int, int, str]]:
     """One page's hOCR → (line_index, x0, y0, x1, y1, column_index, text)
-    per entry. Column decisions run on skew-corrected x0s (clean pages
-    are untouched); ``column_count=None`` infers k for the page."""
+    per entry, with ``column_count`` declared by the caller as in the
+    reference (city-directories.js:224-232 hands the manifest's
+    columnCount to hocr-detect-columns). Column decisions run on
+    skew-corrected x0s (clean pages are untouched)."""
     lines = extract_lines(hocr)
     xs_corr = deskew_x0(lines, estimate_skew(lines))
-    k = column_count if column_count is not None else infer_column_count(lines, xs_corr)
-    centers = column_centers(lines, k, xs_corr)
+    centers = column_centers(lines, column_count, xs_corr)
     cols = _nearest_columns(xs_corr, centers)
     stitched = stitch_continuations(lines, cols, centers, xs_corr)
     return [(i, x0, y0, x1, y1, cidx, text) for i, x0, y0, x1, y1, text, cidx in stitched]
@@ -392,9 +333,7 @@ def read_hocr_pages(spark: SparkSession, archive_glob: str) -> DataFrame:
     return binaries.select("path", "content").mapInPandas(explode_pages, PAGE_SCHEMA)
 
 
-def parse_hocr_lines(
-    pages: DataFrame, column_count: int | None = 2
-) -> DataFrame:
+def parse_hocr_lines(pages: DataFrame, column_count: int = 2) -> DataFrame:
     """Pages → column-assigned OCR lines (reference parse step
     city-directories.js:223-247, incl. dot-run collapse), with
     ``column_count`` for every page as in ``page_lines``."""

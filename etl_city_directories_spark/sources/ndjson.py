@@ -3,9 +3,7 @@ per line: lines.ndjson, objects/logs/relations).
 
 Spark's json writer IS newline-delimited JSON, so the sink is the
 native distributed writer — each task writes its own part file, no
-driver funnel. ``single_file=True`` exists for small outputs that must
-be one file (coalesce(1) — a deliberate anti-scale choice the caller
-must opt into).
+driver funnel and no coalesce to one file.
 
 A write costs one Spark job and nothing else:
 
@@ -41,12 +39,11 @@ def _schema_path(spark: SparkSession, path: str):
     return p, p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
 
 
-def write_ndjson(df: DataFrame, path: str, single_file: bool = False) -> int:
+def write_ndjson(df: DataFrame, path: str) -> int:
     """Replace ``path`` with ``df`` as NDJSON part files plus its schema
     sidecar; returns the number of rows written."""
-    out = df.coalesce(1) if single_file else df
     rows = Observation()
-    out.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").json(path)
+    df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").json(path)
     p, fs = _schema_path(df.sparkSession, path)
     stream = fs.create(p, True)
     try:

@@ -72,7 +72,7 @@ _GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
 # There are two values because r11's interleaved A/B split the keys:
 # JVM-stateful replays are commit-file/task-quantum bound — 8 -> 2 cut
 # the 8-key JVM basket 13.6 -> 11.4 s best / 16.4 -> 12.1 s median —
-# while the four applyInPandasWithState/TWS operators are Python-worker
+# while the four applyInPandasWithState operators are Python-worker
 # bound (state partitions are their only parallelism axis), where 8
 # beats 4 (14.8 vs 16.2 s best). A production deployment sets cluster
 # width here instead.
@@ -593,7 +593,7 @@ _PURCHASE_SCHEMA = "user_id LONG, ts_us LONG, event_id LONG, value DOUBLE"
 def _purchase_replay_source(spark: SparkSession, sf_dir: str) -> str:
     """Two-file, time-split replay of the purchase events — the shared
     multi-microbatch fixture for the foreachBatch merge and the
-    StatefulProcessor operator (``maxFilesPerTrigger=1`` gives each
+    Python-stateful operators (``maxFilesPerTrigger=1`` gives each
     file its own microbatch, so cross-batch state provably
     accumulates)."""
     from etl_city_directories_spark.sources.tables import load_table
@@ -763,7 +763,7 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return replay.table("stream_python_source_sink").orderBy("event_type")
 
 
-_TWS_OUT = StructType(
+_TOTALS_OUT = StructType(
     [
         StructField("user_id", LongType()),
         StructField("n_purchases", LongType()),
@@ -773,13 +773,11 @@ _TWS_OUT = StructType(
 
 
 def stream_stateful_processor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arbitrary stateful processing with the Spark 4
-    ``transformWithStateInPandas`` StatefulProcessor API — the typed
-    successor to ``applyInPandasWithState``: per-user running purchase
-    totals held in a named ValueState, replayed over the two-file
-    fixture (``maxFilesPerTrigger=1``) so the state provably
-    accumulates ACROSS microbatches (batch 2 emissions extend batch
-    1's counts).
+    """Arbitrary stateful processing with ``applyInPandasWithState``:
+    per-user running purchase totals held in a (count, cents) group
+    state, replayed over the two-file fixture (``maxFilesPerTrigger=1``)
+    so the state provably accumulates ACROSS microbatches (batch 2
+    emissions extend batch 1's counts).
 
     Money accumulates as integer cents inside the Python state —
     decimal-exact regardless of arrival order — so the final snapshot
@@ -787,83 +785,39 @@ def stream_stateful_processor(spark: SparkSession, sf_dir: str) -> DataFrame:
     emissions are collapsed to the latest row per user with one
     max(struct) aggregation (counts are monotone).
 
-    The TWS Python worker hard-requires protobuf, which this container
-    does not ship (and installs are off-limits); when the import is
-    absent the SAME per-user cents state runs through
-    ``applyInPandasWithState`` — identical semantics and output, so
-    the oracle pins whichever path executed. With protobuf present the
-    typed StatefulProcessor path runs."""
+    Spark 4's typed StatefulProcessor API would hold the same state,
+    but its Python worker needs protobuf, which is not a dependency of
+    this package."""
     src = _purchase_replay_source(spark, sf_dir)
     stream = _replay_stream(
         spark, _PURCHASE_SCHEMA, src, PY_STATE_PARTITIONS
     ).withColumn("cents", F.round(F.col("value") * 100).cast("long"))
-    try:
-        import google.protobuf  # noqa: F401  (TWS worker dependency)
 
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    if has_protobuf:
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
+    def _totals_group(
+        key: tuple[Any, ...],
+        batches: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        n, cents = state.get if state.exists else (0, 0)
+        for pdf in batches:
+            n += len(pdf)
+            cents += int(pdf["cents"].sum())
+        state.update((int(n), int(cents)))
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "n_purchases": [int(n)],
+                "total_cents": [int(cents)],
+            }
         )
 
-        class _RunningTotals(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._agg = handle.getValueState(
-                    "agg", "n BIGINT, cents BIGINT"
-                )
-
-            def handleInputRows(self, key, rows, timer_values):
-                cur = self._agg.get()
-                n, cents = (cur[0], cur[1]) if cur else (0, 0)
-                for pdf in rows:
-                    n += len(pdf)
-                    cents += int(pdf["cents"].sum())
-                self._agg.update((n, cents))
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "n_purchases": [n],
-                        "total_cents": [cents],
-                    }
-                )
-
-            def close(self) -> None:
-                pass
-
-        result = stream.groupBy("user_id").transformWithStateInPandas(
-            _RunningTotals(), _TWS_OUT, "Update", "None"
-        )
-    else:
-
-        def _totals_group(
-            key: tuple[Any, ...],
-            batches: Iterator[pd.DataFrame],
-            state: GroupState,
-        ) -> Iterator[pd.DataFrame]:
-            n, cents = state.get if state.exists else (0, 0)
-            for pdf in batches:
-                n += len(pdf)
-                cents += int(pdf["cents"].sum())
-            state.update((int(n), int(cents)))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_purchases": [int(n)],
-                    "total_cents": [int(cents)],
-                }
-            )
-
-        result = stream.groupBy("user_id").applyInPandasWithState(
-            _totals_group,
-            outputStructType=_TWS_OUT,
-            stateStructType="n BIGINT, cents BIGINT",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    result = stream.groupBy("user_id").applyInPandasWithState(
+        _totals_group,
+        outputStructType=_TOTALS_OUT,
+        stateStructType="n BIGINT, cents BIGINT",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
     emitted = _run_to_table(result, "stream_stateful_processor_sink", "update")
     return (
         emitted.groupBy("user_id")
@@ -1502,93 +1456,49 @@ def stream_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchasers with the first-seen day held in per-user state.
 
     The streaming twin of q_new_vs_returning (purchase-scoped): each
-    user's earliest active day lives in a ValueState; every (user,
+    user's earliest active day lives in the group state; every (user,
     day) observation classifies as new iff it IS that earliest day.
     Replayed over the shared time-split two-file fixture
     (maxFilesPerTrigger=1) so the state provably carries across
     microbatches — a user active in both halves classifies "new" only
     in the first. Days are integer epoch-day numbers (ts_us div
-    86400e6), so no date-encoding drift can touch the hash. Same
-    dual path as stream_stateful_processor: typed
-    transformWithStateInPandas when protobuf exists, identical
-    applyInPandasWithState fallback otherwise.
+    86400e6), so no date-encoding drift can touch the hash. The state
+    runs through ``applyInPandasWithState``, as in
+    stream_stateful_processor.
     """
     src = _purchase_replay_source(spark, sf_dir)
     day_us = 86_400_000_000
     stream = _replay_stream(
         spark, _PURCHASE_SCHEMA, src, PY_STATE_PARTITIONS
     ).withColumn("day", F.expr(f"ts_us div {day_us}"))
-    try:
-        import google.protobuf  # noqa: F401
+    def _first_seen_group(
+        key: tuple[Any, ...],
+        batches: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        first = state.get[0] if state.exists else None
+        days: set[int] = set()
+        for pdf in batches:
+            days.update(int(d) for d in pdf["day"])
+        if days:
+            lo = min(days)
+            first = lo if first is None or lo < first else first
+            state.update((int(first),))
+            yield pd.DataFrame(
+                {
+                    "user_id": [key[0]] * len(days),
+                    "day": sorted(days),
+                    "is_new": [d == first for d in sorted(days)],
+                }
+            )
 
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    if has_protobuf:
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-
-        class _FirstSeen(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._first = handle.getValueState("first_day", "d BIGINT")
-
-            def handleInputRows(self, key, rows, timer_values):
-                cur = self._first.get()
-                first = cur[0] if cur else None
-                days: set[int] = set()
-                for pdf in rows:
-                    days.update(int(d) for d in pdf["day"])
-                if days:
-                    lo = min(days)
-                    first = lo if first is None or lo < first else first
-                    self._first.update((int(first),))
-                    yield pd.DataFrame(
-                        {
-                            "user_id": [key[0]] * len(days),
-                            "day": sorted(days),
-                            "is_new": [d == first for d in sorted(days)],
-                        }
-                    )
-
-            def close(self) -> None:
-                pass
-
-        result = stream.groupBy("user_id").transformWithStateInPandas(
-            _FirstSeen(), _NVR_OUT, "Update", "None"
-        )
-    else:
-
-        def _first_seen_group(
-            key: tuple[Any, ...],
-            batches: Iterator[pd.DataFrame],
-            state: GroupState,
-        ) -> Iterator[pd.DataFrame]:
-            first = state.get[0] if state.exists else None
-            days: set[int] = set()
-            for pdf in batches:
-                days.update(int(d) for d in pdf["day"])
-            if days:
-                lo = min(days)
-                first = lo if first is None or lo < first else first
-                state.update((int(first),))
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]] * len(days),
-                        "day": sorted(days),
-                        "is_new": [d == first for d in sorted(days)],
-                    }
-                )
-
-        result = stream.groupBy("user_id").applyInPandasWithState(
-            _first_seen_group,
-            outputStructType=_NVR_OUT,
-            stateStructType="d BIGINT",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    result = stream.groupBy("user_id").applyInPandasWithState(
+        _first_seen_group,
+        outputStructType=_NVR_OUT,
+        stateStructType="d BIGINT",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
     emitted = _run_to_table(result, "stream_new_vs_returning_sink", "update")
     emitted = emitted.distinct()
     return (

@@ -296,6 +296,36 @@ def test_parse_skips_archive_missing_after_download(spark, tmp_path):
     assert counts["parse"] == 0
 
 
+def test_failed_refetch_leaves_no_stale_archive(spark, tmp_path):
+    """A re-download into the same work dir whose fetch now fails marks
+    the volume ``error`` and removes the archive an earlier run left,
+    so parse reads nothing for it; a later successful fetch removes the
+    error file in turn. No uuid keeps both files."""
+    work, data, empty = (str(tmp_path / n) for n in ("w", "d", "e"))
+    os.makedirs(data)
+    os.makedirs(empty)
+    shutil.copy(fixture_archive(), data)
+    manifest = os.path.join(FIXTURES, "manifest.html")
+    hit = _write_config(tmp_path, tableUrl=manifest, dataUrl=data)
+    assert run(hit, work, ["download", "parse"], spark=spark)["parse"] > 0
+
+    def files_by_uuid():
+        by_uuid = {}
+        for n in os.listdir(os.path.join(work, "download", "data")):
+            by_uuid.setdefault(n.split(".")[0], set()).add(n.split(".", 1)[1])
+        return by_uuid
+
+    miss = _write_config(tmp_path, tableUrl=manifest, dataUrl=empty)
+    assert run(miss, work, ["download", "parse"], spark=spark)["parse"] == 0
+    status = _read_ndjson_dir(os.path.join(work, "download", "status.ndjson"))
+    assert {r["status"] for r in status} == {"error"}
+    assert set(map(frozenset, files_by_uuid().values())) == {frozenset({"xml"})}
+
+    hit = _write_config(tmp_path, tableUrl=manifest, dataUrl=data)
+    assert run(hit, work, ["download", "parse"], spark=spark)["parse"] > 0
+    assert files_by_uuid()[_UUID] == {"tar.gz"}
+
+
 def test_year_window_excludes_all(spark, tmp_path, cli_work):
     """A minYear above every directory leaves parse empty — the
     reference's directory windowing (:191-195). Parse still writes an

@@ -101,64 +101,3 @@ def test_skewed_continuation_stitching():
     assert len(stitched) == 40  # continuation folded, not emitted
     folded = [t for *_, t, _c in stitched if "continued tail" in t]
     assert len(folded) == 1 and folded[0].startswith("left entry 19")
-
-
-def test_infer_column_count_variants():
-    """k-inference (column_count=None mode): clean 2-col, skewed
-    2-col, gutter-junk 2-col, a 3-col layout, and a 1-col page must
-    all infer their true k from x0 cluster populations."""
-    from etl_city_directories_spark.sources.hocr import infer_column_count
-
-    assert infer_column_count(_two_col_page()) == 2
-    junk = _two_col_page(gutter_junk=True)
-    assert infer_column_count(junk) == 2  # junk clusters under the floor
-    skewed = _two_col_page(skew=0.06)
-    xs = deskew_x0(skewed, estimate_skew(skewed))
-    assert infer_column_count(skewed, xs) == 2
-    three = [_line(x, 100 + i * 100, f"e{i}") for i in range(15)
-             for x in (100, 900, 1700)]
-    assert infer_column_count(sorted(three, key=lambda l: (l[1], l[0]))) == 3
-    one = [_line(100, 100 + i * 100, f"solo {i}") for i in range(12)]
-    assert infer_column_count(one) == 1
-    assert infer_column_count([]) == 1
-
-
-def test_infer_k_sparse_trailing_column():
-    """A genuinely separate second column holding under half the lead
-    column's lines (a section-end page) must still infer k=2: the
-    half-of-largest bar is distance-gated (r9 advice) — far clusters
-    face the lower COLUMN_FAR_SHARE_OF_LARGEST bar instead."""
-    from etl_city_directories_spark.sources.hocr import infer_column_count
-
-    lines = [_line(100, 100 + i * 100, f"left {i}") for i in range(20)]
-    lines += [_line(1400, 100 + i * 100, f"right {i}") for i in range(8)]
-    assert infer_column_count(sorted(lines, key=lambda l: (l[1], l[0]))) == 2
-
-
-def test_infer_k_near_column_shadow_still_dies_on_half_bar():
-    """A dense bleed cluster hugging the lead column (past the greedy
-    tolerance but inside COLUMN_FAR_GAP_PX) keeps facing the FULL
-    half-of-largest bar: 8 shadow lines next to a 20-line column must
-    not become a second column, even though 8 lines WOULD survive as a
-    far cluster (see test_infer_k_sparse_trailing_column)."""
-    from etl_city_directories_spark.sources.hocr import infer_column_count
-
-    lines = [_line(100, 100 + i * 100, f"left {i}") for i in range(20)]
-    lines += [_line(160, 150 + i * 100, "~~") for i in range(8)]
-    assert infer_column_count(sorted(lines, key=lambda l: (l[1], l[0]))) == 1
-
-
-def test_inferred_k_matches_declared_k_end_to_end(spark):
-    """The r8 verdict's done-bar: parsing the fixture archive with
-    column_count=None must produce output identical to the
-    declared-k=2 parse (the archive's pages are 2-column)."""
-    from etl_city_directories_spark.operators.ingest import fixture_archive
-    from etl_city_directories_spark.sources.hocr import (
-        parse_hocr_lines,
-        read_hocr_pages,
-    )
-
-    pages = read_hocr_pages(spark, fixture_archive())
-    declared = parse_hocr_lines(pages, column_count=2).orderBy("line_index")
-    inferred = parse_hocr_lines(pages, column_count=None).orderBy("line_index")
-    assert declared.collect() == inferred.collect()
